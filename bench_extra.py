@@ -85,7 +85,6 @@ def cmd_plans(spark, names: list[str]) -> None:
 
 def cmd_stages(spark) -> None:
     """Per-stage breakdown of the minhash/LSH-family pipeline."""
-    from pyspark.sql import functions as F
     from nreadability_spark.spark import ops as O
     t = {}
 
@@ -96,11 +95,11 @@ def cmd_stages(spark) -> None:
 
     spark.sparkContext.setJobDescription("stage: minhash base (md5 shingles)")
     t0 = time.perf_counter()
-    O._minhash_base(spark, SF_DIR).write.format("noop") \
+    O._minhash_base(O._corpus(spark, SF_DIR)).write.format("noop") \
         .mode("overwrite").save()
     t["minhash_base"] = round(time.perf_counter() - t0, 3)
 
-    spark.sparkContext.setJobDescription("stage: signatures (expr fold)")
+    spark.sparkContext.setJobDescription("stage: signatures (fused kernel)")
     t0 = time.perf_counter()
     O.minhash_signatures(spark, SF_DIR).write.format("noop") \
         .mode("overwrite").save()
@@ -114,13 +113,7 @@ def cmd_stages(spark) -> None:
 
     spark.sparkContext.setJobDescription("stage: cap + self-join + distinct")
     t0 = time.perf_counter()
-    capped = O._cap_buckets(bands)
-    a = capped.selectExpr("doc_id as doc1", "band_id", "band_sig")
-    b = capped.selectExpr("doc_id as doc2", "band_id", "band_sig")
-    pairs = (a.join(b, ["band_id", "band_sig"])
-             .where(F.col("doc1") < F.col("doc2"))
-             .select(F.col("doc1").cast("long"), F.col("doc2").cast("long"))
-             .distinct())
+    pairs = O._distinct_pairs(O._band_pairs(O._cap_buckets(bands)))
     pairs.write.format("noop").mode("overwrite").save()
     t["cap_join_distinct"] = round(time.perf_counter() - t0, 3)
 

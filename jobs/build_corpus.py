@@ -187,7 +187,7 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
         drops if it pairs with any indexed doc or a smaller-id delta doc
         (greedy keep-first — the streaming-ingest analog of the full
         run's connected-component representatives). Survivors' bands are
-        appended via ``ops.minhash_index_append`` so the NEXT increment
+        appended via ``ops.band_index_append`` so the NEXT increment
         sees this one. If the index table does not exist yet it is built
         once from the previous snapshot's corpus (one scan, still no
         re-extraction).
@@ -321,7 +321,7 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
         os.path.join(final_dir, "documents.parquet"))
     summary["final_docs"] = spark.read.parquet(
         os.path.join(final_dir, "documents.parquet")).count()
-    ops.minhash_index_append(
+    ops.band_index_append(
         spark, batch_bands.join(reps, "doc_id", "left_semi"),
         table=index_table)
     summary["index_table"] = index_table

@@ -4,7 +4,7 @@ Layout:
   readability/  pure-Python single-document transcoder (parser, DOM,
                 scoring pipeline, serializer) — runs inside Arrow batches
   spark/        dataset-level operators: scan → prune → salted repartition
-                → mapInPandas extraction → sinks + metrics, plus
+                → mapInArrow extraction → sinks + metrics, plus
                 training-data ops (dedup, similarity, text analysis)
 """
 

@@ -5,7 +5,7 @@ Plan shape (SURVEY.md §2.X):
     scan -> select(url, html)            # column pruning reaches the scan
          -> [left-anti resume join]      # checkpoint/resume
          -> repartition(P, xxhash64(url))  # salted: defuses host clustering
-         -> mapInPandas(extract, SCHEMA) # Arrow batches; the only Python hop
+         -> mapInArrow(extract, SCHEMA)  # Arrow batches; the only Python hop
          -> sink (parquet/Iceberg append) + per-partition metrics rollup
 
 Design notes for 100 TB:
@@ -27,9 +27,8 @@ import sys
 import tempfile
 import time
 import zipfile
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (BooleanType, LongType, StringType,
                                StructField, StructType)
@@ -144,25 +143,6 @@ def transcode_row(url: Optional[str], html: Optional[bytes],
         }
 
 
-def _make_pandas_extractor(out_schema, row_fn, producer=None):
-    """mapInPandas fallback with the same (schema, row_fn, producer)
-    contract as the Arrow extractor."""
-    cols = [f.name for f in out_schema.fields]
-    producer = producer or transcode_row
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sys.setrecursionlimit(40000)  # deep tag-soup nesting
-        for pdf in batches:
-            # columnar assembly (list-of-dicts -> pandas is slower)
-            data: dict[str, list] = {c: [] for c in cols}
-            for u, h in zip(pdf["url"], pdf["html"]):
-                row = row_fn(producer(u, h))
-                for c in cols:
-                    data[c].append(row[c])
-            yield pd.DataFrame(data, columns=cols)
-
-    return gen
-
 # fingerprint output: ship a hash + length instead of the rendered HTML
 # and text blobs — the serde-narrow shape for consumers that only
 # deduplicate / audit (cuts Python->JVM Arrow traffic ~50x per row)
@@ -229,11 +209,6 @@ _extract_batches_arrow_fp = _make_arrow_extractor(FINGERPRINT_SCHEMA,
                                                   _fingerprint_of)
 _extract_batches_arrow_hooked = _make_arrow_extractor(
     OUT_SCHEMA, lambda r: r, producer=_hooked_row)
-_extract_batches = _make_pandas_extractor(OUT_SCHEMA, lambda r: r)
-_extract_batches_fp = _make_pandas_extractor(FINGERPRINT_SCHEMA,
-                                             _fingerprint_of)
-_extract_batches_hooked = _make_pandas_extractor(
-    OUT_SCHEMA, lambda r: r, producer=_hooked_row)
 
 
 def run_extraction(spark: SparkSession, pages: DataFrame,
@@ -263,14 +238,10 @@ def run_extraction(spark: SparkSession, pages: DataFrame,
         # input order; xxhash64(url) spreads them uniformly
         df = df.repartition(num_partitions, F.xxhash64("url"))
     schema = FINGERPRINT_SCHEMA if output == "fingerprint" else OUT_SCHEMA
-    if hasattr(df, "mapInArrow"):
-        fn = {"fingerprint": _extract_batches_arrow_fp,
-              "hooked": _extract_batches_arrow_hooked} \
-            .get(output, _extract_batches_arrow)
-        return df.mapInArrow(fn, schema)
-    fn = {"fingerprint": _extract_batches_fp,
-          "hooked": _extract_batches_hooked}.get(output, _extract_batches)
-    return df.mapInPandas(fn, schema)
+    fn = {"fingerprint": _extract_batches_arrow_fp,
+          "hooked": _extract_batches_arrow_hooked} \
+        .get(output, _extract_batches_arrow)
+    return df.mapInArrow(fn, schema)
 
 
 LINKS_SCHEMA = StructType([

@@ -18,6 +18,8 @@ import os
 import warnings
 from functools import partial as _partial
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -26,8 +28,8 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-_SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES",
-                                       str(1024 * 1024)))
+# below this estimated input size _spread leaves a scan alone
+_SPREAD_MIN_BYTES = 1024 * 1024
 
 
 def _spread(df: DataFrame, waves: int = 1, heavy: bool = False) -> DataFrame:
@@ -55,11 +57,16 @@ def _spread(df: DataFrame, waves: int = 1, heavy: bool = False) -> DataFrame:
 
     The lower bound is input-size-derived, not a constant (guide §2.5:
     partitioning must adapt to scale, not be tuned to one bench size):
-    below ``SPARK_GRAFT_SPREAD_MIN_BYTES`` (default 1 MiB) of estimated
-    input the re-split shuffle costs more than the parallelism it buys
-    and the scan is left alone. Interleaved on/off A/B at sf0.1 (~0.6 MB
-    documents scan): dedup_lines 2.46 vs 1.04 s, dedup_simhash 2.72 vs
-    0.95, ngram_jaccard 4.44 vs 2.01, quality_repetition 1.51 vs 0.57,
+    below ``_SPREAD_MIN_BYTES`` (1 MiB) of estimated input the re-split
+    shuffle costs more than the parallelism it buys and the scan is left
+    alone. The estimate is Catalyst's ``sizeInBytes`` of the optimized
+    plan, which for a parquet scan is the compressed on-disk file size,
+    not the decoded row bytes. The probe goes through the private JVM
+    plan API; if it fails (e.g. no ``_jdf`` under Spark Connect) the
+    scan is spread, the behaviour from before the gate existed.
+    Interleaved on/off A/B at sf0.1 (~0.6 MB documents scan):
+    dedup_lines 2.46 vs 1.04 s, dedup_simhash 2.72 vs 0.95,
+    ngram_jaccard 4.44 vs 2.01, quality_repetition 1.51 vs 0.57,
     lm_bigram_score 2.20 vs 1.02 — spread loses everywhere at that
     size, while the same ops measured spread-positive at sf1.0 (~6 MB
     scan; §3 of OPTIMIZATION_r07.md). ``heavy=True`` bypasses the size
@@ -71,8 +78,11 @@ def _spread(df: DataFrame, waves: int = 1, heavy: bool = False) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     if not heavy:
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
+        try:
+            size = int(df._jdf.queryExecution().optimizedPlan()
+                       .stats().sizeInBytes())
+        except (AttributeError, Py4JError, PySparkException):
+            size = _SPREAD_MIN_BYTES
         if size < _SPREAD_MIN_BYTES:
             return df
     return df.repartition(target * waves)
@@ -551,15 +561,15 @@ QUALITY_SCORE_SQL = f"""
 _SIMHASH_BITS = 60
 
 
-def _simhash_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, th) with th the per-doc int64 token-hash array, computed
-    JVM-side (md5/conv — byte-identical to the oracle's hash). The
-    non-empty guard runs BEFORE the projection as a cheap regex (>=1
-    non-whitespace char <=> >=1 token, same Java \\s class as the
-    split): a `where(size(th) > 0)` AFTER the projection gets pushed
-    down with the whole transform+split substituted into the Filter,
-    re-tokenizing every row a second time."""
-    corpus = _corpus(spark, sf_dir)
+def _simhash_base(corpus: DataFrame) -> DataFrame:
+    """(doc_id, th) with th the per-doc int64 token-hash array of a
+    (doc_id, text) frame, computed JVM-side (md5/conv — byte-identical
+    to the oracle's hash). The non-empty guard runs BEFORE the
+    projection as a cheap regex (>=1 non-whitespace char <=> >=1 token,
+    same Java \\s class as the split): a `where(size(th) > 0)` AFTER the
+    projection gets pushed down with the whole transform+split
+    substituted into the Filter, re-tokenizing every row a second
+    time."""
     return corpus.where(r"text rlike '\\S'").selectExpr(
         "doc_id",
         f"transform({_TOKENS}, t -> {_H60.format(col='t')}) as th")
@@ -567,7 +577,8 @@ def _simhash_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_fold_expr(base: DataFrame) -> DataFrame:
     """Expression-form majority fold (60 interpreted ``aggregate`` lambdas
-    per row) — kept as the A/B reference for the Arrow kernel."""
+    per row) over ``_simhash_base``: the JVM reference the fused kernel
+    is locked against (tests/test_ops.py)."""
     bit_aggs = [
         f"aggregate(th, 0L, (acc, h) -> acc + (case when (h & {1 << b}) != 0"
         f" then 1 else -1 end)) as b{b}"
@@ -579,43 +590,6 @@ def _simhash_fold_expr(base: DataFrame) -> DataFrame:
         sim = term if sim is None else (sim + term)
     return bits.select(F.col("doc_id").cast("long").alias("doc_id"),
                        sim.cast("long").alias("simhash"))
-
-
-def _simhash_fold_arrow(base: DataFrame) -> DataFrame:
-    """Vectorized majority fold over Arrow batches (the
-    ``_assign_cells_arrow`` pattern): per bit b, bit is set iff
-    #\\{h: bit b of h set\\} > len/2 — identical to the expression fold's
-    ``sum(±1) > 0`` on exact int64 hashes, so the output is
-    byte-identical (A/B-locked in tests/test_ops.py). One numpy pass per
-    bit over the flattened hash buffer instead of 60 interpreted lambda
-    folds per row; still a narrow scan->project stage."""
-    import numpy as np
-    import pyarrow as pa
-
-    def fold(batches):
-        for b in batches:
-            ids = b.column("doc_id")
-            th = b.column("th")
-            off = th.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = th.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = vals[off[0]:off[-1]]
-            offsets = off - off[0]
-            lens = np.diff(offsets)
-            n = len(lens)
-            sim = np.zeros(n, dtype=np.int64)
-            if flat.size:
-                # rows are non-empty by the rlike guard; reduceat is only
-                # well-defined for positive-length segments
-                assert lens.min() > 0
-                half2 = lens  # majority: 2*ones > len
-                for bit in range(_SIMHASH_BITS):
-                    ones = np.add.reduceat((flat >> bit) & 1, offsets[:-1])
-                    sim |= ((2 * ones > half2).astype(np.int64) << bit)
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(sim, type=pa.int64())],
-                names=["doc_id", "simhash"])
-
-    return base.mapInArrow(fold, "doc_id bigint, simhash bigint")
 
 
 def _simhash_fused_arrow(corpus: DataFrame) -> DataFrame:
@@ -680,7 +654,7 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5/conv/substring expression stack moved into the kernel too
     (guide §4.2) — the per-task token cache makes the hash cost
     vocabulary-bounded instead of occurrence-bounded;
-    ``_simhash_base``+``_simhash_fold_arrow`` remain the A/B reference
+    ``_simhash_base``+``_simhash_fold_expr`` remain the JVM reference
     path, byte-identical (tests/test_ops.py)."""
     corpus = _corpus(spark, sf_dir)
     base = corpus.where(r"text rlike '\\S'").selectExpr(
@@ -750,33 +724,198 @@ def _cap_buckets_duck(bands_cte: str, keys: str = "band_id, band_sig",
     """
 
 
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded simhash near-dup candidate pairs with hamming distance."""
-    sims = simhash(spark, sf_dir)
-    bands = sims.selectExpr(
+# --- banded LSH index, shared by the simhash and minhash sketches -------------
+#
+# A band frame has one row per (doc, band): doc_id, band_id, band_sig and
+# the sketch's payload — every other column. Minhash bands carry none;
+# simhash bands carry the 60-bit fingerprint, so the hamming verify needs
+# no second lookup. Nothing below knows which sketch built the frame.
+
+_BAND_KEYS = ["band_id", "band_sig"]
+_N_BUCKETS = 16  # bucket count of every persisted band table
+_INC_BATCH_MOD = 10  # doc_id % 10 == 0 is the "newly ingested" batch
+
+
+def _payload(bands: DataFrame) -> list[str]:
+    """The sketch's payload columns: all but doc_id and the join keys."""
+    return [c for c in bands.columns if c not in ("doc_id", *_BAND_KEYS)]
+
+
+def _side(col: str, tag: str) -> str:
+    """Name of a band column on one side of a pair: its first three
+    letters plus the side tag (doc_id -> doc1, simhash -> sim_other)."""
+    return col[:3] + tag
+
+
+def _sided(bands: DataFrame, tag: str) -> DataFrame:
+    """The band frame with doc_id and the payload renamed for one join
+    side, followed by the join keys."""
+    return bands.select(
+        *[F.col(c).alias(_side(c, tag)) for c in ["doc_id", *_payload(bands)]],
+        *_BAND_KEYS)
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Banded self-join: (doc1, doc2, payload1..., payload2...) for each
+    doc1 < doc2 sharing a band bucket, one row per shared band."""
+    pay = _payload(bands)
+    return (_sided(bands, "1").join(_sided(bands, "2"), _BAND_KEYS)
+            .where(F.col("doc1") < F.col("doc2"))
+            .select("doc1", "doc2", *[_side(c, "1") for c in pay],
+                    *[_side(c, "2") for c in pay]))
+
+
+def _drop_bucketed_table(spark: SparkSession, table: str) -> None:
+    """Drop a table INCLUDING an orphaned managed location (a crashed
+    earlier write leaves the dir behind and saveAsTable then refuses
+    with LOCATION_ALREADY_EXISTS)."""
+    spark.sql(f"drop table if exists {table}")
+    try:
+        import shutil
+        wh = spark.conf.get("spark.sql.warehouse.dir",
+                            "spark-warehouse").replace("file:", "")
+        shutil.rmtree(os.path.join(wh, table.split(".")[-1]),
+                      ignore_errors=True)
+    except Exception:
+        pass
+
+
+def _save_bands(bands: DataFrame, table: str, mode: str) -> None:
+    (bands.write.mode(mode)
+     .bucketBy(_N_BUCKETS, *_BAND_KEYS)
+     .sortBy(*_BAND_KEYS)
+     .saveAsTable(table))
+
+
+def _save_counts(bands: DataFrame, table: str, mode: str) -> None:
+    """Per-bucket row counts of ``bands``, in the band layout. Counts are
+    additive rows (consumers sum them), so an append never rewrites
+    history."""
+    (bands.groupBy(*_BAND_KEYS)
+     .agg(F.count("*").cast("long").alias("n"))
+     .write.mode(mode)
+     .bucketBy(_N_BUCKETS, *_BAND_KEYS)
+     .saveAsTable(table))
+
+
+def _write_band_index(spark: SparkSession, bands: DataFrame,
+                      table: str) -> None:
+    """Overwrite the persisted band index + counts table with ``bands``
+    in the bucketed layout every incremental query/append relies on. The
+    index holds UNCAPPED bands: whether a bucket is oversized depends on
+    index+batch together, so the query caps against the summed counts."""
+    _drop_bucketed_table(spark, table)
+    _drop_bucketed_table(spark, f"{table}_counts")
+    # pre-partition on the bucket columns with numPartitions=_N_BUCKETS:
+    # HashPartitioning(cols, n) is the same pmod(murmur3(cols), n) the
+    # bucket spec uses, so every task holds exactly its own bucket and
+    # writes ONE file — without it each upstream partition wrote a file
+    # per bucket it touched (r7: 128 spread partitions x 16 buckets =
+    # 2048 small index files; guide §6 small-files)
+    _save_bands(bands.repartition(_N_BUCKETS, *_BAND_KEYS), table,
+                "overwrite")
+    _save_counts(spark.table(table), f"{table}_counts", "overwrite")
+
+
+def band_index_append(spark: SparkSession, batch_bands: DataFrame,
+                      table: str) -> None:
+    """Fold a processed batch into the persisted band index: append its
+    band rows (the writer must restate the bucket spec — Spark verifies
+    it against the table) and its per-bucket counts as delta rows — the
+    post-dedup step of each ingest cycle, so the NEXT batch sees this
+    one without any corpus re-self-join."""
+    _save_bands(batch_bands, table, "append")
+    _save_counts(batch_bands, f"{table}_counts", "append")
+
+
+def _index_all_but_batch(spark: SparkSession, bands: DataFrame,
+                         table: str) -> DataFrame:
+    """Checkpoint ``bands``, persist the already-ingested documents'
+    rows (doc_id % _INC_BATCH_MOD != 0) as the band index ``table``,
+    and return the batch's rows. Checkpointing first runs the sketch
+    pipeline (tokenize + hash every document) once for both halves."""
+    bands = _cut_lineage(bands)
+    _write_band_index(
+        spark, bands.where(F.col("doc_id") % _INC_BATCH_MOD != 0), table)
+    return bands.where(F.col("doc_id") % _INC_BATCH_MOD == 0)
+
+
+def _index_pairs(spark: SparkSession, batch_bands: DataFrame,
+                 table: str) -> DataFrame:
+    """Candidate pairs touching the batch, against a persisted band
+    index: (doc1, doc2, payload1..., payload2...), one row per shared
+    band. Batch-vs-corpus joins the bucketed band table (ZERO exchange
+    on the index side — only the small batch shuffles to the bucket
+    layout), batch-vs-batch is a tiny self-join. The over-cap bucket
+    list uses summed index counts (bucketed scan, exchange-free
+    aggregation) plus the batch's own counts, so capping matches a
+    from-scratch run over index+batch exactly."""
+    keys = _BAND_KEYS
+    # align the batch with the index's bucket partitioning ONCE
+    # (HashPartitioning(cols, n) == the bucket spec's pmod(murmur3, n)):
+    # every downstream consumer — the count agg, the anti-join, the
+    # batch-vs-index join, and the batch self-join — keys on the same
+    # columns, so none of them shuffles the batch again (r7: the batch
+    # previously re-shuffled per consumer)
+    batch_bands = batch_bands.repartition(_N_BUCKETS, *keys)
+    idx_counts = (spark.table(f"{table}_counts")
+                  .groupBy(*keys).agg(F.sum("n").alias("n_idx")))
+    batch_counts = (batch_bands.groupBy(*keys)
+                    .agg(F.count("*").alias("n_new")))
+    big = (idx_counts.join(batch_counts, keys, "full_outer")
+           .where(F.coalesce(F.col("n_idx"), F.lit(0))
+                  + F.coalesce(F.col("n_new"), F.lit(0)) > _MAX_BUCKET)
+           .select(*keys))
+    # batch-sized intermediate, consumed by three joins below: cut once
+    # so the counts subplan (index scan + full-outer) runs once, not 3x
+    ok_batch = _cut_lineage(
+        batch_bands.join(F.broadcast(big), keys, "left_anti"))
+    # a pair only exists when BOTH sides share the bucket, so dropping
+    # the batch side of an oversized bucket kills its pairs — the index
+    # side needs no second anti-join
+    pay = _payload(ok_batch)
+    new_old = (ok_batch.join(_sided(spark.table(table), "_other"), keys)
+               # guard against self-pairs when a batch is re-checked
+               # after its own bands were appended to the index
+               .where(F.col("doc_id") != F.col("doc_other"))
+               .selectExpr(
+                   "least(doc_id, doc_other) as doc1",
+                   "greatest(doc_id, doc_other) as doc2",
+                   *[f"if(doc_id < doc_other, {c}, {_side(c, '_other')})"
+                     f" as {_side(c, '1')}" for c in pay],
+                   *[f"if(doc_id < doc_other, {_side(c, '_other')}, {c})"
+                     f" as {_side(c, '2')}" for c in pay]))
+    return new_old.unionByName(_band_pairs(ok_batch))
+
+
+def _simhash_bands_of(sims: DataFrame) -> DataFrame:
+    """(doc_id, simhash, band_id, band_sig): 4 bands of 15 bits."""
+    return sims.selectExpr(
         "doc_id", "simhash",
         "explode(array(0, 1, 2, 3)) as band_id"
     ).selectExpr(
         "doc_id", "simhash", "band_id",
         "shiftright(simhash, band_id * 15) & 32767 as band_sig")
+
+
+def _hamming_pairs(pairs: DataFrame) -> DataFrame:
+    """Distinct simhash candidate pairs within _HAMMING_MAX bits."""
+    return (pairs.distinct()
+            .selectExpr("doc1", "doc2",
+                        "cast(bit_count(sim1 ^ sim2) as bigint) as hamming")
+            .where(F.col("hamming") <= _HAMMING_MAX)
+            .select(F.col("doc1").cast("long"), F.col("doc2").cast("long"),
+                    "hamming"))
+
+
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Banded simhash near-dup candidate pairs with hamming distance."""
     # materialize the (small) band table once: its lineage — the full
     # token explode + 60 bit-sum aggs — otherwise recomputes for each of
     # the four consumers (two join sides + the bucket-size agg); Spark's
     # ReuseExchange can't dedup these subplans across the column renames
-    bands = _cut_lineage(bands)
-    bands = _cap_buckets(bands)
-    a = bands.selectExpr("doc_id as doc1", "simhash as sim1",
-                         "band_id", "band_sig")
-    b = bands.selectExpr("doc_id as doc2", "simhash as sim2",
-                         "band_id", "band_sig")
-    pairs = (a.join(b, ["band_id", "band_sig"])
-             .where(F.col("doc1") < F.col("doc2"))
-             .select("doc1", "doc2", "sim1", "sim2").distinct()
-             .selectExpr("doc1", "doc2",
-                         "cast(bit_count(sim1 ^ sim2) as bigint) as hamming")
-             .where(F.col("hamming") <= _HAMMING_MAX))
-    return pairs.select(F.col("doc1").cast("long"),
-                        F.col("doc2").cast("long"), "hamming")
+    bands = _cut_lineage(_simhash_bands_of(simhash(spark, sf_dir)))
+    return _hamming_pairs(_band_pairs(_cap_buckets(bands)))
 
 
 DEDUP_SIMHASH_SQL = f"""
@@ -801,39 +940,16 @@ DEDUP_SIMHASH_SQL = f"""
 
 
 def simhash_bands_build(spark: SparkSession, sf_dir: str,
-                        table: str = "simhash_bands",
-                        n_buckets: int = 16) -> None:
+                        table: str = "simhash_bands") -> None:
     """Materialize the (capped) simhash band table BUCKETED on the join
     key — the co-located-join storage layout: both sides of the banded
     self-join then read pre-bucketed files and the join runs with ZERO
     exchanges (plan-locked in tests/test_plans.py). At 100 TB this is
     how the candidate-pair pass avoids shuffling the band table twice
-    per run; the bucket count scales with corpus size the same way the
-    pre-salted pages partition count does."""
-    sims = simhash(spark, sf_dir)
-    bands = sims.selectExpr(
-        "doc_id", "simhash",
-        "explode(array(0, 1, 2, 3)) as band_id"
-    ).selectExpr(
-        "doc_id", "simhash", "band_id",
-        "shiftright(simhash, band_id * 15) & 32767 as band_sig")
-    bands = _cap_buckets(bands)
-    # drop any previous incarnation INCLUDING an orphaned managed
-    # location (a crashed earlier write leaves the dir behind and
-    # saveAsTable then refuses with LOCATION_ALREADY_EXISTS)
-    spark.sql(f"drop table if exists {table}")
-    try:
-        import shutil
-        wh = spark.conf.get("spark.sql.warehouse.dir",
-                            "spark-warehouse").replace("file:", "")
-        shutil.rmtree(os.path.join(wh, table.split(".")[-1]),
-                      ignore_errors=True)
-    except Exception:
-        pass
-    (bands.write.mode("overwrite")
-     .bucketBy(n_buckets, "band_id", "band_sig")
-     .sortBy("band_id", "band_sig")
-     .saveAsTable(table))
+    per run."""
+    bands = _cap_buckets(_simhash_bands_of(simhash(spark, sf_dir)))
+    _drop_bucketed_table(spark, table)
+    _save_bands(bands, table, "overwrite")
 
 
 def dedup_simhash_bucketed(spark: SparkSession,
@@ -841,134 +957,32 @@ def dedup_simhash_bucketed(spark: SparkSession,
     """The banded near-dup self-join over the bucketed band table built
     by ``simhash_bands_build``: same rows as dedup_simhash, but the join
     reads co-located buckets — no exchange on either side."""
-    bands = spark.table(table)
-    a = bands.selectExpr("doc_id as doc1", "simhash as sim1",
-                         "band_id", "band_sig")
-    b = bands.selectExpr("doc_id as doc2", "simhash as sim2",
-                         "band_id", "band_sig")
-    pairs = (a.join(b, ["band_id", "band_sig"])
-             .where(F.col("doc1") < F.col("doc2"))
-             .select("doc1", "doc2", "sim1", "sim2").distinct()
-             .selectExpr("doc1", "doc2",
-                         "cast(bit_count(sim1 ^ sim2) as bigint) as hamming")
-             .where(F.col("hamming") <= _HAMMING_MAX))
-    return pairs.select(F.col("doc1").cast("long"),
-                        F.col("doc2").cast("long"), "hamming")
-
-
-def _simhash_bands_of(sims: DataFrame) -> DataFrame:
-    return sims.selectExpr(
-        "doc_id", "simhash",
-        "explode(array(0, 1, 2, 3)) as band_id"
-    ).selectExpr(
-        "doc_id", "simhash", "band_id",
-        "shiftright(simhash, band_id * 15) & 32767 as band_sig")
+    return _hamming_pairs(_band_pairs(spark.table(table)))
 
 
 def simhash_index_build(spark: SparkSession, sf_dir: str,
-                        table: str = "simhash_idx",
-                        n_buckets: int = 16,
-                        batch_mod: int = 10) -> None:
-    """Persisted simhash band index for incremental near-dup checking —
-    the same recipe as minhash_index_build (uncapped bucketed bands +
-    an additive per-bucket count table), with the 60-bit fingerprint
-    carried on every band row so the hamming verify needs no second
-    lookup."""
-    sims = simhash(spark, sf_dir).where(F.col("doc_id") % batch_mod != 0)
-    _write_simhash_index(spark, _simhash_bands_of(sims), table,
-                         n_buckets)
-
-
-def _write_simhash_index(spark: SparkSession, bands: DataFrame,
-                         table: str, n_buckets: int) -> None:
-    """Overwrite the persisted simhash band index + counts table with
-    ``bands`` in the bucketed layout the incremental query relies on."""
-    _drop_bucketed_table(spark, table)
-    _drop_bucketed_table(spark, f"{table}_counts")
-    # one file per bucket: see _write_minhash_index
-    (bands.repartition(n_buckets, F.col("band_id"), F.col("band_sig"))
-     .write.mode("overwrite")
-     .bucketBy(n_buckets, "band_id", "band_sig")
-     .sortBy("band_id", "band_sig")
-     .saveAsTable(table))
-    (spark.table(table)
-     .groupBy("band_id", "band_sig")
-     .agg(F.count("*").cast("long").alias("n"))
-     .write.mode("overwrite")
-     .bucketBy(n_buckets, "band_id", "band_sig")
-     .saveAsTable(f"{table}_counts"))
-
-
-def simhash_index_append(spark: SparkSession, batch_bands: DataFrame,
-                         table: str = "simhash_idx",
-                         n_buckets: int = 16) -> None:
-    """Fold a checked batch's simhash bands into the persisted index
-    (bucket spec restated; counts appended as delta rows)."""
-    (batch_bands.select("doc_id", "simhash", "band_id", "band_sig")
-     .write.mode("append")
-     .bucketBy(n_buckets, "band_id", "band_sig")
-     .sortBy("band_id", "band_sig")
-     .saveAsTable(table))
-    (batch_bands.groupBy("band_id", "band_sig")
-     .agg(F.count("*").cast("long").alias("n"))
-     .write.mode("append")
-     .bucketBy(n_buckets, "band_id", "band_sig")
-     .saveAsTable(f"{table}_counts"))
+                        table: str = "simhash_idx") -> None:
+    """Persisted simhash band index for incremental near-dup checking
+    (``_write_band_index``): the bands of every already-ingested
+    document (doc_id % _INC_BATCH_MOD != 0), each row carrying its
+    60-bit fingerprint."""
+    sims = simhash(spark, sf_dir).where(
+        F.col("doc_id") % _INC_BATCH_MOD != 0)
+    _write_band_index(spark, _simhash_bands_of(sims), table)
 
 
 def dedup_simhash_incremental(spark: SparkSession, sf_dir: str,
                               table: str = "simhash_idx") -> DataFrame:
     """Incremental simhash near-dup pairs: the batch (doc_id % 10 == 0)
-    joins the PERSISTED band index — zero exchange on the index side,
-    only the batch shuffles — plus a tiny batch self-join; capping uses
-    summed index+batch counts so rows equal the full dedup_simhash
-    restricted to batch-touching pairs (the oracle pins this). The
-    hamming distance verifies against the fingerprint carried on the
-    matched index rows, so candidate verification costs no extra
-    corpus access.
-
-    The band table is computed ONCE and split corpus/batch on the
-    checkpointed rows: the previous form ran the whole simhash pipeline
-    (tokenize + md5-hash every token + 60-bit fold) twice — once inside
-    simhash_index_build and once for the batch filter (guide §1.2).
-    Rows and the persisted index are unchanged."""
-    bands_all = _cut_lineage(_simhash_bands_of(simhash(spark, sf_dir)))
-    _write_simhash_index(spark,
-                         bands_all.where(F.col("doc_id") % 10 != 0),
-                         table, 16)
-    keys = ["band_id", "band_sig"]
-    batch = bands_all.where(F.col("doc_id") % 10 == 0)
-    idx = spark.table(table)
-    idx_counts = (spark.table(f"{table}_counts")
-                  .groupBy(*keys).agg(F.sum("n").alias("n_idx")))
-    batch_counts = (batch.groupBy(*keys)
-                    .agg(F.count("*").alias("n_new")))
-    big = (idx_counts.join(batch_counts, keys, "full_outer")
-           .where(F.coalesce(F.col("n_idx"), F.lit(0))
-                  + F.coalesce(F.col("n_new"), F.lit(0)) > _MAX_BUCKET)
-           .select(*keys))
-    ok_batch = _cut_lineage(batch.join(F.broadcast(big), keys,
-                                       "left_anti"))
-    new_old = (ok_batch.join(
-        idx.selectExpr("doc_id as doc_other", "simhash as sim_other",
-                       *keys), keys)
-        .where(F.col("doc_id") != F.col("doc_other"))
-        .selectExpr("least(doc_id, doc_other) as doc1",
-                    "greatest(doc_id, doc_other) as doc2",
-                    "if(doc_id < doc_other, simhash, sim_other) as sim1",
-                    "if(doc_id < doc_other, sim_other, simhash) as sim2"))
-    a = ok_batch.selectExpr("doc_id as doc1", "simhash as sim1", *keys)
-    b = ok_batch.selectExpr("doc_id as doc2", "simhash as sim2", *keys)
-    new_new = (a.join(b, keys)
-               .where(F.col("doc1") < F.col("doc2"))
-               .select("doc1", "doc2", "sim1", "sim2"))
-    pairs = (new_old.unionByName(new_new).distinct()
-             .selectExpr("doc1", "doc2",
-                         "cast(bit_count(sim1 ^ sim2) as bigint)"
-                         " as hamming")
-             .where(F.col("hamming") <= _HAMMING_MAX))
-    return pairs.select(F.col("doc1").cast("long"),
-                        F.col("doc2").cast("long"), "hamming")
+    checked against the PERSISTED band index by ``_index_pairs``, the
+    same path as dedup_minhash_incremental; rows equal the full
+    dedup_simhash restricted to batch-touching pairs (the oracle pins
+    this). The hamming distance verifies against the fingerprint
+    carried on the matched index rows, so candidate verification costs
+    no extra corpus access."""
+    batch = _index_all_but_batch(
+        spark, _simhash_bands_of(simhash(spark, sf_dir)), table)
+    return _hamming_pairs(_index_pairs(spark, batch, table))
 
 
 DEDUP_SIMHASH_INCREMENTAL_SQL = f"""
@@ -1015,13 +1029,10 @@ _SHINGLES_DUCK = ("case when len({t}) >= 3 then list_transform(range(1, len({t})
                   "else [] end").format(t=_TOKENS_DUCK)
 
 
-def _minhash_base(spark: SparkSession, sf_dir: str,
-                  demo_dups: bool = True) -> DataFrame:
-    """(doc_id, sha) with sha the JVM-computed shingle-hash array
-    (md5/conv mod — byte-identical to the oracle's hash)."""
-    corpus = (_corpus(spark, sf_dir) if demo_dups
-              else _read(spark, sf_dir, "documents")
-              .select("doc_id", "text"))
+def _minhash_base(corpus: DataFrame) -> DataFrame:
+    """(doc_id, sha) with sha the JVM-computed shingle-hash array of a
+    (doc_id, text) frame (md5/conv mod — byte-identical to the oracle's
+    hash)."""
     # tokens are hoisted into a real column before the shingle lambda:
     # toks[i] inside a higher-order-function lambda would otherwise
     # re-evaluate the whole split/filter chain per element (3x per
@@ -1127,51 +1138,13 @@ def _minhash_fused_arrow(corpus: DataFrame) -> DataFrame:
 
 def _minhash_fold_expr(base: DataFrame) -> DataFrame:
     """Expression-form fold (16 interpreted array_min(transform) per
-    row) — kept as the A/B reference for the Arrow kernel."""
+    row) over ``_minhash_base``: the JVM reference the fused kernel is
+    locked against (tests/test_ops.py)."""
     mins = [
         f"cast(array_min(transform(sha, x -> (x * {2 * i + 3} + {7 * i + 1})"
         f" % {_MINHASH_MOD})) as bigint) as m{i}"
         for i in range(_N_MINHASH)]
     return base.selectExpr("doc_id", *mins)
-
-
-def _minhash_fold_arrow(base: DataFrame) -> DataFrame:
-    """Vectorized minhash fold over Arrow batches: one
-    ``np.minimum.reduceat`` per permutation over the flattened
-    JVM-computed shingle-hash buffer instead of 16 interpreted lambda
-    transforms per row. Exact int64 (sha < 1000003, multiplier <= 35:
-    products stay far below 2^63), so output is byte-identical to the
-    expression fold (A/B-locked)."""
-    import numpy as np
-    import pyarrow as pa
-    coeffs = [(2 * i + 3, 7 * i + 1) for i in range(_N_MINHASH)]
-    names = ["doc_id"] + [f"m{i}" for i in range(_N_MINHASH)]
-    schema = "doc_id bigint, " + ", ".join(
-        f"m{i} bigint" for i in range(_N_MINHASH))
-
-    def fold(batches):
-        for b in batches:
-            ids = b.column("doc_id")
-            sha = b.column("sha")
-            off = sha.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = sha.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = vals[off[0]:off[-1]]
-            offsets = off - off[0]
-            lens = np.diff(offsets)
-            cols = []
-            if flat.size:
-                # rows have >=1 shingle by the rlike guard
-                assert lens.min() > 0
-                for a, c in coeffs:
-                    perm = (flat * a + c) % _MINHASH_MOD
-                    cols.append(np.minimum.reduceat(perm, offsets[:-1]))
-            else:
-                cols = [np.zeros(0, dtype=np.int64)] * _N_MINHASH
-            yield pa.RecordBatch.from_arrays(
-                [ids] + [pa.array(c, type=pa.int64()) for c in cols],
-                names=names)
-
-    return base.mapInArrow(fold, schema)
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str,
@@ -1190,8 +1163,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str,
     the fused kernel (tokenize + cached hashlib.md5 + numpy reduceat
     fold, guide §4.2) measures ~16k docs/s/core vs ~1.8k effective.
     ``_minhash_base``+``_minhash_fold_expr`` remain the expression-form
-    A/B reference (byte-identical, locked in tests/test_ops.py), and
-    ``_minhash_fold_arrow`` the fold-only variant.
+    reference (byte-identical, locked in tests/test_ops.py).
 
     ``demo_dups=False`` reads ``documents`` as-is instead of the
     dup-injected demo corpus — the shape production callers
@@ -1238,6 +1210,13 @@ def _minhash_bands(sig: DataFrame) -> DataFrame:
     ).selectExpr("doc_id", "band.band_id", "band.band_sig")
 
 
+def _distinct_pairs(pairs: DataFrame) -> DataFrame:
+    """Distinct (doc1, doc2) minhash candidate pairs."""
+    return (pairs.select(F.col("doc1").cast("long"),
+                         F.col("doc2").cast("long"))
+            .distinct())
+
+
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
                       demo_dups: bool = True) -> DataFrame:
     """LSH candidate pairs: 4 bands x 4 rows over the minhash signature."""
@@ -1245,18 +1224,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
     # one row per (doc, band): materialize once instead of recomputing
     # the shingle explode + 16 min-aggs per consumer (see dedup_simhash)
     bands = _cut_lineage(_minhash_bands(sig))
-    bands = _cap_buckets(bands)
-    a = bands.selectExpr("doc_id as doc1", "band_id", "band_sig")
-    b = bands.selectExpr("doc_id as doc2", "band_id", "band_sig")
-    return (a.join(b, ["band_id", "band_sig"])
-            .where(F.col("doc1") < F.col("doc2"))
-            .select(F.col("doc1").cast("long"), F.col("doc2").cast("long"))
-            .distinct())
+    return _distinct_pairs(_band_pairs(_cap_buckets(bands)))
 
 
 def minhash_bands_build(spark: SparkSession, sf_dir: str,
-                        table: str = "minhash_bands",
-                        n_buckets: int = 16) -> None:
+                        table: str = "minhash_bands") -> None:
     """Materialize the (capped) minhash band table BUCKETED on the join
     key — the same co-located-join storage layout simhash_bands_build
     proves out: both sides of the banded self-join read pre-bucketed
@@ -1265,19 +1237,8 @@ def minhash_bands_build(spark: SparkSession, sf_dir: str,
     clustering consumer joins against the layout for free."""
     bands = _cap_buckets(_minhash_bands(
         minhash_signatures(spark, sf_dir)))
-    spark.sql(f"drop table if exists {table}")
-    try:
-        import shutil
-        wh = spark.conf.get("spark.sql.warehouse.dir",
-                            "spark-warehouse").replace("file:", "")
-        shutil.rmtree(os.path.join(wh, table.split(".")[-1]),
-                      ignore_errors=True)
-    except Exception:
-        pass
-    (bands.write.mode("overwrite")
-     .bucketBy(n_buckets, "band_id", "band_sig")
-     .sortBy("band_id", "band_sig")
-     .saveAsTable(table))
+    _drop_bucketed_table(spark, table)
+    _save_bands(bands, table, "overwrite")
 
 
 def dedup_minhash_bucketed(spark: SparkSession,
@@ -1286,76 +1247,22 @@ def dedup_minhash_bucketed(spark: SparkSession,
     built by ``minhash_bands_build``: same rows as dedup_minhash_lsh,
     but the join reads co-located buckets — no exchange on either
     side."""
-    bands = spark.table(table)
-    a = bands.selectExpr("doc_id as doc1", "band_id", "band_sig")
-    b = bands.selectExpr("doc_id as doc2", "band_id", "band_sig")
-    return (a.join(b, ["band_id", "band_sig"])
-            .where(F.col("doc1") < F.col("doc2"))
-            .select(F.col("doc1").cast("long"), F.col("doc2").cast("long"))
-            .distinct())
-
-
-_INC_BATCH_MOD = 10  # doc_id % 10 == 0 is the "newly ingested" batch
-
-
-def _drop_bucketed_table(spark: SparkSession, table: str) -> None:
-    spark.sql(f"drop table if exists {table}")
-    try:
-        import shutil
-        wh = spark.conf.get("spark.sql.warehouse.dir",
-                            "spark-warehouse").replace("file:", "")
-        shutil.rmtree(os.path.join(wh, table.split(".")[-1]),
-                      ignore_errors=True)
-    except Exception:
-        pass
+    return _distinct_pairs(_band_pairs(spark.table(table)))
 
 
 def minhash_index_build(spark: SparkSession, sf_dir: str,
-                        table: str = "minhash_idx",
-                        n_buckets: int = 16,
-                        batch_mod: int = _INC_BATCH_MOD) -> None:
-    """Persist the corpus state INCREMENTAL dedup joins against: the
-    UNCAPPED band rows of every already-ingested document (doc_id %
-    batch_mod != 0 stands in for "the existing corpus"), bucketed on the
-    band join key, plus a per-bucket count table in the same layout.
-    Counts are additive rows (consumers sum them), so a batch append
-    never rewrites history. The cap is deliberately NOT baked in at
-    build time: whether a bucket is oversized depends on index+batch
-    together, so the query applies it against the summed counts."""
+                        table: str = "minhash_idx") -> None:
+    """Persist the corpus state INCREMENTAL dedup joins against
+    (``_write_band_index``): the band rows of every already-ingested
+    document (doc_id % _INC_BATCH_MOD != 0 stands in for "the existing
+    corpus")."""
     bands = (_minhash_bands(minhash_signatures(spark, sf_dir))
-             .where(F.col("doc_id") % batch_mod != 0))
-    _write_minhash_index(spark, bands, table, n_buckets)
-
-
-def _write_minhash_index(spark: SparkSession, bands: DataFrame,
-                         table: str, n_buckets: int) -> None:
-    """Overwrite the persisted band index + counts table with ``bands``
-    in the bucketed layout every incremental query/append relies on."""
-    _drop_bucketed_table(spark, table)
-    _drop_bucketed_table(spark, f"{table}_counts")
-    # pre-partition on the bucket columns with numPartitions=n_buckets:
-    # HashPartitioning(cols, n) is the same pmod(murmur3(cols), n) the
-    # bucket spec uses, so every task holds exactly its own bucket and
-    # writes ONE file — without it each upstream partition wrote a file
-    # per bucket it touched (r7: 128 spread partitions x 16 buckets =
-    # 2048 small index files; guide §6 small-files)
-    (bands.select("doc_id", "band_id", "band_sig")
-     .repartition(n_buckets, F.col("band_id"), F.col("band_sig"))
-     .write.mode("overwrite")
-     .bucketBy(n_buckets, "band_id", "band_sig")
-     .sortBy("band_id", "band_sig")
-     .saveAsTable(table))
-    counts = (spark.table(table)
-              .groupBy("band_id", "band_sig")
-              .agg(F.count("*").cast("long").alias("n")))
-    (counts.write.mode("overwrite")
-     .bucketBy(n_buckets, "band_id", "band_sig")
-     .saveAsTable(f"{table}_counts"))
+             .where(F.col("doc_id") % _INC_BATCH_MOD != 0))
+    _write_band_index(spark, bands, table)
 
 
 def minhash_index_build_full(spark: SparkSession, corpus_dir: str,
-                             table: str = "minhash_idx",
-                             n_buckets: int = 16) -> None:
+                             table: str = "minhash_idx") -> None:
     """Persist the band index of an ENTIRE corpus directory (no demo
     batch split, no injected dups) — the job-level shape: a snapshot
     build indexes everything it ingested, and later incremental runs
@@ -1364,79 +1271,14 @@ def minhash_index_build_full(spark: SparkSession, corpus_dir: str,
     rebuild (tombstone-less append lifecycle; compaction = rerun this)."""
     bands = _minhash_bands(
         minhash_signatures(spark, corpus_dir, demo_dups=False))
-    _write_minhash_index(spark, bands, table, n_buckets)
-
-
-def minhash_index_append(spark: SparkSession, batch_bands: DataFrame,
-                         table: str = "minhash_idx",
-                         n_buckets: int = 16) -> None:
-    """Fold a processed batch into the persisted index: append its band
-    rows (the writer must restate the bucket spec — Spark verifies it
-    against the table) and its per-bucket counts as delta rows — the
-    post-dedup step of each ingest cycle, so the NEXT batch sees this
-    one without any corpus re-self-join."""
-    (batch_bands.select("doc_id", "band_id", "band_sig")
-     .write.mode("append")
-     .bucketBy(n_buckets, "band_id", "band_sig")
-     .sortBy("band_id", "band_sig")
-     .saveAsTable(table))
-    (batch_bands.groupBy("band_id", "band_sig")
-     .agg(F.count("*").cast("long").alias("n"))
-     .write.mode("append")
-     .bucketBy(n_buckets, "band_id", "band_sig")
-     .saveAsTable(f"{table}_counts"))
+    _write_band_index(spark, bands, table)
 
 
 def _incremental_pairs(spark: SparkSession, batch_bands: DataFrame,
-                       table: str = "minhash_idx",
-                       n_buckets: int = 16) -> DataFrame:
-    """Candidate pairs touching the batch, against a persisted index:
-    batch-vs-corpus joins the bucketed band table (ZERO exchange on the
-    index side — only the small batch shuffles to the bucket layout),
-    batch-vs-batch is a tiny self-join. The over-cap bucket list uses
-    summed index counts (bucketed scan, exchange-free aggregation) plus
-    the batch's own counts, so capping matches a from-scratch run over
-    index+batch exactly."""
-    keys = ["band_id", "band_sig"]
-    # align the batch with the index's bucket partitioning ONCE
-    # (HashPartitioning(cols, n) == the bucket spec's pmod(murmur3, n)):
-    # every downstream consumer — the count agg, the anti-join, the
-    # batch-vs-index join, and the batch self-join — keys on the same
-    # columns, so none of them shuffles the batch again (r7: the batch
-    # previously re-shuffled per consumer)
-    batch_bands = batch_bands.repartition(
-        n_buckets, F.col("band_id"), F.col("band_sig"))
-    idx = spark.table(table)
-    idx_counts = (spark.table(f"{table}_counts")
-                  .groupBy(*keys).agg(F.sum("n").alias("n_idx")))
-    batch_counts = (batch_bands.groupBy(*keys)
-                    .agg(F.count("*").alias("n_new")))
-    big = (idx_counts.join(batch_counts, keys, "full_outer")
-           .where(F.coalesce(F.col("n_idx"), F.lit(0))
-                  + F.coalesce(F.col("n_new"), F.lit(0)) > _MAX_BUCKET)
-           .select(*keys))
-    # batch-sized intermediate, consumed by three joins below: cut once
-    # so the counts subplan (index scan + full-outer) runs once, not 3x
-    ok_batch = _cut_lineage(
-        batch_bands.join(F.broadcast(big), keys, "left_anti"))
-    # a pair only exists when BOTH sides share the bucket, so dropping
-    # the batch side of an oversized bucket kills its pairs — the index
-    # side needs no second anti-join
-    new_old = (ok_batch.join(idx.withColumnRenamed("doc_id", "doc_other"),
-                             keys)
-               # guard against self-pairs when a batch is re-checked
-               # after its own bands were appended to the index
-               .where(F.col("doc_id") != F.col("doc_other"))
-               .select(F.least("doc_id", "doc_other").alias("doc1"),
-                       F.greatest("doc_id", "doc_other").alias("doc2")))
-    a = ok_batch.selectExpr("doc_id as doc1", "band_id", "band_sig")
-    b = ok_batch.selectExpr("doc_id as doc2", "band_id", "band_sig")
-    new_new = (a.join(b, keys)
-               .where(F.col("doc1") < F.col("doc2"))
-               .select("doc1", "doc2"))
-    return (new_old.unionByName(new_new)
-            .select(F.col("doc1").cast("long"), F.col("doc2").cast("long"))
-            .distinct())
+                       table: str = "minhash_idx") -> DataFrame:
+    """Distinct minhash candidate pairs touching the batch, against a
+    persisted band index (``_index_pairs``)."""
+    return _distinct_pairs(_index_pairs(spark, batch_bands, table))
 
 
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str,
@@ -1449,22 +1291,11 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str,
 
     The driver entry rebuilds the index each call so the query is
     idempotent; production calls minhash_index_build once, then
-    _incremental_pairs + minhash_index_append per batch (the append
-    cycle is pytest-locked).
-
-    The band table is computed ONCE and split corpus/batch on the
-    checkpointed rows: the previous form ran the whole signature
-    pipeline (tokenize + shingle + md5-hash every document) twice —
-    once inside minhash_index_build and once for the batch filter
-    (guide §1.2: don't compute things twice). Rows and the persisted
-    index are unchanged."""
-    bands = _cut_lineage(_minhash_bands(minhash_signatures(spark,
-                                                           sf_dir)))
-    _write_minhash_index(
-        spark, bands.where(F.col("doc_id") % _INC_BATCH_MOD != 0),
-        table, 16)
-    batch_bands = bands.where(F.col("doc_id") % _INC_BATCH_MOD == 0)
-    return _incremental_pairs(spark, batch_bands, table=table)
+    _incremental_pairs + band_index_append per batch (the append
+    cycle is pytest-locked)."""
+    batch = _index_all_but_batch(
+        spark, _minhash_bands(minhash_signatures(spark, sf_dir)), table)
+    return _incremental_pairs(spark, batch, table=table)
 
 
 def _inc_lsh_sql_duck() -> str:

@@ -2,7 +2,7 @@
 
 The reference is batch-per-document; the streaming lift is exactly the
 ``foreachBatch``-free form: readStream over a pages directory -> the same
-mapInPandas extraction -> writeStream sink, plus a watermarked windowed
+mapInArrow extraction -> writeStream sink, plus a watermarked windowed
 metrics stream for late data. Used with Trigger.AvailableNow for
 backfill-style runs and with default micro-batches for continuous ingest.
 """
@@ -11,8 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .job import (OUT_SCHEMA, _extract_batches, _extract_batches_arrow,
-                  ensure_package_shipped)
+from .job import OUT_SCHEMA, _extract_batches_arrow, ensure_package_shipped
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
              "text string, lang string")
@@ -67,15 +66,12 @@ def read_pages_warc_stream(spark: SparkSession, source_dir: str,
 
 def extract_stream(pages_stream: DataFrame) -> DataFrame:
     """Streaming extraction: same kernel, same output schema, same serde
-    as the batch path (mapInArrow — mapInPandas only as fallback); no
-    shuffle (stateless map), so micro-batch latency is the batch's own
-    compute."""
+    as the batch path (mapInArrow); no shuffle (stateless map), so
+    micro-batch latency is the batch's own compute."""
     spark = pages_stream.sparkSession
     ensure_package_shipped(spark)
-    df = pages_stream.select("url", "html")
-    if hasattr(df, "mapInArrow"):
-        return df.mapInArrow(_extract_batches_arrow, OUT_SCHEMA)
-    return df.mapInPandas(_extract_batches, OUT_SCHEMA)
+    return (pages_stream.select("url", "html")
+            .mapInArrow(_extract_batches_arrow, OUT_SCHEMA))
 
 
 def run_extract_stream(spark: SparkSession, source_dir: str, out_dir: str,

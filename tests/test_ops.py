@@ -164,31 +164,6 @@ def test_dedup_lines_join_modes_agree(spark):
     assert bc == sh
 
 
-def test_simhash_arrow_fold_matches_expression_fold(spark):
-    """The vectorized Arrow majority fold must be byte-identical to the
-    interpreted expression fold it replaced (same JVM-computed hash
-    array in, same 60-bit majority rule)."""
-    from nreadability_spark.spark.ops import (_simhash_base,
-                                              _simhash_fold_arrow,
-                                              _simhash_fold_expr)
-    base = _simhash_base(spark, SF_DIR)
-    arrow = sorted(tuple(r) for r in _simhash_fold_arrow(base).collect())
-    expr = sorted(tuple(r) for r in _simhash_fold_expr(base).collect())
-    assert arrow == expr
-
-
-def test_minhash_arrow_fold_matches_expression_fold(spark):
-    """The vectorized minimum.reduceat fold must be byte-identical to
-    the interpreted array_min fold it replaced."""
-    from nreadability_spark.spark.ops import (_minhash_base,
-                                              _minhash_fold_arrow,
-                                              _minhash_fold_expr)
-    base = _minhash_base(spark, SF_DIR)
-    arrow = sorted(tuple(r) for r in _minhash_fold_arrow(base).collect())
-    expr = sorted(tuple(r) for r in _minhash_fold_expr(base).collect())
-    assert arrow == expr
-
-
 def test_host_pagerank_discriminates_and_conserves(spark):
     """The rank vector must differentiate hosts (a uniform vector means
     the propagation never ran) and stay within the damped-mass bounds
@@ -244,42 +219,52 @@ def test_pagerank_edges_huge_weights_no_int64_overflow(spark):
     assert pr[2] > pr[3] >= _PR_BASE
 
 
-def test_minhash_incremental_append_cycle(spark):
+def _sketch_index(spark, sketch):
+    """(index builder, the corpus band frame, batch-vs-index pair query)
+    of one sketch family."""
+    from nreadability_spark.spark import ops
+    if sketch == "minhash":
+        return (ops.minhash_index_build,
+                ops._minhash_bands(ops.minhash_signatures(spark, SF_DIR)),
+                lambda batch, table: ops._incremental_pairs(
+                    spark, batch, table=table))
+    return (ops.simhash_index_build,
+            ops._simhash_bands_of(ops.simhash(spark, SF_DIR)),
+            lambda batch, table: ops._hamming_pairs(
+                ops._index_pairs(spark, batch, table)))
+
+
+@pytest.mark.parametrize("sketch", ["minhash", "simhash"])
+def test_incremental_append_cycle(spark, sketch):
     """The per-batch ingest cycle: check the batch against the persisted
     index, then append its bands. A later query must see the appended
     batch through the same bucketed layout (no rebuild), yield no
-    self-pairs, and reproduce the original pair set exactly."""
+    self-pairs, and reproduce the original pair set exactly (hamming
+    values included for simhash)."""
     from pyspark.sql import functions as F
-    from nreadability_spark.spark.ops import (_cut_lineage,
-                                              _incremental_pairs,
-                                              _minhash_bands,
-                                              minhash_index_append,
-                                              minhash_index_build,
-                                              minhash_signatures)
-    table = "t_inc_cycle"
+    from nreadability_spark.spark.ops import _cut_lineage, band_index_append
+    build, bands, pairs_of = _sketch_index(spark, sketch)
+    table = f"t_{sketch}_inc_cycle"
     try:
-        minhash_index_build(spark, SF_DIR, table=table)
+        build(spark, SF_DIR, table=table)
         idx_rows = spark.table(table).count()
-        batch = _cut_lineage(
-            _minhash_bands(minhash_signatures(spark, SF_DIR))
-            .where(F.col("doc_id") % 10 == 0))
-        pairs1 = sorted(map(tuple,
-                            _incremental_pairs(spark, batch, table=table)
-                            .collect()))
+        batch = _cut_lineage(bands.where(F.col("doc_id") % 10 == 0))
+        pairs1 = sorted(map(tuple, pairs_of(batch, table).collect()))
         assert pairs1  # demo corpus guarantees batch-touching dups
-        minhash_index_append(spark, batch, table=table)
+        band_index_append(spark, batch, table=table)
         # appended bands are visible and the counts delta sums correctly
         assert spark.table(table).count() == idx_rows + batch.count()
         total_n = spark.table(f"{table}_counts") \
             .agg(F.sum("n").alias("s")).collect()[0]["s"]
         assert total_n == idx_rows + batch.count()
+        # the combined table now holds every document of the corpus
+        assert (spark.table(table).select("doc_id").distinct().count()
+                == bands.select("doc_id").distinct().count())
         # re-checking the same batch now ALSO matches it inside the
         # index: no self-pairs, and the pair set is unchanged (its
         # new-new pairs are found through the index instead)
-        pairs2 = sorted(map(tuple,
-                            _incremental_pairs(spark, batch, table=table)
-                            .collect()))
-        assert all(d1 != d2 for d1, d2 in pairs2)
+        pairs2 = sorted(map(tuple, pairs_of(batch, table).collect()))
+        assert all(p[0] != p[1] for p in pairs2)
         assert pairs2 == pairs1
     finally:
         spark.sql(f"drop table if exists {table}")
@@ -351,57 +336,26 @@ def test_bpe_round_plan_one_pair_exchange(spark):
     assert plan.count("+- Exchange") + plan.count(":- Exchange") == 2
 
 
-def test_simhash_incremental_append_cycle(spark):
-    """build -> check -> append -> recheck for the simhash band index:
-    the appended batch is visible, no self-pairs appear, and the pair
-    set (incl. hamming values) is stable."""
-    from pyspark.sql import functions as F
-    from nreadability_spark.spark.ops import (_cut_lineage,
-                                              _simhash_bands_of,
-                                              simhash,
-                                              simhash_index_append,
-                                              simhash_index_build)
-    table = "t_sim_inc_cycle"
-    try:
-        simhash_index_build(spark, SF_DIR, table=table)
-        idx_rows = spark.table(table).count()
-        batch = _cut_lineage(_simhash_bands_of(
-            simhash(spark, SF_DIR).where(F.col("doc_id") % 10 == 0)))
-        simhash_index_append(spark, batch, table=table)
-        assert spark.table(table).count() == idx_rows + batch.count()
-        total_n = spark.table(f"{table}_counts") \
-            .agg(F.sum("n").alias("s")).collect()[0]["s"]
-        assert total_n == idx_rows + batch.count()
-        # the combined table now equals the full corpus band table:
-        # distinct doc_ids match the full simhash output
-        assert (spark.table(table).select("doc_id").distinct().count()
-                == simhash(spark, SF_DIR).count())
-    finally:
-        spark.sql(f"drop table if exists {table}")
-        spark.sql(f"drop table if exists {table}_counts")
-
-
 def test_fused_sketch_kernels_match_expression_forms(spark):
     """r7 A/B lock: the fused Python kernels (tokenize + cached md5 +
     numpy fold) must be byte-identical to the JVM expression forms they
     replaced, over the corpus AND over tokenizer edge cases (unicode
     whitespace/case, ASCII-only \\s split class, space-only trim)."""
-    from pyspark.sql import functions as F
-    from nreadability_spark.spark.ops import (_minhash_base,
+    from nreadability_spark.spark.ops import (_corpus, _minhash_base,
                                               _minhash_fold_expr,
                                               _minhash_fused_arrow,
                                               _simhash_base,
-                                              _simhash_fold_arrow,
+                                              _simhash_fold_expr,
                                               _simhash_fused_arrow,
                                               minhash_signatures, simhash)
     fused = sorted(tuple(r) for r in
                    minhash_signatures(spark, SF_DIR).collect())
     expr = sorted(tuple(r) for r in _minhash_fold_expr(
-        _minhash_base(spark, SF_DIR)).collect())
+        _minhash_base(_corpus(spark, SF_DIR))).collect())
     assert fused == expr
     fused_s = sorted(tuple(r) for r in simhash(spark, SF_DIR).collect())
-    ref_s = sorted(tuple(r) for r in _simhash_fold_arrow(
-        _simhash_base(spark, SF_DIR)).collect())
+    ref_s = sorted(tuple(r) for r in _simhash_fold_expr(
+        _simhash_base(_corpus(spark, SF_DIR))).collect())
     assert fused_s == ref_s
 
     # tokenizer edge cases: NBSP/line-sep are NOT Java \s; vertical tab
@@ -425,31 +379,13 @@ def test_fused_sketch_kernels_match_expression_forms(spark):
         .selectExpr("cast(doc_id as bigint) as doc_id", "text")
     fused_e = sorted(tuple(r) for r in
                      _minhash_fused_arrow(guarded).collect())
-    base_e = guarded.selectExpr(
-        "doc_id",
-        "filter(split(lower(trim(text)), '\\\\s+'), x -> x != '') as toks"
-    ).selectExpr(
-        "doc_id",
-        "case when size(toks) >= 3 then zip_with(zip_with("
-        "slice(toks, 1, size(toks) - 2), slice(toks, 2, size(toks) - 2),"
-        " (a, b) -> concat(a, ' ', b)), slice(toks, 3, size(toks) - 2),"
-        " (ab, c) -> concat(ab, ' ', c)) else array() end as sh_arr"
-    ).selectExpr(
-        "doc_id",
-        "transform(sh_arr, s -> cast(conv(substring(md5(s), 1, 15), 16,"
-        " 10) as bigint) % 1000003) as sha")
     expr_e = sorted(tuple(r) for r in
-                    _minhash_fold_expr(base_e).collect())
+                    _minhash_fold_expr(_minhash_base(df)).collect())
     assert fused_e == expr_e
     guard_s = df.where(r"text rlike '\\S'").selectExpr(
         "cast(doc_id as bigint) as doc_id", "text")
     fused_se = sorted(tuple(r) for r in
                       _simhash_fused_arrow(guard_s).collect())
-    base_se = guard_s.selectExpr(
-        "doc_id",
-        "transform(filter(split(lower(trim(text)), '\\\\s+'),"
-        " x -> x != ''), t -> cast(conv(substring(md5(t), 1, 15), 16,"
-        " 10) as bigint)) as th")
     ref_se = sorted(tuple(r) for r in
-                    _simhash_fold_arrow(base_se).collect())
+                    _simhash_fold_expr(_simhash_base(df)).collect())
     assert fused_se == ref_se

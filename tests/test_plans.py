@@ -226,19 +226,22 @@ def test_training_mix_uses_semi_joins(spark):
     assert "LeftSemi" in plan
 
 
-def test_bucketed_band_join_has_no_exchange(spark):
+@pytest.mark.parametrize("sketch", ["minhash", "simhash"])
+def test_bucketed_band_join_has_no_exchange(spark, sketch):
     """The bucketed band-table layout must make the banded self-join
     exchange-free (both sides read co-located buckets on the join key),
-    with rows identical to the shuffle-based dedup_simhash."""
-    from nreadability_spark.spark.ops import (dedup_simhash,
-                                              dedup_simhash_bucketed,
-                                              simhash_bands_build)
-    simhash_bands_build(spark, SF_DIR, table="t_simhash_bands_plan")
+    with rows identical to the shuffle-based dedup_minhash_lsh /
+    dedup_simhash."""
+    from nreadability_spark.spark import ops
+    base = (ops.dedup_minhash_lsh if sketch == "minhash"
+            else ops.dedup_simhash)
+    table = f"t_{sketch}_bands_plan"
+    getattr(ops, f"{sketch}_bands_build")(spark, SF_DIR, table=table)
     # at test scale Spark would just broadcast the tiny table; disable
     # that so the plan shows what a 100 TB band table would do
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = dedup_simhash_bucketed(spark, table="t_simhash_bands_plan")
+        df = getattr(ops, f"dedup_{sketch}_bucketed")(spark, table=table)
         plan = plan_of(df)
         assert "SortMergeJoin" in plan
         assert "SelectedBucketsCount" in plan  # bucketed scans feed it
@@ -248,11 +251,10 @@ def test_bucketed_band_join_has_no_exchange(spark):
         assert node_count(plan, "Exchange") == 1
         assert "BroadcastExchange" not in plan
         got = sorted(map(tuple, df.collect()))
-        base = sorted(map(tuple, dedup_simhash(spark, SF_DIR).collect()))
-        assert got == base
+        assert got == sorted(map(tuple, base(spark, SF_DIR).collect()))
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("drop table if exists t_simhash_bands_plan")
+        spark.sql(f"drop table if exists {table}")
 
 
 def test_vocab_build_has_mapside_partial_agg(spark):
@@ -504,51 +506,31 @@ def test_stratified_sample_fixed_is_partial_topk(spark):
                      plan)
 
 
-def test_minhash_bucketed_band_join_has_no_exchange(spark):
-    """Same co-located-layout guarantee for the minhash LSH path: the
-    bucketed band table makes the candidate-pair self-join exchange-free
-    on both sides, with rows identical to dedup_minhash_lsh."""
-    from nreadability_spark.spark.ops import (dedup_minhash_bucketed,
-                                              dedup_minhash_lsh,
-                                              minhash_bands_build)
-    minhash_bands_build(spark, SF_DIR, table="t_minhash_bands_plan")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = dedup_minhash_bucketed(spark, table="t_minhash_bands_plan")
-        plan = plan_of(df)
-        assert "SortMergeJoin" in plan
-        assert "SelectedBucketsCount" in plan
-        assert node_count(plan, "Exchange") == 1  # only the distinct's
-        assert "BroadcastExchange" not in plan
-        got = sorted(map(tuple, df.collect()))
-        base = sorted(map(tuple, dedup_minhash_lsh(spark, SF_DIR)
-                          .collect()))
-        assert got == base
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-        spark.sql("drop table if exists t_minhash_bands_plan")
-
-
-def test_minhash_incremental_index_side_has_no_exchange(spark):
+@pytest.mark.parametrize("sketch", ["minhash", "simhash"])
+def test_incremental_index_side_has_no_exchange(spark, sketch):
     """The incremental-ingest contract: the persisted band index and its
     count table are read through their bucket layout with ZERO exchange
     above either FileScan — only the (small) batch side shuffles. A
     regression here means every batch re-shuffles the corpus index."""
     import re
-    from nreadability_spark.spark.ops import dedup_minhash_incremental
+    from nreadability_spark.spark import ops
+    table = f"t_{sketch}_inc_plan"
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = dedup_minhash_incremental(spark, SF_DIR,
-                                       table="t_minhash_inc_plan")
+        df = getattr(ops, f"dedup_{sketch}_incremental")(spark, SF_DIR,
+                                                          table=table)
         # the indented toString tree (not 'formatted'): scan attributes
         # and tree shape in one text so the walk below can pair them
         plan = df._jdf.queryExecution().executedPlan().toString()
+        n_exchanges = node_count(plan_of(df), "Exchange")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-        spark.sql("drop table if exists t_minhash_inc_plan")
-        spark.sql("drop table if exists t_minhash_inc_plan_counts")
+        spark.sql(f"drop table if exists {table}")
+        spark.sql(f"drop table if exists {table}_counts")
+    # the batch side: the distinct agg and the count joins, nothing more
+    assert n_exchanges <= 4
     scans = [m.start() for m in
-             re.finditer(r"FileScan parquet [^\n]*t_minhash_inc_plan", plan)]
+             re.finditer(rf"FileScan parquet [^\n]*{table}", plan)]
     assert scans, "index table scans missing from the plan"
     assert plan.count("SelectedBucketsCount") == len(scans)
     # no Exchange may sit between an index scan and the operator that
@@ -556,8 +538,7 @@ def test_minhash_incremental_index_side_has_no_exchange(spark):
     # indentation and fail on any Exchange before a Join/Aggregate
     lines = plan.splitlines()
     for ln, line in enumerate(lines):
-        if "FileScan parquet" not in line or "t_minhash_inc_plan" \
-                not in line:
+        if "FileScan parquet" not in line or table not in line:
             continue
         depth = len(line) - len(line.lstrip(" :+-"))
         for k in range(ln - 1, -1, -1):
@@ -587,50 +568,14 @@ def test_corpus_diff_is_single_fullouter_join(spark):
     assert exch and all("text" not in e for e in exch)
 
 
-def test_simhash_incremental_index_side_has_no_exchange(spark):
-    """Same zero-exchange-on-the-index contract as the minhash
-    incremental path, for the simhash band index."""
-    import re
-    from nreadability_spark.spark.ops import dedup_simhash_incremental
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = dedup_simhash_incremental(spark, SF_DIR,
-                                       table="t_simhash_inc_plan")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-        spark.sql("drop table if exists t_simhash_inc_plan")
-        spark.sql("drop table if exists t_simhash_inc_plan_counts")
-    scans = [m.start() for m in
-             re.finditer(r"FileScan parquet [^\n]*t_simhash_inc_plan",
-                         plan)]
-    assert scans
-    assert plan.count("SelectedBucketsCount") == len(scans)
-    lines = plan.splitlines()
-    for ln, line in enumerate(lines):
-        if "FileScan parquet" not in line or "t_simhash_inc_plan" \
-                not in line:
-            continue
-        depth = len(line) - len(line.lstrip(" :+-"))
-        for k in range(ln - 1, -1, -1):
-            up = lines[k]
-            udepth = len(up) - len(up.lstrip(" :+-"))
-            if udepth >= depth:
-                continue
-            assert "Exchange" not in up, (
-                f"Exchange above index scan:\n{up}\n{line}")
-            if "Join" in up or "HashAggregate" in up:
-                break
-            depth = udepth
-
-
 def test_spread_size_gate(spark):
     """_spread is input-size-adaptive (r7): a scan below
-    SPARK_GRAFT_SPREAD_MIN_BYTES is left alone (the re-split shuffle
-    costs more than the parallelism it buys — measured 2-3x slower at
-    sf0.1 for every light consumer), above it the round-robin re-split
-    engages, and heavy=True (per-row work dwarfs any shuffle, e.g. the
-    PDF build kernel) bypasses the gate."""
+    _SPREAD_MIN_BYTES of estimated input is left alone (the re-split
+    shuffle costs more than the parallelism it buys — measured 2-3x
+    slower at sf0.1 for every light consumer), above it the round-robin
+    re-split engages, heavy=True (per-row work dwarfs any shuffle, e.g.
+    the PDF build kernel) bypasses the gate, and a failing size probe
+    falls back to spreading."""
     from nreadability_spark.spark import ops
     docs = ops._read(spark, SF_DIR, "documents").select("doc_id", "text")
     n_scan = docs.rdd.getNumPartitions()
@@ -640,6 +585,23 @@ def test_spread_size_gate(spark):
     assert ops._spread(docs).rdd.getNumPartitions() == n_scan
     # heavy callers bypass the size gate
     assert ops._spread(docs, heavy=True).rdd.getNumPartitions() == target
+
+    # the size probe is a private JVM API: when it raises, _spread
+    # degrades to the pre-gate behaviour instead of failing the query
+    from py4j.protocol import Py4JError
+
+    class NoPlanStats:
+        def __init__(self, jdf):
+            self._jdf = jdf
+
+        def queryExecution(self):
+            raise Py4JError("Method queryExecution([]) does not exist")
+
+        def __getattr__(self, name):
+            return getattr(self._jdf, name)
+
+    no_probe = type(docs)(NoPlanStats(docs._jdf), docs.sparkSession)
+    assert ops._spread(no_probe).rdd.getNumPartitions() == target
     # above the threshold the re-split engages (waves multiply it)
     old = ops._SPREAD_MIN_BYTES
     ops._SPREAD_MIN_BYTES = 0

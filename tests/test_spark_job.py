@@ -167,27 +167,31 @@ def test_failure_rows_are_counted(spark, pages):
     out.unpersist()
 
 
-def test_pandas_fallback_extractors_match_arrow_contract():
-    """The mapInPandas fallback generators must honor the same
-    (schema, row_fn) contract as the Arrow path — incl. fingerprint."""
-    import pandas as pd
+def test_arrow_extractors_match_schema_contract():
+    """The mapInArrow generators must emit their schema's columns in
+    order, and the fingerprint row must hash the full row's content."""
+    import hashlib
+
+    import pyarrow as pa
     from nreadability_spark.spark.job import (FINGERPRINT_SCHEMA,
                                               OUT_SCHEMA,
-                                              _extract_batches,
-                                              _extract_batches_fp)
+                                              _extract_batches_arrow,
+                                              _extract_batches_arrow_fp)
     from nreadability_spark.spark.pages import template_html_py
 
     html = template_html_py(3, "some words to extract, truly. " * 30)
-    batch = pd.DataFrame({"url": ["https://h.example.org/articles/3"],
-                          "html": [html.encode("utf-8")]})
-    full = next(_extract_batches(iter([batch])))
-    fp = next(_extract_batches_fp(iter([batch])))
-    assert list(full.columns) == [f.name for f in OUT_SCHEMA.fields]
-    assert list(fp.columns) == [f.name for f in FINGERPRINT_SCHEMA.fields]
-    import hashlib
-    want = hashlib.md5(full["content"][0].encode("utf-8")).hexdigest()
-    assert fp["content_md5"][0] == want
-    assert fp["content_len"][0] == len(full["content"][0])
+    batch = pa.RecordBatch.from_pydict(
+        {"url": ["https://h.example.org/articles/3"],
+         "html": [html.encode("utf-8")]})
+    full = next(_extract_batches_arrow(iter([batch])))
+    fp = next(_extract_batches_arrow_fp(iter([batch])))
+    assert full.schema.names == [f.name for f in OUT_SCHEMA.fields]
+    assert fp.schema.names == [f.name for f in FINGERPRINT_SCHEMA.fields]
+    content = full.column("content")[0].as_py()
+    assert content
+    want = hashlib.md5(content.encode("utf-8")).hexdigest()
+    assert fp.column("content_md5")[0].as_py() == want
+    assert fp.column("content_len")[0].as_py() == len(content)
 
 
 def test_extract_links_matches_local_kernel(spark, pages):
