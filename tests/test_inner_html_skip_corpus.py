@@ -8,13 +8,15 @@ regex rewrite changed nothing. Its equivalence rests on global tree
 invariants, so a single handcrafted example is not enough evidence: this
 test forces the full re-parse at every call site and asserts the
 transcoder output is byte-identical across the whole HTML fixture corpus
-(all reference SampleInput + SampleWebInput pages) plus a slice of the
-synthetic template pages.
+(all reference SampleInput + SampleWebInput pages, when present), the
+kernel-lock corpus (tests/kernel_corpus.py: golden and tag-soup pages)
+plus a slice of the synthetic template pages.
 """
 
 import glob
 import os
 
+import kernel_corpus
 import pytest
 
 from nreadability_spark.readability import transcode
@@ -41,7 +43,18 @@ def _result_tuple(html: str, url):
             r.next_page_url)
 
 
-@pytest.mark.skipif(not REF_FIXTURES, reason="reference fixtures absent")
+def _fixture_corpus():
+    """(name, url, html) of the reference pages that are present and the
+    kernel-lock corpus, which is always present."""
+    pages = []
+    for path in REF_FIXTURES:
+        with open(path, "rb") as f:
+            html = f.read().decode("utf-8", errors="replace")
+        name = os.path.basename(path)
+        pages.append((name, SAMPLE_URLS.get(name), html))
+    return pages + kernel_corpus.golden_pages() + kernel_corpus.soup_pages()
+
+
 def test_skip_path_equals_forced_reparse_on_fixture_corpus(monkeypatch):
     forced_calls = {"n": 0}
 
@@ -49,28 +62,19 @@ def test_skip_path_equals_forced_reparse_on_fixture_corpus(monkeypatch):
         forced_calls["n"] += 1
         T.set_inner_html(element, new_html)
 
-    results_skip = {}
-    for path in REF_FIXTURES:
-        with open(path, "rb") as f:
-            html = f.read().decode("utf-8", errors="replace")
-        url = SAMPLE_URLS.get(os.path.basename(path))
+    def result(html, url):
         try:
-            results_skip[path] = _result_tuple(html, url)
+            return _result_tuple(html, url)
         except ValueError:
-            results_skip[path] = "ValueError"
+            return "ValueError"
+
+    pages = _fixture_corpus()
+    results_skip = {name: result(html, url) for name, url, html in pages}
 
     monkeypatch.setattr(T, "_set_inner_html_if_changed", forced)
-    for path in REF_FIXTURES:
-        with open(path, "rb") as f:
-            html = f.read().decode("utf-8", errors="replace")
-        url = SAMPLE_URLS.get(os.path.basename(path))
-        try:
-            got = _result_tuple(html, url)
-        except ValueError:
-            got = "ValueError"
-        assert got == results_skip[path], (
-            f"skip path diverges from forced re-parse on "
-            f"{os.path.basename(path)}")
+    for name, url, html in pages:
+        assert result(html, url) == results_skip[name], (
+            f"skip path diverges from forced re-parse on {name}")
     assert forced_calls["n"] > 0  # the patch actually took
 
 

@@ -359,18 +359,22 @@ def test_get_user_style_class():
 def test_div_to_p_probe_matches_serialized_form_on_fixture_corpus():
     """The serialization-free RX_DIV_TO_P probe must agree with the
     serialized form (`RX_DIV_TO_P.search(get_inner_html())`) on every
-    element of every fixture document — the A/B lock for the fast path."""
+    element of every fixture document and of the kernel-lock corpus —
+    the A/B lock for the fast path."""
     import glob
+    import kernel_corpus
     from nreadability_spark.readability.transcoder import (
         RX_DIV_TO_P, _inner_html_has_div_to_p, _traverse_elements)
 
     files = sorted(glob.glob(
         "/root/reference/Carbon.Readability.Tests/SampleInput/"
         "SampleInput_*.html"))
-    assert files, "fixture corpus missing"
+    pages = [(path, open(path, "rb").read().decode("utf-8", errors="replace"))
+             for path in files]
+    pages += [(key, html) for key, _, html in
+              kernel_corpus.golden_pages() + kernel_corpus.soup_pages()]
     checked = 0
-    for path in files:
-        html = open(path, "rb").read().decode("utf-8", errors="replace")
+    for path, html in pages:
         document = build_document(html)
         if document.root is None:
             continue
