@@ -340,14 +340,6 @@ class Element(Node):
         return [e for e in self.elements() if e.tag == t]
 
 
-def _collect_text(el: Element, parts: list[str]) -> None:
-    for ch in el.children:
-        if isinstance(ch, Text):
-            parts.append(ch.value)
-        elif isinstance(ch, Element):
-            _collect_text(ch, parts)
-
-
 class Document:
     """XDocument stand-in: ordered prolog nodes + at most one root element."""
 
@@ -378,13 +370,30 @@ class Document:
             if isinstance(ch, Element):
                 yield from ch.descendant_nodes()
 
+    # tags are lowercase by construction, as in Element's lookups
     def get_elements_by_tag_name(self, tag: str) -> list[Element]:
         t = tag.lower()
-        return [e for e in self.descendants() if e.tag.lower() == t]
+        out: list[Element] = []
+        for ch in self.children:
+            if type(ch) is Element:
+                if ch.tag == t:
+                    out.append(ch)
+                out.extend(ch.get_elements_by_tag_name(t))
+        return out
 
     def get_element_by_id(self, id_: str) -> Optional[Element]:
-        matches = [e for e in self.descendants() if e.attrs.get("id") == id_]
-        return matches[0] if len(matches) == 1 else None
+        """The only element with this id, or None if none or several."""
+        found = None
+        stack = self.children[:]
+        while stack:
+            node = stack.pop()
+            if type(node) is Element:
+                if node.attrs.get("id") == id_:
+                    if found is not None:
+                        return None
+                    found = node
+                stack.extend(node.children)
+        return found
 
     def get_children_by_tag_name(self, tag: str) -> list[Element]:
         t = tag.lower()

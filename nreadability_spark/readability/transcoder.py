@@ -13,11 +13,23 @@ quirks:
 * grandparents get ``score // 2`` (integer division, :995);
 * the fallback rerun re-parses the *original* html with unlikely-stripping
   disabled when extracted text is < 250 chars (:300-313).
+
+Link density, candidate scoring and conditional cleanup read the length
+and comma count of ``get_inner_text(el)`` for many nested elements. They
+read them from integer summaries computed once per element, bottom-up
+(``_summarize``), instead of re-walking each subtree -- a walk per read is
+quadratic on tag soup, where candidates nest in long chains. A summary is
+valid only while the tree is not mutated, so summaries live for one
+read-only phase (``Transcoder._read_only_phase``: candidate scoring, each
+``clean_conditionally`` / ``clean_headers`` call, the empty-paragraph
+sweep) and are dropped at its end; those phases collect their removals
+and apply them after the phase.
 """
 
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 from typing import Callable, Optional
 
 from . import dtd, parser, uri
@@ -378,6 +390,98 @@ def get_user_style_class(prefix: str, enum_str: str) -> str:
     return f"{prefix}-{''.join(out)}".rstrip("-")
 
 
+def _text_summary(s: str, normalize: bool) -> tuple[int, int, int, int]:
+    """(length, commas, lead, trail) of one text node: the length
+    get_inner_text gives it (after strip() and, with ``normalize``, the
+    \\s{2,} -> " " collapse), its comma count, and the leading and
+    trailing whitespace run lengths of the raw string. A whitespace-only
+    string has length 0 and lead == trail == len(s)."""
+    stripped = s.strip()
+    if not stripped:
+        return 0, 0, len(s), len(s)
+    n = len(RX_NORMALIZE_SPACES.sub(" ", stripped)) if normalize \
+        else len(stripped)
+    return n, s.count(","), len(s) - len(s.lstrip()), len(s) - len(s.rstrip())
+
+
+def _summarize(element: Element, memo: dict, normalize: bool) -> tuple:
+    """Inner-text summary ``(element, length, commas, lead, trail, links)``:
+    ``length`` and ``commas`` are those of ``get_inner_text(element)``,
+    ``lead``/``trail`` the whitespace runs around its raw text (length 0
+    means whitespace only; then lead == trail == the raw length), and
+    ``links`` the summed ``get_inner_text`` length of its ``<a>``
+    descendants. The figures of a concatenation combine exactly: the
+    normalized length is len(a) + len(b), plus one if whitespace sits at
+    the junction; the raw one adds the junction's whitespace run instead.
+
+    Fills ``memo`` (id -> summary; the element in the value pins its id)
+    for every element below ``element`` that it lacks, in an iterative
+    post-order walk (nested tables go thousands deep)."""
+    hit = memo.get(id(element))
+    if hit is not None:
+        return hit
+    stack = [element]
+    while stack:
+        el = stack[-1]
+        pending = [ch for ch in el.children
+                   if type(ch) is Element and id(ch) not in memo]
+        if pending:
+            stack.extend(pending)
+            continue
+        stack.pop()
+        n = commas = lead = trail = links = 0
+        for ch in el.children:
+            t = type(ch)
+            if t is Element:
+                _, cn, cc, cl, ct, ck = memo[id(ch)]
+                links += ck + cn if ch.tag == "a" else ck
+            elif t is Text:
+                cn, cc, cl, ct = _text_summary(ch.value, normalize)
+            else:
+                continue
+            commas += cc
+            if not cn:
+                trail += cl
+                if not n:
+                    lead += cl
+            elif not n:
+                n, lead, trail = cn, lead + cl, ct
+            else:
+                gap = trail + cl
+                n += cn + (min(gap, 1) if normalize else gap)
+                trail = ct
+        memo[id(el)] = (el, n, commas, lead, trail, links)
+    return memo[id(element)]
+
+
+def _ancestor_flags(element: Optional[Element],
+                    memo: dict) -> tuple[bool, bool]:
+    """find_next_page_link's scan of a link's ancestors, from ``element``
+    (the link's parent) up: (some class/id matches PAGE or NEXT_LINK, some
+    matches NEGATIVE or NEG_LINK_PARENT but not POSITIVE). Each flag is
+    ``own(el) or flag(parent)``, so ``memo`` (id -> flags, for one call on
+    an unchanging tree) tests each ancestor once, not once per link."""
+    chain = []
+    while element is not None and id(element) not in memo:
+        chain.append(element)
+        element = element.parent
+    flags = memo[id(element)] if element is not None else (False, False)
+    for el in reversed(chain):
+        positive, negative = flags
+        if not (positive and negative):
+            class_and_id = el.get_class() + " " + el.get_id()
+            positive = positive or bool(
+                RX_PAGE.search(class_and_id)
+                or RX_NEXT_LINK.search(class_and_id))
+            negative = negative or bool(
+                (RX_NEGATIVE.search(class_and_id)
+                 or RX_NEG_LINK_PARENT.search(class_and_id))
+                and not RX_POSITIVE.search(class_and_id))
+            flags = (positive, negative)
+        memo[id(el)] = flags
+    return flags
+
+
 class Transcoder:
     """Per-document extraction pipeline. Not thread-safe (score map is
     per-instance, as in the reference)."""
@@ -396,6 +500,8 @@ class Transcoder:
         self._reading_size = reading_size
         # id(node) -> (node, score); the node ref pins identity for the run
         self._scores: dict[int, tuple[Element, float]] = {}
+        # id(node) -> inner-text summary, during a read-only phase only
+        self._summaries: Optional[dict[int, tuple]] = None
         self.image_source_transformer = None
         self.anchor_href_transformer = None
 
@@ -434,8 +540,8 @@ class Transcoder:
                            article_content_element)
 
         # fallback: rerun without unlikely-stripping if content is thin
-        if (not self._dont_strip_unlikelys
-                and len(self.get_inner_text(article_content_element)) < 250):
+        article_text = self.get_inner_text(article_content_element)
+        if not self._dont_strip_unlikelys and len(article_text) < 250:
             try:
                 self._dont_strip_unlikelys = True
                 return self.transcode_to_xml(html_content, url)
@@ -444,7 +550,6 @@ class Transcoder:
 
         extracted = not article_content_element.is_empty
         title = extract_title(document)
-        article_text = self.get_inner_text(article_content_element)
         return document, extracted, title, next_page_url, article_text
 
     # --- next-page detection (ReadabilityTranscoder.cs:328-622) --------------
@@ -479,6 +584,7 @@ class Transcoder:
 
     def find_next_page_link(self, body: Element, url: str) -> Optional[str]:
         possible: dict[str, LinkData] = {}
+        ancestor_flags: dict[int, tuple[bool, bool]] = {}
         article_base_url = self.find_base_url(url)
         base_parsed = uri.try_parse_absolute(article_base_url)
 
@@ -525,21 +631,12 @@ class Transcoder:
             if RX_PREV_LINK.search(link_data):
                 link_obj.score -= 200
 
-            positive_match = negative_match = False
-            parent = link.parent
-            while parent is not None:
-                class_and_id = parent.get_class() + " " + parent.get_id()
-                if not positive_match and (RX_PAGE.search(class_and_id)
-                                           or RX_NEXT_LINK.search(class_and_id)):
-                    positive_match = True
-                    link_obj.score += 25
-                if not negative_match and (
-                        RX_NEGATIVE.search(class_and_id)
-                        or RX_NEG_LINK_PARENT.search(class_and_id)):
-                    if not RX_POSITIVE.search(class_and_id):
-                        link_obj.score -= 25
-                        negative_match = True
-                parent = parent.parent
+            positive_match, negative_match = _ancestor_flags(
+                link.parent, ancestor_flags)
+            if positive_match:
+                link_obj.score += 25
+            if negative_match:
+                link_obj.score -= 25
 
             pos_desc = neg_desc = False
             for desc in link.descendants():
@@ -679,9 +776,12 @@ class Transcoder:
         self.strip_unlikely_candidates(document)
         self.collapse_redundant_paragraph_divs(document)
         hint = _get_article_content_element_hint(url) if url else None
-        candidates = self.find_candidates_for_article_content(document, hint)
-        top = self.determine_top_candidate_element(document, candidates)
-        article = self.create_article_content_element(document, top)
+        # Element.add clones parented nodes, so scoring moves nothing
+        with self._read_only_phase():
+            candidates = self.find_candidates_for_article_content(
+                document, hint)
+            top = self.determine_top_candidate_element(document, candidates)
+            article = self.create_article_content_element(document, top)
         self.prepare_article_content_element(article)
         return article
 
@@ -748,14 +848,14 @@ class Transcoder:
         candidates: dict[int, Element] = {}
         self._scores.clear()
         for para in document.get_elements_by_tag_name("p"):
-            inner_text = self.get_inner_text(para)
-            if len(inner_text) < MIN_PARAGRAPH_LENGTH:
+            _, text_len, commas, _, _, _ = self._summary(para)
+            if text_len < MIN_PARAGRAPH_LENGTH:
                 continue
             parent = para.parent
             grandparent = parent.parent if parent is not None else None
             score = 1
-            score += get_segments_count(inner_text, ",")
-            score += min(len(inner_text) // PARAGRAPH_SEGMENT_LENGTH,
+            score += commas + 1  # comma-separated segments
+            score += min(text_len // PARAGRAPH_SEGMENT_LENGTH,
                          MAX_POINTS_FOR_SEGMENTS_COUNT)
             if parent is not None and parent.tag != "html":
                 candidates.setdefault(id(parent), parent)
@@ -806,16 +906,16 @@ class Transcoder:
             elif self._get_score(sibling) + content_bonus >= sibling_threshold:
                 append = True
             elif name == "p":
-                sib_text = self.get_inner_text(sibling)
-                if len(sib_text) > 0:
-                    if len(sib_text) >= MIN_SIBLING_PARAGRAPH_LENGTH:
+                text_len = self._summary(sibling)[1]
+                if text_len > 0:
+                    if text_len >= MIN_SIBLING_PARAGRAPH_LENGTH:
                         append = (self.get_links_density(sibling)
                                   < MAX_SIBLING_PARAGRAPH_LINKS_DENSITY)
                     else:
                         append = (_is_close_to_zero(
                             self.get_links_density(sibling))
-                            and RX_END_OF_SENTENCE.search(sib_text)
-                            is not None)
+                            and RX_END_OF_SENTENCE.search(
+                                self.get_inner_text(sibling)) is not None)
             if append:
                 if name in ("div", "p"):
                     to_append = sibling
@@ -844,17 +944,19 @@ class Transcoder:
         self.clean_conditionally(article, "ul")
         self.clean_conditionally(article, "div")
 
+        # empty paragraphs; emptiness does not depend on normalization
         to_remove = []
-        for para in article.get_elements_by_tag_name("p"):
-            if len(self.get_inner_text(para, False)) > 0:
-                continue
-            if para.count_elements_by_tag_name("img", limit=1) > 0:
-                continue
-            if para.count_elements_by_tag_name("embed", limit=1) > 0:
-                continue
-            if para.count_elements_by_tag_name("object", limit=1) > 0:
-                continue
-            to_remove.append(para)
+        with self._read_only_phase():
+            for para in article.get_elements_by_tag_name("p"):
+                if self._summary(para)[1] > 0:
+                    continue
+                if para.count_elements_by_tag_name("img", limit=1) > 0:
+                    continue
+                if para.count_elements_by_tag_name("embed", limit=1) > 0:
+                    continue
+                if para.count_elements_by_tag_name("object", limit=1) > 0:
+                    continue
+                to_remove.append(para)
         _remove_elements(to_remove)
 
         inner = article.get_inner_html()
@@ -862,13 +964,25 @@ class Transcoder:
                                    RX_BREAK_BEFORE_P.sub("<p", inner))
 
     def get_links_density(self, element: Element) -> float:
-        text = self.get_inner_text(element)
-        if len(text) == 0:
-            return 0.0
-        links_length = sum(
-            len(self.get_inner_text(a))
-            for a in element.get_elements_by_tag_name("a"))
-        return links_length / len(text)
+        _, text_len, _, _, _, links_len = self._summary(element)
+        return links_len / text_len if text_len else 0.0
+
+    def _summary(self, element: Element) -> tuple:
+        """``_summarize`` through the phase's memo; outside a read-only
+        phase a throwaway one, so nothing outlives a possible mutation."""
+        memo = self._summaries if self._summaries is not None else {}
+        return _summarize(element, memo, not self._dont_normalize_spaces)
+
+    @contextmanager
+    def _read_only_phase(self):
+        """Summaries are valid only while the tree is not mutated: the
+        memo lives for the body of this block, which must not change the
+        document (collect removals, apply them after the block)."""
+        self._summaries = {}
+        try:
+            yield
+        finally:
+            self._summaries = None
 
     def get_class_weight(self, element: Element) -> int:
         if self._dont_weight_classes:
@@ -919,62 +1033,57 @@ class Transcoder:
 
     def clean_conditionally(self, root_element: Element,
                             element_name: str) -> None:
-        to_remove = []
-        for element in root_element.get_elements_by_tag_name(element_name):
-            weight = self.get_class_weight(element)
-            score = self._get_score(element)
-            if weight + score < 0.0:
-                to_remove.append(element)
-                continue
-            if _looks_like_paragraph_div(element):
-                continue
-            text = self.get_inner_text(element)
-            if get_segments_count(text, ",") < MIN_COMMA_SEGMENTS:
-                # one subtree walk counts all five tags (was five walks)
-                ps = imgs = lis = inputs = embeds = 0
-                stack = element.children[::-1]
-                while stack:
-                    node = stack.pop()
-                    if type(node) is Element:
-                        t = node.tag
-                        if t == "p":
-                            ps += 1
-                        elif t == "img":
-                            imgs += 1
-                        elif t == "li":
-                            lis += 1
-                        elif t == "input":
-                            inputs += 1
-                        elif t == "embed":
-                            if not RX_VIDEO.search(
-                                    node.get_attribute("src", "")):
-                                embeds += 1
-                        if node.children:
-                            stack.extend(node.children[::-1])
-                density = self.get_links_density(element)
-                text_len = len(text)
-                tag = element_name.strip().lower()
-                remove = (
-                    imgs > ps
-                    or (lis - LIS_COUNT_THRESHOLD > ps
-                        and tag not in ("ul", "ol"))
-                    or inputs > ps // 3
-                    or (text_len < MIN_INNER_TEXT_LENGTH
-                        and (imgs == 0
-                             or imgs > MAX_IMAGES_IN_SHORT_SEGMENTS_COUNT))
-                    or (weight < CLASS_WEIGHT_THRESHOLD
-                        and density >
-                        MAX_DENSITY_FOR_ELEMENTS_WITH_SMALLER_CLASS_WEIGHT)
-                    or (weight >= CLASS_WEIGHT_THRESHOLD
-                        and density >
-                        MAX_DENSITY_FOR_ELEMENTS_WITH_GREATER_CLASS_WEIGHT)
-                    or (embeds > MAX_EMBEDS_COUNT
-                        or (embeds == MAX_EMBEDS_COUNT
-                            and text_len <
-                            MIN_INNER_TEXT_LENGTH_IN_ELEMENTS_WITH_EMBED)))
-                if remove:
-                    to_remove.append(element)
+        tag = element_name.strip().lower()
+        with self._read_only_phase():
+            to_remove = [
+                element for element
+                in root_element.get_elements_by_tag_name(element_name)
+                if self._is_conditionally_unwanted(element, tag)]
         _remove_elements(to_remove)
+
+    def _is_conditionally_unwanted(self, element: Element, tag: str) -> bool:
+        weight = self.get_class_weight(element)
+        if weight + self._get_score(element) < 0.0:
+            return True
+        if _looks_like_paragraph_div(element):
+            return False
+        _, text_len, commas, _, _, _ = self._summary(element)
+        if commas + 1 >= MIN_COMMA_SEGMENTS:  # comma-separated segments
+            return False
+        # one subtree walk counts all five tags (was five walks)
+        ps = imgs = lis = inputs = embeds = 0
+        stack = element.children[::-1]
+        while stack:
+            node = stack.pop()
+            if type(node) is Element:
+                t = node.tag
+                if t == "p":
+                    ps += 1
+                elif t == "img":
+                    imgs += 1
+                elif t == "li":
+                    lis += 1
+                elif t == "input":
+                    inputs += 1
+                elif t == "embed":
+                    if not RX_VIDEO.search(node.get_attribute("src", "")):
+                        embeds += 1
+                if node.children:
+                    stack.extend(node.children[::-1])
+        density = self.get_links_density(element)
+        return (
+            imgs > ps
+            or (lis - LIS_COUNT_THRESHOLD > ps and tag not in ("ul", "ol"))
+            or inputs > ps // 3
+            or (text_len < MIN_INNER_TEXT_LENGTH
+                and (imgs == 0 or imgs > MAX_IMAGES_IN_SHORT_SEGMENTS_COUNT))
+            or (weight < CLASS_WEIGHT_THRESHOLD
+                and density > MAX_DENSITY_FOR_ELEMENTS_WITH_SMALLER_CLASS_WEIGHT)
+            or (weight >= CLASS_WEIGHT_THRESHOLD
+                and density > MAX_DENSITY_FOR_ELEMENTS_WITH_GREATER_CLASS_WEIGHT)
+            or embeds > MAX_EMBEDS_COUNT
+            or (embeds == MAX_EMBEDS_COUNT
+                and text_len < MIN_INNER_TEXT_LENGTH_IN_ELEMENTS_WITH_EMBED))
 
     def clean_headers(self, element: Element) -> None:
         # one DFS collecting all six header levels instead of six walks;
@@ -991,12 +1100,13 @@ class Transcoder:
                 if node.children:
                     stack.extend(node.children[::-1])
         to_remove = []
-        for level in range(1, 7):
-            for header in by_level[f"h{level}"]:
-                if (self.get_class_weight(header) < 0
-                        or self.get_links_density(header)
-                        > MAX_HEADER_LINKS_DENSITY):
-                    to_remove.append(header)
+        with self._read_only_phase():
+            for level in range(1, 7):
+                for header in by_level[f"h{level}"]:
+                    if (self.get_class_weight(header) < 0
+                            or self.get_links_density(header)
+                            > MAX_HEADER_LINKS_DENSITY):
+                        to_remove.append(header)
         _remove_elements(to_remove)
 
     def clean_styles(self, root_element: Element) -> None:
@@ -1103,10 +1213,6 @@ def get_or_create_body(document: Document) -> Element:
 def _remove_elements(elements) -> None:
     for el in list(elements):
         el.remove()
-
-
-def get_segments_count(s: str, ch: str) -> int:
-    return s.count(ch) + 1
 
 
 def _is_close_to_zero(x: float) -> bool:
