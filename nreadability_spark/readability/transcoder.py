@@ -1050,7 +1050,7 @@ class Transcoder:
         _, text_len, commas, _, _, _ = self._summary(element)
         if commas + 1 >= MIN_COMMA_SEGMENTS:  # comma-separated segments
             return False
-        # one subtree walk counts all five tags (was five walks)
+        # one subtree walk counts all five tags
         ps = imgs = lis = inputs = embeds = 0
         stack = element.children[::-1]
         while stack:
@@ -1077,10 +1077,10 @@ class Transcoder:
             or inputs > ps // 3
             or (text_len < MIN_INNER_TEXT_LENGTH
                 and (imgs == 0 or imgs > MAX_IMAGES_IN_SHORT_SEGMENTS_COUNT))
-            or (weight < CLASS_WEIGHT_THRESHOLD
-                and density > MAX_DENSITY_FOR_ELEMENTS_WITH_SMALLER_CLASS_WEIGHT)
-            or (weight >= CLASS_WEIGHT_THRESHOLD
-                and density > MAX_DENSITY_FOR_ELEMENTS_WITH_GREATER_CLASS_WEIGHT)
+            or (weight < CLASS_WEIGHT_THRESHOLD and density
+                > MAX_DENSITY_FOR_ELEMENTS_WITH_SMALLER_CLASS_WEIGHT)
+            or (weight >= CLASS_WEIGHT_THRESHOLD and density
+                > MAX_DENSITY_FOR_ELEMENTS_WITH_GREATER_CLASS_WEIGHT)
             or embeds > MAX_EMBEDS_COUNT
             or (embeds == MAX_EMBEDS_COUNT
                 and text_len < MIN_INNER_TEXT_LENGTH_IN_ELEMENTS_WITH_EMBED))

@@ -148,7 +148,8 @@ def _block(rng: random.Random) -> str:
         return _para(rng)
     if kind == 3:  # bare text beside blocks, with a <br> run
         brs = "".join(rng.choice(("<br>", "<br/>", "<br />", "<br>&nbsp;",
-                                  "<br>\n ")) for _ in range(rng.randint(2, 7)))
+                                  "<br>\n "))
+                      for _ in range(rng.randint(2, 7)))
         return (f"<div>{_words(rng, rng.randint(5, 30))}{brs}"
                 f"{_words(rng, rng.randint(3, 15))}<p>{_words(rng, 8)}</p>"
                 f"{_words(rng, 4)}</div>")
