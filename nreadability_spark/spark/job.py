@@ -169,11 +169,11 @@ def _fingerprint_of(row: dict) -> dict:
     return out
 
 
-def _make_arrow_extractor(out_schema, row_fn, producer=None):
+def _make_arrow_extractor(out_schema, rows_of):
     """Build a mapInArrow generator: RecordBatch(url, html) in ->
-    RecordBatch(out_schema) out, one kernel call per row."""
+    RecordBatch(out_schema) out; ``rows_of(url, html)`` yields each
+    page's output rows as dicts keyed by column."""
     cols = [f.name for f in out_schema.fields]
-    producer = producer or transcode_row
 
     def gen(batches):
         import pyarrow as pa
@@ -188,9 +188,9 @@ def _make_arrow_extractor(out_schema, row_fn, producer=None):
             htmls = rb.column(1).to_pylist()
             data: dict[str, list] = {c: [] for c in cols}
             for u, h in zip(urls, htmls):
-                row = row_fn(producer(u, h))
-                for c in cols:
-                    data[c].append(row[c])
+                for row in rows_of(u, h):
+                    for c in cols:
+                        data[c].append(row[c])
             yield pa.RecordBatch.from_arrays(
                 [pa.array(data[c], type=arrow_types[c]) for c in cols],
                 schema=schema)
@@ -204,11 +204,26 @@ def _hooked_row(url, html):
                          anchor_transformer=demo_anchor_transformer)
 
 
-_extract_batches_arrow = _make_arrow_extractor(OUT_SCHEMA, lambda r: r)
-_extract_batches_arrow_fp = _make_arrow_extractor(FINGERPRINT_SCHEMA,
-                                                  _fingerprint_of)
+_extract_batches_arrow = _make_arrow_extractor(
+    OUT_SCHEMA, lambda u, h: [transcode_row(u, h)])
+_extract_batches_arrow_fp = _make_arrow_extractor(
+    FINGERPRINT_SCHEMA, lambda u, h: [_fingerprint_of(transcode_row(u, h))])
 _extract_batches_arrow_hooked = _make_arrow_extractor(
-    OUT_SCHEMA, lambda r: r, producer=_hooked_row)
+    OUT_SCHEMA, lambda u, h: [_hooked_row(u, h)])
+
+
+def _salted(spark: SparkSession, df: DataFrame,
+            num_partitions: Optional[int]) -> DataFrame:
+    """The salted exchange ahead of the kernel: ``None`` means 4 waves
+    per core, fine enough that one slow partition (huge documents
+    cluster) can't stretch the stage tail; ``0`` skips the exchange."""
+    if num_partitions is None:
+        num_partitions = spark.sparkContext.defaultParallelism * 4
+    if num_partitions:
+        # salt by full-url hash: pages of one host arrive clustered in
+        # input order; xxhash64(url) spreads them uniformly
+        df = df.repartition(num_partitions, F.xxhash64("url"))
+    return df
 
 
 def run_extraction(spark: SparkSession, pages: DataFrame,
@@ -229,19 +244,11 @@ def run_extraction(spark: SparkSession, pages: DataFrame,
     df = pages.select("url", "html")  # column pruning before any exchange
     if done_urls is not None:
         df = df.join(done_urls.select("url"), "url", "left_anti")
-    if num_partitions is None:
-        # 4 waves per core: fine enough that one slow partition (huge
-        # documents cluster) can't stretch the stage tail
-        num_partitions = spark.sparkContext.defaultParallelism * 4
-    if num_partitions:
-        # salt by full-url hash: pages of one host arrive clustered in
-        # input order; xxhash64(url) spreads them uniformly
-        df = df.repartition(num_partitions, F.xxhash64("url"))
     schema = FINGERPRINT_SCHEMA if output == "fingerprint" else OUT_SCHEMA
     fn = {"fingerprint": _extract_batches_arrow_fp,
           "hooked": _extract_batches_arrow_hooked} \
         .get(output, _extract_batches_arrow)
-    return df.mapInArrow(fn, schema)
+    return _salted(spark, df, num_partitions).mapInArrow(fn, schema)
 
 
 LINKS_SCHEMA = StructType([
@@ -285,27 +292,9 @@ def extract_links_row(url: Optional[str],
     return sorted(counts.items())
 
 
-def _links_batches_arrow(batches):
-    """mapInArrow generator: RecordBatch(url, html) -> exploded
-    RecordBatch(url, link_url, n) — one output row per distinct resolved
-    link per page."""
-    import pyarrow as pa
-    sys.setrecursionlimit(40000)
-    schema = pa.schema([("url", pa.string()), ("link_url", pa.string()),
-                        ("n", pa.int64())])
-    for rb in batches:
-        urls = rb.column(0).to_pylist()
-        htmls = rb.column(1).to_pylist()
-        out: dict[str, list] = {"url": [], "link_url": [], "n": []}
-        for u, h in zip(urls, htmls):
-            for target, n in extract_links_row(u, h):
-                out["url"].append(u)
-                out["link_url"].append(target)
-                out["n"].append(n)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(out["url"], pa.string()),
-             pa.array(out["link_url"], pa.string()),
-             pa.array(out["n"], pa.int64())], schema=schema)
+_links_batches_arrow = _make_arrow_extractor(
+    LINKS_SCHEMA, lambda u, h: ({"url": u, "link_url": t, "n": n}
+                                for t, n in extract_links_row(u, h)))
 
 
 def extract_links(spark: SparkSession, pages: DataFrame,
@@ -314,12 +303,9 @@ def extract_links(spark: SparkSession, pages: DataFrame,
     partitioning contract as run_extraction (salted exchange unless the
     corpus is pre-salted and num_partitions=0)."""
     ensure_package_shipped(spark)
-    df = pages.select("url", "html")
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 4
-    if num_partitions:
-        df = df.repartition(num_partitions, F.xxhash64("url"))
-    return df.mapInArrow(_links_batches_arrow, LINKS_SCHEMA)
+    return _salted(spark, pages.select("url", "html"),
+                   num_partitions).mapInArrow(_links_batches_arrow,
+                                              LINKS_SCHEMA)
 
 
 def _assert_partitioned_layout(path: str, what: str) -> None:

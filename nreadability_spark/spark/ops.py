@@ -605,34 +605,9 @@ def _simhash_fused_arrow(corpus: DataFrame) -> DataFrame:
     import pyarrow as pa
 
     def fused(batches):
-        import hashlib
-        md5 = hashlib.md5
-        cache: dict = {}
-        cache_get = cache.get
-        for b in batches:
-            ids = b.column("doc_id")
-            texts = b.column("text").to_pylist()
-            flat: list = []
-            extend = flat.extend
-            offs = np.empty(len(texts) + 1, dtype=np.int64)
-            offs[0] = 0
-            for r, text in enumerate(texts):
-                toks = _py_tokens(text or "")
-                ths = []
-                ap = ths.append
-                for t in toks:
-                    v = cache_get(t)
-                    if v is None:
-                        v = int.from_bytes(md5(t.encode()).digest()[:8],
-                                           'big') >> 4
-                        if len(cache) < (1 << 22):  # bound task memory
-                            cache[t] = v
-                    ap(v)
-                extend(ths)
-                offs[r + 1] = len(flat)
-            fa = np.asarray(flat, dtype=np.int64)
+        for ids, fa, offs in _hashed_items(batches, _py_tokens):
             lens = np.diff(offs)
-            sim = np.zeros(len(texts), dtype=np.int64)
+            sim = np.zeros(len(lens), dtype=np.int64)
             if fa.size:
                 # rows are non-empty by the rlike guard
                 assert lens.min() > 0
@@ -1073,6 +1048,47 @@ def _py_tokens(text: str) -> list:
     return [t for t in _JAVA_WS_SPLIT.split(text.strip(' ').lower()) if t]
 
 
+def _py_shingles(text: str):
+    """Python twin of the 3-token shingles of ``_minhash_base``."""
+    toks = _py_tokens(text)
+    return map(" ".join, zip(toks, toks[1:], toks[2:]))
+
+
+def _hashed_items(batches, items_of, mod: int | None = None):
+    """The shared loop of the fused sketch kernels: per Arrow batch of
+    (doc_id, text), yield (doc_id column, flat int64 item hashes,
+    offsets), row r's hashes being ``flat[offs[r]:offs[r + 1]]``. An
+    item's hash is its md5's first 8 bytes >> 4 (the expression form's
+    ``int(hexdigest[:15], 16)``), then ``% mod`` when given, behind a
+    per-task item cache (items are vocabulary-bounded, so the md5 is
+    paid once per distinct item per task, not once per occurrence)."""
+    import hashlib
+
+    import numpy as np
+    md5 = hashlib.md5
+    cache: dict = {}
+    cache_get = cache.get
+    for b in batches:
+        texts = b.column("text").to_pylist()
+        flat: list = []
+        ap = flat.append
+        offs = np.empty(len(texts) + 1, dtype=np.int64)
+        offs[0] = 0
+        for r, text in enumerate(texts):
+            for s in items_of(text or ""):
+                v = cache_get(s)
+                if v is None:
+                    v = int.from_bytes(md5(s.encode()).digest()[:8],
+                                       'big') >> 4
+                    if mod is not None:
+                        v %= mod
+                    if len(cache) < (1 << 22):  # bound task memory
+                        cache[s] = v
+                ap(v)
+            offs[r + 1] = len(flat)
+        yield b.column("doc_id"), np.asarray(flat, dtype=np.int64), offs
+
+
 def _minhash_fused_arrow(corpus: DataFrame) -> DataFrame:
     """Fused tokenize->shingle->hash->fold minhash kernel over Arrow
     batches: one Python pass per document replaces the JVM expression
@@ -1092,33 +1108,8 @@ def _minhash_fused_arrow(corpus: DataFrame) -> DataFrame:
         f"m{i} bigint" for i in range(_N_MINHASH))
 
     def fused(batches):
-        import hashlib
-        md5 = hashlib.md5
-        cache: dict = {}
-        cache_get = cache.get
-        for b in batches:
-            ids = b.column("doc_id")
-            texts = b.column("text").to_pylist()
-            flat: list = []
-            extend = flat.extend
-            offs = np.empty(len(texts) + 1, dtype=np.int64)
-            offs[0] = 0
-            for r, text in enumerate(texts):
-                toks = _py_tokens(text or "")
-                shas = []
-                ap = shas.append
-                for i in range(len(toks) - 2):
-                    s = toks[i] + ' ' + toks[i + 1] + ' ' + toks[i + 2]
-                    v = cache_get(s)
-                    if v is None:
-                        v = (int.from_bytes(md5(s.encode()).digest()[:8],
-                                            'big') >> 4) % _SHINGLE_MOD
-                        if len(cache) < (1 << 22):  # bound task memory
-                            cache[s] = v
-                    ap(v)
-                extend(shas)
-                offs[r + 1] = len(flat)
-            fa = np.asarray(flat, dtype=np.int64)
+        for ids, fa, offs in _hashed_items(batches, _py_shingles,
+                                           _SHINGLE_MOD):
             cols = []
             if fa.size:
                 # >=1 shingle per row by the rlike guard (reduceat is

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import glob
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -42,7 +43,8 @@ _EPOCH = "2026-01-01 00:00:00"
 
 
 def fixture_rows() -> list[tuple]:
-    """(url, seq, html_bytes, text, lang) for the 42 reference pages."""
+    """(url, seq, html_bytes, text, lang) for the 42 reference pages;
+    warns when ``FIXTURE_DIR`` holds none."""
     rows = []
     seq = 0
     for path in sorted(glob.glob(os.path.join(FIXTURE_DIR, "SampleInput",
@@ -61,6 +63,11 @@ def fixture_rows() -> list[tuple]:
             html = f.read()
         rows.append((url, seq, html, "", "en"))
         seq += 1
+    if not rows:
+        # callers union these into their corpus; say so instead of
+        # silently running on the template rows alone
+        warnings.warn(f"no reference fixture pages under {FIXTURE_DIR}; "
+                      "the corpus holds template rows only", stacklevel=2)
     return rows
 
 

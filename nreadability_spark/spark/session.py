@@ -10,7 +10,6 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "nreadability",
               master: str | None = None,
               shuffle_partitions: int | None = None,
-              arrow_batch_rows: int = 256,
               extra_conf: dict | None = None) -> SparkSession:
     """Build a session tuned for the extraction workload.
 
@@ -18,7 +17,8 @@ def get_spark(app_name: str = "nreadability",
       resume anti-join);
     * Arrow batches capped small: HTML blobs run 3 KB-450 KB each, so the
       default 10k rows/batch would blow Python-worker memory; 256 rows
-      bounds a batch at ~100 MB worst-case, ~5 MB typical;
+      bounds a batch at ~100 MB worst-case, ~5 MB typical (override
+      through ``extra_conf``);
     * shuffle partition count defaults to 4x cores so url-hash
       repartitioning spreads host-skewed inputs.
     """
@@ -45,8 +45,7 @@ def get_spark(app_name: str = "nreadability",
         # against does not apply to these plans.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -9,8 +9,9 @@ difference on a real cluster is the session's catalog config.
 from __future__ import annotations
 
 import os
+import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
@@ -62,49 +63,67 @@ def write_append(df: DataFrame, ref: str) -> None:
 import zlib as _zlib
 
 _WARC_CHUNK = 1 << 20  # decompressed scan-window growth per pull
+_GZIP_FEED = 1 << 18   # compressed input per decompress call
 
 
-def _iter_warc_chunks(data: bytes, chunk: int = _WARC_CHUNK):
-    """Yield decompressed chunks of ``data``. Multi-member gzip is
-    decoded member-at-a-time; each ``decompress`` call is capped at
-    ``chunk`` output bytes so peak memory never depends on the
-    compression ratio. Corrupt/truncated members yield whatever bytes
-    decoded cleanly, then stop — never raises."""
+def _gzip_members(data: bytes, chunk: int = _WARC_CHUNK):
+    """Decode ``data`` one gzip member at a time. Yields
+    ``(start, piece, None)`` for each decoded piece of the member whose
+    compressed bytes start at ``start``, then ``(start, b"", end)`` once
+    the member completes (``end`` = its last compressed byte + 1) or is
+    truncated at EOF (``end`` = ``len(data)``). Data that does not start
+    with the gzip magic is one raw member cut into ``chunk`` slices.
+
+    Each ``decompress`` call is capped at ``chunk`` output bytes, so
+    peak memory never depends on the compression ratio. Input is fed in
+    bounded slices: zlib's unconsumed_tail/unused_data are bytes COPIES
+    of whatever input the call did not consume, so feeding the whole
+    remaining buffer per member copied O(filesize) bytes per member —
+    O(members x filesize) total (the r7 profile's dominant warc-pass
+    cost); with sliced feeding each copy is at most one slice. A
+    corrupt member ends the stream with no end event, keeping the
+    pieces already yielded; non-gzip bytes after a member end it too.
+    Never raises."""
+    n = len(data)
     if data[:2] != b"\x1f\x8b":
-        for i in range(0, len(data), chunk):
-            yield data[i:i + chunk]
+        for i in range(0, n, chunk):
+            yield 0, data[i:i + chunk], None
+        yield 0, b"", n
         return
     mv = memoryview(data)
-    pos, n = 0, len(data)
-    in_chunk = 1 << 18  # compressed input per feed
-    # input is fed in bounded slices: zlib's unconsumed_tail/unused_data
-    # are bytes COPIES of whatever input the call did not consume, so
-    # feeding the whole remaining buffer per member copied O(filesize)
-    # bytes per member — O(members x filesize) total (the r7 profile's
-    # dominant warc-pass cost). With sliced feeding each copy is at most
-    # one slice.
-    while pos < n and bytes(mv[pos:pos + 2]) == b"\x1f\x8b":
+    pos = 0
+    while pos < n and data[pos:pos + 2] == b"\x1f\x8b":
         d = _zlib.decompressobj(31)
         feed = pos   # next unread input offset
         tail = b""   # unconsumed input handed back by zlib (<= slice)
         try:
-            while True:
+            while not d.eof:
                 if not tail:
                     if feed >= n:
-                        return  # member truncated at EOF
-                    nxt = min(feed + in_chunk, n)
+                        # truncated at EOF: drain what the consumed
+                        # input still owes (at most one match copy)
+                        out = d.flush()
+                        if out:
+                            yield pos, out, None
+                        yield pos, b"", n
+                        return
+                    nxt = min(feed + _GZIP_FEED, n)
                     tail = mv[feed:nxt]
                     feed = nxt
                 out = d.decompress(tail, chunk)
                 tail = d.unconsumed_tail
                 if out:
-                    yield out
-                if d.eof:
-                    break
+                    yield pos, out, None
         except _zlib.error:
-            return  # corrupt member: keep what was already yielded
-        # next member starts right after this one's compressed bytes
-        pos = feed - len(tail) - len(d.unused_data)
+            return
+        # next member starts right after this one's compressed bytes.
+        # Only unused_data counts: when the call that reaches eof was fed
+        # a capped call's unconsumed_tail, CPython leaves that same
+        # leftover in unconsumed_tail too, and subtracting both landed
+        # inside this member and dropped every later one.
+        end = feed - len(d.unused_data)
+        yield pos, b"", end
+        pos = end
 
 
 _MAX_HTTP_DECODE = 64 << 20  # decompressed-entity cap per record
@@ -136,7 +155,7 @@ def _dechunk(body: bytes) -> bytes:
 
 def _inflate(body: bytes, wbits: int) -> bytes | None:
     """Bounded best-effort decompress (the capped decompressobj pattern
-    of ``_iter_warc_chunks``): output capped at ``_MAX_HTTP_DECODE`` so
+    of ``_gzip_members``): output capped at ``_MAX_HTTP_DECODE`` so
     peak memory never depends on the compression ratio; corrupt streams
     yield what decoded cleanly; ``None`` when nothing decodes."""
     d = _zlib.decompressobj(wbits)
@@ -289,8 +308,9 @@ def _parse_warc_records(data: bytes):
     """Yield (target_uri, warc_date, html_bytes) for each WARC/1.0
     ``response`` record in ``data`` (gzip-transparent; see
     ``_parse_warc_stream`` for the malformed-input contract and
-    ``_iter_warc_chunks`` for the bounded-memory decode)."""
-    yield from _parse_warc_stream(_iter_warc_chunks(data))
+    ``_gzip_members`` for the bounded-memory decode)."""
+    yield from _parse_warc_stream(
+        piece for _start, piece, end in _gzip_members(data) if end is None)
 
 
 def _iter_warc_records_indexed(data: bytes):
@@ -301,61 +321,38 @@ def _iter_warc_records_indexed(data: bytes):
     which is what lets a wayback/range-request reader fetch one page
     out of a 1 GB segment. Whole-file-gzip and raw layouts fall back
     to offset 0 / whole-file length (no sub-file addressing exists
-    there). Unlike the streaming parser this decodes one member at a
-    time into memory — production CC members hold ONE record, so the
-    envelope is O(largest record)."""
-    if data[:2] != b"\x1f\x8b":
-        for uri, date, html in _parse_warc_stream(iter([data])):
-            yield 0, len(data), uri, date, html
-        return
-    mv = memoryview(data)
-    pos, n = 0, len(data)
-    in_chunk = 1 << 18
-    # sliced input feeding for the same reason as _iter_warc_chunks:
-    # d.decompress(data[pos:]) copied the file's remaining bytes once
-    # per member (and unused_data copied the tail again) — O(members x
-    # filesize); slices bound every copy
-    while pos < n and data[pos:pos + 2] == b"\x1f\x8b":
-        d = _zlib.decompressobj(31)
-        parts = []
-        feed = pos
-        try:
-            while not d.eof and feed < n:
-                nxt = min(feed + in_chunk, n)
-                parts.append(d.decompress(mv[feed:nxt]))
-                feed = nxt
-        except _zlib.error:
-            return
-        end = (feed - len(d.unused_data)) if d.eof else n
-        out = b"".join(parts)
-        for uri, date, html in _parse_warc_stream(iter([out])):
-            yield pos, end - pos, uri, date, html
-        if not d.eof:
-            return
-        pos = end
+    there). Unlike the streaming parser this buffers one member's
+    decoded pieces and parses the member in isolation — production CC
+    members hold ONE record, so the envelope is O(largest record). A
+    member truncated at EOF still parses; a corrupt one yields
+    nothing."""
+    pieces = []
+    for start, piece, end in _gzip_members(data):
+        if end is None:
+            pieces.append(piece)
+            continue
+        for uri, date, html in _parse_warc_stream(iter(pieces)):
+            yield start, end - start, uri, date, html
+        pieces = []
 
 
-def read_pages_warc(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Read WARC files into the pages schema (url, warc_ts, html, text,
-    lang). One Arrow batch pass per file row; the scan parallelizes
-    across files (binaryFile), which is the right grain for ~1 GB
-    Common-Crawl segments."""
-    from pyspark.sql import functions as F
+def _explode_warcs(batches):
+    """mapInArrow generator: binaryFile ``content`` batches -> one
+    RecordBatch(url, warc_date, html) per WARC file."""
+    import pyarrow as pa
+    schema = pa.schema([("url", pa.string()), ("warc_date", pa.string()),
+                        ("html", pa.binary())])
+    for rb in batches:
+        for blob in rb.column(0).to_pylist():
+            records = list(_parse_warc_records(blob))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([r[i] for r in records], schema.field(i).type)
+                 for i in range(3)], schema=schema)
 
-    def explode_warcs(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = {"url": [], "warc_date": [], "html": []}
-            for blob in pdf["content"]:
-                for uri, date, html in _parse_warc_records(bytes(blob)):
-                    rows["url"].append(uri)
-                    rows["warc_date"].append(date)
-                    rows["html"].append(html)
-            yield pd.DataFrame(rows)
 
-    raw = spark.read.format("binaryFile").load(path_glob).select("content")
-    pages = raw.mapInPandas(explode_warcs,
-                            "url string, warc_date string, html binary")
+def _as_pages(df: DataFrame, *extra) -> DataFrame:
+    """(url, warc_date string, html, ...) -> the pages schema, plus
+    ``extra`` columns."""
     # try_cast, not to_timestamp: under Spark 4's default ANSI mode a
     # missing or non-conforming WARC-Date (WARC 1.1 allows fractional
     # seconds) must become null, not kill the ingest job on one record.
@@ -364,12 +361,31 @@ def read_pages_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     # the UTC offset, so the stored instant is correct on any cluster
     # regardless of spark.sql.session.timeZone (stripping the 'Z' would
     # silently reinterpret every timestamp in local time).
-    return pages.select(
+    return df.select(
         "url",
         F.expr("try_cast(warc_date as timestamp)").alias("warc_ts"),
         "html",
         F.lit("").alias("text"),
-        F.lit("").alias("lang"))
+        F.lit("").alias("lang"),
+        *extra)
+
+
+def warc_pages(raw: DataFrame) -> DataFrame:
+    """binaryFile rows (batch or streaming) -> the pages schema (url,
+    warc_ts, html, text, lang): one Arrow pass per WARC file, the same
+    ``mapInArrow`` boundary the extraction stage uses."""
+    from .job import ensure_package_shipped
+    ensure_package_shipped(raw.sparkSession)
+    return _as_pages(raw.select("content").mapInArrow(
+        _explode_warcs, "url string, warc_date string, html binary"))
+
+
+def read_pages_warc(spark: SparkSession, path_glob: str) -> DataFrame:
+    """Read WARC files into the pages schema (url, warc_ts, html, text,
+    lang). One Arrow batch pass per file row; the scan parallelizes
+    across files (binaryFile), which is the right grain for ~1 GB
+    Common-Crawl segments."""
+    return warc_pages(spark.read.format("binaryFile").load(path_glob))
 
 # --- robots.txt gating (crawl-politeness layer) ---------------------------------
 #
@@ -423,8 +439,6 @@ def _read_per_host_dir(spark: SparkSession, path: str, ext: str,
     blobs into) as (host, <value_col>). binaryFile parallelizes across
     files — the right grain, one small payload per host — and the host
     key is decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
     raw = (spark.read.format("binaryFile")
            .load(os.path.join(path, f"*.{ext}"))
            .select("path", "content"))
@@ -461,7 +475,6 @@ def robots_verdicts(pages: DataFrame, robots: DataFrame,
     distinct host text. Urls whose host has no robots row get
     (allowed=true, delay_ms=null) — the REP default."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from .job import ensure_package_shipped
     ensure_package_shipped(pages.sparkSession)
@@ -519,8 +532,6 @@ def robots_check(spark: SparkSession, sf_dir: str,
     stand-ins) and ``robots_verdicts`` (the production gate)."""
     import os as _os
 
-    from pyspark.sql import functions as F
-
     from .ops import _spread
 
     # documents is a single-row-group file (1-2 scan splits); without
@@ -544,67 +555,26 @@ _HOST_OF_URL = ("lower(regexp_extract(url, "
 def robots_filter(pages: DataFrame, robots: DataFrame,
                   agent: str = ROBOTS_AGENT) -> DataFrame:
     """Drop pages whose url their host's robots.txt disallows for
-    ``agent`` — the pre-fetch politeness stage of a crawl pipeline.
+    ``agent`` — the pre-fetch politeness stage of a crawl pipeline:
+    ``robots_verdicts`` filtered on ``allowed``, columns unchanged.
+    Pages with no robots row pass (the REP default); pages whose url
+    has no parseable host also pass (gating them is the fetcher's
+    concern)."""
+    return (robots_verdicts(pages, robots, agent).where("allowed")
+            .select(*pages.columns))
 
-    ``pages`` is any DataFrame with a ``url`` column; ``robots`` is
-    (host, robots_txt). The host key comes out of the url by regex
-    (JVM-side), the join shuffles on it (the robots table is one row
-    per host — broadcast at test scale via AQE, a plain shuffle join at
-    web scale), and the REP verdict runs in Arrow batches with the
-    parsed robots cached per distinct host text. Pages with no robots
-    row pass (the REP default); pages whose url has no parseable host
-    also pass (gating them is the fetcher's concern)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
 
-    from .job import ensure_package_shipped
-    ensure_package_shipped(pages.sparkSession)
-    cols = pages.columns
-    joined = (pages.withColumn("_host", F.expr(_HOST_OF_URL))
-              .join(robots.withColumnRenamed("host", "_host")
-                    .withColumnRenamed("robots_txt", "_robots_txt"),
-                    "_host", "left"))
-
-    schema_out = joined.drop("_host", "_robots_txt").schema
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in schema_out.fields)
-
-    def gate(batches):
-        from urllib.parse import urlsplit
-
-        from nreadability_spark.readability.robots import (is_allowed,
-                                                           parse_robots)
-        cache: dict = {}
-        for pdf in batches:
-            keep = []
-            for url, txt in zip(pdf["url"], pdf["_robots_txt"]):
-                if txt is None or isinstance(txt, float):
-                    keep.append(True)
-                    continue
-                r = cache.get(txt)
-                if r is None:
-                    r = cache[txt] = parse_robots(txt)
-                try:
-                    sp = urlsplit(url or "")
-                    path = (sp.path or "/") + \
-                        (("?" + sp.query) if sp.query else "")
-                except ValueError:
-                    path = "/"
-                keep.append(is_allowed(r, agent, path))
-            # dtype MUST be bool: an empty keep-list otherwise infers
-            # object and pandas reads the indexer as column labels
-            out = pdf[pd.Series(keep, index=pdf.index, dtype=bool)]
-            yield out.drop(columns=["_host", "_robots_txt"])
-
-    return joined.mapInPandas(gate, fields).select(*cols)
+_WARC_DATE_FRACTION = re.compile(r"\.[0-9]+(?=Z\Z)")
 
 
 def _warc_epoch(date: str):
     """WARC-Date -> UTC epoch seconds (int) or None — the same parse on
-    the Spark and oracle sides of the index."""
+    the Spark and oracle sides of the index. WARC 1.1 fractional
+    seconds are floored, as ``unix_timestamp(warc_ts)`` does."""
     import datetime as _dt
+    whole = _WARC_DATE_FRACTION.sub("", date, count=1)
     try:
-        return int(_dt.datetime.strptime(date, "%Y-%m-%dT%H:%M:%SZ")
+        return int(_dt.datetime.strptime(whole, "%Y-%m-%dT%H:%M:%SZ")
                    .replace(tzinfo=_dt.timezone.utc).timestamp())
     except ValueError:
         return None
@@ -693,8 +663,6 @@ def read_pages_warc_indexed(spark: SparkSession, index_dir: str,
     captures. ``with_stats`` appends (file, offset, length, bytes_read)
     for IO accounting; bytes_read == length proves nothing outside the
     member was touched."""
-    from pyspark.sql import functions as F
-
     idx = spark.read.parquet(index_dir)
     if predicate is not None:
         idx = idx.where(predicate)
@@ -744,14 +712,8 @@ def read_pages_warc_indexed(spark: SparkSession, index_dir: str,
     pages = sel.mapInPandas(
         decode, "url string, warc_date string, html binary, "
                 "file string, offset long, length long, bytes_read long")
-    cols = [F.col("url"),
-            F.expr("try_cast(warc_date as timestamp)").alias("warc_ts"),
-            F.col("html"), F.lit("").alias("text"),
-            F.lit("").alias("lang")]
-    if with_stats:
-        cols += [F.col("file"), F.col("offset"), F.col("length"),
-                 F.col("bytes_read")]
-    return pages.select(*cols)
+    extra = ("file", "offset", "length", "bytes_read") if with_stats else ()
+    return _as_pages(pages, *extra)
 
 
 def warc_lookup(spark: SparkSession, index_dir: str, url: str) -> DataFrame:
@@ -762,8 +724,6 @@ def warc_lookup(spark: SparkSession, index_dir: str, url: str) -> DataFrame:
     range, so a lookup touches ~one shard of the whole index (the
     ranged-read analog of a wayback query). Returns (surt, url,
     warc_epoch, file, offset, length) rows, newest first."""
-    from pyspark.sql import functions as F
-
     from nreadability_spark.readability.surt import surt_key
     key = surt_key(url)
     return (spark.read.parquet(index_dir)
@@ -796,8 +756,6 @@ def write_pages_warc(pages: DataFrame, out_dir: str,
     an object-store port swaps ``open`` for a multipart upload).
     Returns the (file, records) manifest, one row per non-empty
     segment."""
-    from pyspark.sql import functions as F
-
     cols = pages.select(
         "url",
         F.expr("date_format(to_utc_timestamp(warc_ts, "

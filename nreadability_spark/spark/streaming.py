@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .job import OUT_SCHEMA, _extract_batches_arrow, ensure_package_shipped
+from .sources import warc_pages
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
              "text string, lang string")
@@ -28,40 +29,18 @@ def read_pages_warc_stream(spark: SparkSession, source_dir: str,
                            max_files_per_trigger: int = 8) -> DataFrame:
     """Streaming raw-crawl ingest: watch a directory for new WARC
     segment files (the shape of a live crawler dropping segments) and
-    emit pages rows as they land. Same bounded-memory member-at-a-time
-    parser as the batch reader (sources.read_pages_warc); the file is
-    the streaming unit, so exactly-once comes free from the file
-    source's checkpointed log. Chains into extract_stream /
-    dedup_stream unchanged — the WARC frontier needs no staging ETL
-    even in continuous ingest."""
-    from .sources import _parse_warc_records
-    raw = (spark.readStream.format("binaryFile")
-           .schema("path string, modificationTime timestamp, "
-                   "length long, content binary")
-           .option("maxFilesPerTrigger", str(max_files_per_trigger))
-           .option("pathGlobFilter", "*.warc*")
-           .load(source_dir)
-           .select("content"))
-
-    def explode_warcs(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = {"url": [], "warc_date": [], "html": []}
-            for blob in pdf["content"]:
-                for uri, date, html in _parse_warc_records(bytes(blob)):
-                    rows["url"].append(uri)
-                    rows["warc_date"].append(date)
-                    rows["html"].append(html)
-            yield pd.DataFrame(rows)
-
-    pages = raw.mapInPandas(explode_warcs,
-                            "url string, warc_date string, html binary")
-    return pages.select(
-        "url",
-        F.expr("try_cast(warc_date as timestamp)").alias("warc_ts"),
-        "html",
-        F.lit("").alias("text"),
-        F.lit("").alias("lang"))
+    emit pages rows as they land. Same explode as the batch reader
+    (sources.warc_pages); the file is the streaming unit, so
+    exactly-once comes free from the file source's checkpointed log.
+    Chains into extract_stream / dedup_stream unchanged — the WARC
+    frontier needs no staging ETL even in continuous ingest."""
+    return warc_pages(spark.readStream.format("binaryFile")
+                      .schema("path string, modificationTime timestamp, "
+                              "length long, content binary")
+                      .option("maxFilesPerTrigger",
+                              str(max_files_per_trigger))
+                      .option("pathGlobFilter", "*.warc*")
+                      .load(source_dir))
 
 
 def extract_stream(pages_stream: DataFrame) -> DataFrame:

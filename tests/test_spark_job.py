@@ -39,6 +39,17 @@ def test_pages_schema(pages):
     assert pages.count() > 500
 
 
+def test_fixture_rows_warns_when_fixture_dir_is_empty(tmp_path, monkeypatch):
+    """A missing or empty fixture directory must not shrink the corpus
+    silently: fixture_rows() warns and names the directory."""
+    import re
+
+    from nreadability_spark.spark import pages as pages_mod
+    monkeypatch.setattr(pages_mod, "FIXTURE_DIR", str(tmp_path))
+    with pytest.warns(UserWarning, match=re.escape(str(tmp_path))):
+        assert pages_mod.fixture_rows() == []
+
+
 def test_template_renderers_match(spark, pages):
     """Spark-side template rendering == Python oracle rendering, byte for
     byte (prerequisite for the extraction byte-identity check)."""

@@ -323,3 +323,85 @@ def test_indexed_and_streaming_parsers_agree_on_damaged_records():
         indexed = [(u, d, h) for _, _, u, d, h in
                    _iter_warc_records_indexed(blob)]
         assert stream == indexed and len(stream) == 1
+
+
+def test_warc_index_epoch_floors_fractional_seconds(spark, tmp_path_factory):
+    """WARC 1.1 allows fractional seconds: the index's warc_epoch must be
+    the same instant read_pages_warc stores, floored to whole seconds,
+    not null (a null epoch sorts the capture last in warc_lookup)."""
+    from pyspark.sql import functions as F
+    from nreadability_spark.spark.sources import read_pages_warc, warc_index
+    d = str(tmp_path_factory.mktemp("warc_frac"))
+    http = b"HTTP/1.1 200 OK\r\n\r\n<html><p>x</p></html>"
+    rec = (b"WARC/1.0\r\nWARC-Type: response\r\n"
+           b"WARC-Target-URI: https://frac.example/\r\n"
+           b"WARC-Date: 2026-01-01T00:00:00.5Z\r\n"
+           b"Content-Length: " + str(len(http)).encode() + b"\r\n\r\n" +
+           http + b"\r\n\r\n")
+    with open(os.path.join(d, "seg.warc.gz"), "wb") as f:
+        f.write(gzip.compress(rec))
+    [page] = (read_pages_warc(spark, d)
+              .select(F.unix_timestamp("warc_ts").alias("e")).collect())
+    [idx] = warc_index(spark, d).select("warc_epoch").collect()
+    assert page["e"] == 1767225600
+    assert idx["warc_epoch"] == page["e"]
+
+
+def test_member_past_output_cap_keeps_later_members():
+    """A gzip member that decodes past one 1 MiB output window must not
+    hide the members after it: the streaming and indexed parsers both
+    yield every record, at the same member offsets."""
+    from nreadability_spark.spark.sources import (
+        _iter_warc_records_indexed, _parse_warc_records)
+    members = [
+        gzip.compress(_record(b"response", b"https://big.example/",
+                              b"<p>" + b"a" * (2 << 20)), mtime=0),
+        gzip.compress(_record(b"response", b"https://small.example/",
+                              b"<p>s</p>"), mtime=0)]
+    blob = b"".join(members)
+    urls = ["https://big.example/", "https://small.example/"]
+    assert [u for u, _d, _h in _parse_warc_records(blob)] == urls
+    rows = list(_iter_warc_records_indexed(blob))
+    assert [r[2] for r in rows] == urls
+    assert [(r[0], r[1]) for r in rows] == [
+        (0, len(members[0])), (len(members[0]), len(members[1]))]
+
+
+def test_batch_and_stream_readers_agree(spark, tmp_path_factory):
+    """read_pages_warc and read_pages_warc_stream share one explode: over
+    a directory holding a per-record-gzip file with a truncated last
+    member, a whole-file-gzip file and a raw file they return the same
+    (url, warc_ts, md5(html)) rows."""
+    from pyspark.sql import functions as F
+    from nreadability_spark.spark.sources import read_pages_warc
+    from nreadability_spark.spark.streaming import read_pages_warc_stream
+    src = str(tmp_path_factory.mktemp("warc_both_src"))
+    ck = str(tmp_path_factory.mktemp("warc_both_ck"))
+    out_dir = str(tmp_path_factory.mktemp("warc_both_out"))
+
+    def recs(tag, n):
+        return [_record(b"response", b"https://%s.example/%d" % (tag, i),
+                        ARTICLE + b"<p>%d</p>" % i) for i in range(n)]
+
+    members = b"".join(gzip.compress(r) for r in recs(b"m", 4))
+    with open(os.path.join(src, "a.warc.gz"), "wb") as f:
+        f.write(members[:-30])  # last member truncated mid-stream
+    with open(os.path.join(src, "b.warc.gz"), "wb") as f:
+        f.write(gzip.compress(b"".join(recs(b"w", 3))))
+    with open(os.path.join(src, "c.warc"), "wb") as f:
+        f.write(b"".join(recs(b"r", 2)))
+
+    def key(df):
+        return sorted(tuple(r) for r in df.select(
+            "url", "warc_ts", F.md5("html").alias("h")).collect())
+
+    batch = key(read_pages_warc(spark, src))
+    q = (read_pages_warc_stream(spark, src).writeStream.format("parquet")
+         .option("path", out_dir).option("checkpointLocation", ck)
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    stream = key(spark.read.parquet(out_dir))
+    assert stream == batch
+    urls = {u for u, _ts, _h in batch}
+    assert {"https://w.example/2", "https://r.example/1",
+            "https://m.example/2"} <= urls
