@@ -170,32 +170,40 @@ def _fingerprint_of(row: dict) -> dict:
 
 
 def _make_arrow_extractor(out_schema, rows_of):
-    """Build a mapInArrow generator: RecordBatch(url, html) in ->
-    RecordBatch(out_schema) out; ``rows_of(url, html)`` yields each
-    page's output rows as dicts keyed by column."""
-    cols = [f.name for f in out_schema.fields]
+    """Build a mapInArrow generator: one RecordBatch(out_schema) out per
+    RecordBatch in; ``rows_of(*row)`` gets one input row's values, one
+    per input column, and yields its output rows as dicts keyed by
+    column. This is the one place Python rows cross the Arrow boundary."""
 
     def gen(batches):
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
         sys.setrecursionlimit(40000)
-        pa_types = {"string": pa.string(), "boolean": pa.bool_(),
-                    "long": pa.int64()}
-        arrow_types = {f.name: pa_types[f.dataType.typeName()]
-                       for f in out_schema.fields}
-        schema = pa.schema([(c, arrow_types[c]) for c in cols])
+        schema = to_arrow_schema(out_schema)
+        cols = schema.names
         for rb in batches:
-            urls = rb.column(0).to_pylist()
-            htmls = rb.column(1).to_pylist()
             data: dict[str, list] = {c: [] for c in cols}
-            for u, h in zip(urls, htmls):
-                for row in rows_of(u, h):
+            for row in zip(*(col.to_pylist() for col in rb.columns)):
+                for out in rows_of(*row):
                     for c in cols:
-                        data[c].append(row[c])
+                        data[c].append(out[c])
             yield pa.RecordBatch.from_arrays(
-                [pa.array(data[c], type=arrow_types[c]) for c in cols],
+                [pa.array(data[f.name], type=f.type) for f in schema],
                 schema=schema)
 
     return gen
+
+
+def map_rows(df: DataFrame, out_schema, rows_of) -> DataFrame:
+    """``df`` -> the rows ``rows_of(*row)`` yields for each input row,
+    as dicts keyed by the columns of ``out_schema`` (a StructType or a
+    DDL string): the Arrow row boundary of every stateless Python
+    stage."""
+    ensure_package_shipped(df.sparkSession)
+    if isinstance(out_schema, str):
+        out_schema = StructType.fromDDL(out_schema)
+    return df.mapInArrow(_make_arrow_extractor(out_schema, rows_of),
+                         out_schema)
 
 
 def _hooked_row(url, html):

@@ -13,15 +13,13 @@ from __future__ import annotations
 import hashlib
 import os
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, FloatType, IntegerType,
                                LongType, StringType, StructField, StructType)
 
-from .job import ensure_package_shipped
+from .job import map_rows
 
 _MAGIC = b"NRSM"
 _KINDS = ["image", "audio", "video"]
@@ -66,35 +64,23 @@ def _fake_payload(media_id: int, kind: str) -> bytes:
 
 def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic media table derived from the documents table ids."""
-    ensure_package_shipped(spark)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")) \
         .select("doc_id")
+    return map_rows(docs, MEDIA_SCHEMA, _media_rows)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "url", "kind", "payload",
-                                    "width", "height", "sample_rate",
-                                    "duration_ms")}
-            for doc_id in pdf["doc_id"]:
-                mid = int(doc_id)
-                kind = _KINDS[mid % 3]
-                payload = _fake_payload(mid, kind)
-                rows["media_id"].append(mid)
-                rows["url"].append(
-                    f"https://host{mid % 97}.example.org/media/{mid}")
-                rows["kind"].append(kind)
-                rows["payload"].append(payload)
-                rows["width"].append(64 + (mid % 32) * 8
-                                     if kind == "image" else None)
-                rows["height"].append(48 + (mid % 24) * 8
-                                      if kind == "image" else None)
-                rows["sample_rate"].append(8000 + (mid % 5) * 8000
-                                           if kind == "audio" else None)
-                rows["duration_ms"].append(500 + (mid % 20) * 250
-                                           if kind != "image" else None)
-            yield pd.DataFrame(rows)
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+def _media_rows(mid: int):
+    kind = _KINDS[mid % 3]
+    yield {"media_id": mid,
+           "url": f"https://host{mid % 97}.example.org/media/{mid}",
+           "kind": kind,
+           "payload": _fake_payload(mid, kind),
+           "width": 64 + (mid % 32) * 8 if kind == "image" else None,
+           "height": 48 + (mid % 24) * 8 if kind == "image" else None,
+           "sample_rate": 8000 + (mid % 5) * 8000
+           if kind == "audio" else None,
+           "duration_ms": 500 + (mid % 20) * 250
+           if kind != "image" else None}
 
 
 def _decode_payload(payload: bytes) -> tuple[str, np.ndarray]:
@@ -114,35 +100,24 @@ def extract_features(media: DataFrame, dims: int = 16) -> DataFrame:
     """Vectorized feature extraction over binary payloads: folded byte
     histogram, L2-normalized float32 — the Arrow batch shape a real
     embedding model UDF would use."""
-    spark = media.sparkSession
-    ensure_package_shipped(spark)
+    def featurize(mid, payload):
+        row = {"media_id": mid,
+               "payload_bytes": len(payload) if payload is not None else 0}
+        try:
+            kind, arr = _decode_payload(payload)
+            hist = np.bincount(arr % dims, minlength=dims) \
+                .astype(np.float32)
+            norm = float(np.linalg.norm(hist))
+            row.update(kind=kind, ok="ok",
+                       feature=(hist / norm if norm > 0 else hist).tolist())
+        except Exception as exc:
+            row.update(kind=None, ok=f"decode_error: {exc}"[:100],
+                       feature=None)
+        yield row
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "kind": [], "ok": [], "feature": [],
-                   "payload_bytes": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                out["media_id"].append(int(mid))
-                out["payload_bytes"].append(
-                    len(payload) if payload is not None else 0)
-                try:
-                    kind, arr = _decode_payload(bytes(payload))
-                    hist = np.bincount(arr % dims, minlength=dims) \
-                        .astype(np.float32)
-                    norm = float(np.linalg.norm(hist))
-                    feat = (hist / norm if norm > 0 else hist)
-                    out["kind"].append(kind)
-                    out["ok"].append("ok")
-                    out["feature"].append([float(x) for x in feat])
-                except Exception as exc:
-                    out["kind"].append(None)
-                    out["ok"].append(f"decode_error: {exc}"[:100])
-                    out["feature"].append(None)
-            yield pd.DataFrame(out)
-
-    return (media.select("media_id", "payload")
-            .repartition(F.xxhash64("media_id"))
-            .mapInPandas(featurize, FEATURES_SCHEMA))
+    return map_rows(media.select("media_id", "payload")
+                    .repartition(F.xxhash64("media_id")),
+                    FEATURES_SCHEMA, featurize)
 
 
 # --- PDF payloads (real codec behind the seam) ----------------------------------
@@ -209,7 +184,6 @@ def build_doc_pdf(doc_id: int, text: str) -> bytes:
 def synthesize_pdfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic PDF corpus derived from the documents table (the
     PDF analog of pages.synthesize_pages)."""
-    ensure_package_shipped(spark)
     from .ops import _spread
     # single-row-group documents files scan as 1-2 splits; without the
     # spread the whole PDF build kernel runs on that many cores.
@@ -219,19 +193,13 @@ def synthesize_pdfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         .select("doc_id", "text"), heavy=True)
+    return map_rows(docs, PDF_MEDIA_SCHEMA, _pdf_media_rows)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "url": [], "payload": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                rows["doc_id"].append(did)
-                rows["url"].append(
-                    f"https://host{did % 97}.example.org/docs/{did}.pdf")
-                rows["payload"].append(build_doc_pdf(did, text))
-            yield pd.DataFrame(rows)
 
-    return docs.mapInPandas(gen, PDF_MEDIA_SCHEMA)
+def _pdf_media_rows(did: int, text):
+    yield {"doc_id": did,
+           "url": f"https://host{did % 97}.example.org/docs/{did}.pdf",
+           "payload": build_doc_pdf(did, text)}
 
 
 def extract_pdf(pdfs: DataFrame) -> DataFrame:
@@ -239,54 +207,33 @@ def extract_pdf(pdfs: DataFrame) -> DataFrame:
     kernel is pure Python per payload, exactly like the html transcoder
     batches). Output ships md5/len fingerprints, not the text blobs —
     the serde-narrow shape of extract_fingerprints."""
-    spark = pdfs.sparkSession
-    ensure_package_shipped(spark)
+    return map_rows(pdfs.select("doc_id", "payload")
+                    .repartition(F.xxhash64("doc_id")),
+                    PDF_TEXT_SCHEMA, _pdf_text_rows)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from nreadability_spark.readability.pdf import extract_pdf_text
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], "n_pages": [], "text_md5": [],
-                   "text_len": []}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                r = extract_pdf_text(bytes(payload)
-                                     if payload is not None else b"")
-                text = r.text
-                out["doc_id"].append(int(did))
-                out["ok"].append("ok" if r.ok else
-                                 f"error: {r.error}"[:100])
-                out["n_pages"].append(len(r.pages))
-                out["text_md5"].append(
-                    hashlib.md5(text.encode("utf-8")).hexdigest())
-                out["text_len"].append(len(text))
-            yield pd.DataFrame(out)
 
-    return (pdfs.select("doc_id", "payload")
-            .repartition(F.xxhash64("doc_id"))
-            .mapInPandas(run, PDF_TEXT_SCHEMA))
+def _pdf_text_rows(did: int, payload):
+    from nreadability_spark.readability.pdf import extract_pdf_text
+    r = extract_pdf_text(payload or b"")
+    yield {"doc_id": did,
+           "ok": "ok" if r.ok else f"error: {r.error}"[:100],
+           "n_pages": len(r.pages),
+           "text_md5": hashlib.md5(r.text.encode("utf-8")).hexdigest(),
+           "text_len": len(r.text)}
 
 
 def sample_frames(media: DataFrame, every_n: int = 4,
                   frame_bytes: int = 256) -> DataFrame:
-    """One-to-many frame sampling for video payloads (mapInPandas rows
-    explode: each input row yields 0..k frame rows)."""
-    spark = media.sparkSession
-    ensure_package_shipped(spark)
+    """One-to-many frame sampling for video payloads (each input row
+    yields 0..k frame rows)."""
+    def sample(mid, kind, payload):
+        if kind != "video" or payload is None:
+            return
+        body = payload[16:]
+        blocks = [body[i:i + frame_bytes]
+                  for i in range(0, len(body), frame_bytes)]
+        for frame_no, block in enumerate(blocks[::every_n]):
+            yield {"media_id": mid, "frame_no": frame_no, "frame": block}
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "frame_no": [], "frame": []}
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"],
-                                          pdf["payload"]):
-                if kind != "video" or payload is None:
-                    continue
-                body = bytes(payload)[16:]
-                blocks = [body[i:i + frame_bytes]
-                          for i in range(0, len(body), frame_bytes)]
-                for frame_no, block in enumerate(blocks[::every_n]):
-                    out["media_id"].append(int(mid))
-                    out["frame_no"].append(frame_no)
-                    out["frame"].append(block)
-            yield pd.DataFrame(out)
-
-    return (media.select("media_id", "kind", "payload")
-            .mapInPandas(sample, FRAMES_SCHEMA))
+    return map_rows(media.select("media_id", "kind", "payload"),
+                    FRAMES_SCHEMA, sample)

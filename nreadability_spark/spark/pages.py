@@ -31,6 +31,8 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .job import map_rows
+
 FIXTURE_DIR = "/root/reference/Carbon.Readability.Tests"
 
 THEVERGE_URLS = {
@@ -191,26 +193,16 @@ def synthesize_chained_pages(spark: SparkSession, sf_dir: str,
     """Multi-page chain corpus: every ``every``-th document becomes an
     ``n_pages`` article; all other documents stay single-page. Built in a
     distributed pass (one input row fans out to its chain pages)."""
-    import pandas as pd
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")) \
         .select("doc_id", "text")
 
-    def gen(batches):
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                total = n_pages if doc_id % every == 0 else 1
-                for k in range(1, total + 1):
-                    u, h = chained_page_py(doc_id, text, k, total)
-                    urls.append(u)
-                    htmls.append(h.encode("utf-8"))
-            yield pd.DataFrame({"url": urls, "html": htmls})
+    def chain(doc_id, text):
+        total = n_pages if doc_id % every == 0 else 1
+        for k in range(1, total + 1):
+            url, html = chained_page_py(doc_id, text, k, total)
+            yield {"url": url, "html": html.encode("utf-8")}
 
-    from .job import ensure_package_shipped
-    ensure_package_shipped(spark)
-    return docs.mapInPandas(gen, "url string, html binary")
+    return map_rows(docs, "url string, html binary", chain)
 
 
 # --- deterministic WARC corpus (raw-crawl ingest, pass-D path) ---------------

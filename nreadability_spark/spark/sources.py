@@ -8,10 +8,13 @@ difference on a real cluster is the session's catalog config.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .job import ensure_package_shipped, map_rows
 
 PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
@@ -374,7 +377,6 @@ def warc_pages(raw: DataFrame) -> DataFrame:
     """binaryFile rows (batch or streaming) -> the pages schema (url,
     warc_ts, html, text, lang): one Arrow pass per WARC file, the same
     ``mapInArrow`` boundary the extraction stage uses."""
-    from .job import ensure_package_shipped
     ensure_package_shipped(raw.sparkSession)
     return _as_pages(raw.select("content").mapInArrow(
         _explode_warcs, "url string, warc_date string, html binary"))
@@ -474,9 +476,6 @@ def robots_verdicts(pages: DataFrame, robots: DataFrame,
     verdict runs in Arrow batches with the parsed robots cached per
     distinct host text. Urls whose host has no robots row get
     (allowed=true, delay_ms=null) — the REP default."""
-    import pandas as pd
-
-    from .job import ensure_package_shipped
     ensure_package_shipped(pages.sparkSession)
     cols = pages.columns
     joined = (pages.withColumn("_host", F.expr(_HOST_OF_URL))
@@ -491,14 +490,17 @@ def robots_verdicts(pages: DataFrame, robots: DataFrame,
     def gate(batches):
         from urllib.parse import urlsplit
 
+        import pyarrow as pa
+
         from nreadability_spark.readability.robots import (crawl_delay,
                                                            is_allowed,
                                                            parse_robots)
         cache: dict = {}
-        for pdf in batches:
+        for rb in batches:
             allowed_col, delay_col = [], []
-            for url, txt in zip(pdf["url"], pdf["_robots_txt"]):
-                if txt is None or isinstance(txt, float):
+            for url, txt in zip(rb.column("url").to_pylist(),
+                                rb.column("_robots_txt").to_pylist()):
+                if txt is None:
                     allowed_col.append(True)
                     delay_col.append(None)
                     continue
@@ -514,13 +516,17 @@ def robots_verdicts(pages: DataFrame, robots: DataFrame,
                 allowed_col.append(bool(is_allowed(r, agent, path)))
                 d = crawl_delay(r, agent)
                 delay_col.append(int(d * 1000) if d is not None else None)
-            out = pdf.drop(columns=["_host", "_robots_txt"])
-            out["allowed"] = pd.Series(allowed_col, index=pdf.index,
-                                       dtype=bool)
-            out["delay_ms"] = pd.array(delay_col, dtype="Int64")
-            yield out
+            # passthrough columns stay Arrow: a round trip through
+            # Python objects would shift timestamps by the session zone
+            keep = [n for n in rb.schema.names
+                    if n not in ("_host", "_robots_txt")]
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(n) for n in keep]
+                + [pa.array(allowed_col, pa.bool_()),
+                   pa.array(delay_col, pa.int64())],
+                names=keep + ["allowed", "delay_ms"])
 
-    return joined.mapInPandas(gate, schema_out).select(
+    return joined.mapInArrow(gate, schema_out).select(
         *cols, "allowed", "delay_ms")
 
 
@@ -588,39 +594,21 @@ def warc_index(spark: SparkSession, warc_dir: str) -> DataFrame:
     (surt, warc_epoch) and a domain's whole history is a range scan,
     each hit fetchable with one ranged read. File-grain parallel like
     every WARC pass here."""
-    import hashlib as _hashlib
-    import os as _os
-
-    import pandas as pd
-
-    from .job import ensure_package_shipped
-    ensure_package_shipped(spark)
     raw = (spark.read.format("binaryFile").load(warc_dir)
            .select("path", "content"))
+    return map_rows(
+        raw, "surt string, url string, warc_epoch long, file string, "
+             "offset long, length long, html_md5 string", _index_rows)
 
-    def index_rows(batches):
-        from nreadability_spark.readability.surt import surt_key
-        for pdf in batches:
-            out = {k: [] for k in ("surt", "url", "warc_epoch", "file",
-                                   "offset", "length", "html_md5")}
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                fname = _os.path.basename(path)
-                for off, length, uri, date, html in \
-                        _iter_warc_records_indexed(bytes(blob)):
-                    out["surt"].append(surt_key(uri))
-                    out["url"].append(uri)
-                    out["warc_epoch"].append(_warc_epoch(date))
-                    out["file"].append(fname)
-                    out["offset"].append(off)
-                    out["length"].append(length)
-                    out["html_md5"].append(
-                        _hashlib.md5(html).hexdigest())
-            yield pd.DataFrame(out)
 
-    return raw.mapInPandas(
-        index_rows, "surt string, url string, warc_epoch long, "
-                    "file string, offset long, length long, "
-                    "html_md5 string")
+def _index_rows(path: str, blob: bytes):
+    from nreadability_spark.readability.surt import surt_key
+    fname = os.path.basename(path)
+    for off, length, uri, date, html in _iter_warc_records_indexed(blob):
+        yield {"surt": surt_key(uri), "url": uri,
+               "warc_epoch": _warc_epoch(date), "file": fname,
+               "offset": off, "length": length,
+               "html_md5": hashlib.md5(html).hexdigest()}
 
 
 def warc_index_write(spark: SparkSession, warc_dir: str, out_dir: str,
@@ -666,52 +654,29 @@ def read_pages_warc_indexed(spark: SparkSession, index_dir: str,
     idx = spark.read.parquet(index_dir)
     if predicate is not None:
         idx = idx.where(predicate)
-    sel = idx.select("file", "offset", "length", "url", "html_md5")
     # shuffle only the tiny index rows: file-key partitions + offset
-    # order give each task sequential forward reads in few files
-    sel = (sel.repartition("file")
-           .sortWithinPartitions("file", "offset"))
+    # order give each task sequential forward reads in few files; the
+    # member grouping reuses the file partitioning (no second exchange)
+    members = (idx.repartition("file")
+               .groupBy("file", "offset", "length")
+               .agg(F.collect_set(F.struct("url", "html_md5")).alias("want"))
+               .sortWithinPartitions("file", "offset"))
 
-    def decode(batches):
-        import hashlib as _hashlib
-        import os as _os
+    def decode(f, off, ln, want):
+        with open(os.path.join(warc_dir, f), "rb") as fh:
+            fh.seek(off)
+            data = fh.read(ln)
+        want = {(w["url"], w["html_md5"]) for w in want}
+        for uri, date, html in _parse_warc_records(data):
+            if (uri, hashlib.md5(html).hexdigest()) in want:
+                yield {"url": uri, "warc_date": date, "html": html,
+                       "file": f, "offset": off, "length": ln,
+                       "bytes_read": len(data)}
 
-        import pandas as pd
-        for pdf in batches:
-            members: dict = {}
-            for f, off, ln, url, md5 in zip(pdf["file"], pdf["offset"],
-                                            pdf["length"], pdf["url"],
-                                            pdf["html_md5"]):
-                members.setdefault((f, int(off), int(ln)),
-                                   set()).add((url, md5))
-            out = {k: [] for k in ("url", "warc_date", "html", "file",
-                                   "offset", "length", "bytes_read")}
-            fh, fh_path = None, None
-            for (f, off, ln), want in sorted(members.items()):
-                path = _os.path.join(warc_dir, f)
-                if fh_path != path:
-                    if fh is not None:
-                        fh.close()
-                    fh, fh_path = open(path, "rb"), path
-                fh.seek(off)
-                data = fh.read(ln)
-                for uri, date, html in _parse_warc_records(data):
-                    key = (uri, _hashlib.md5(html).hexdigest())
-                    if key in want:
-                        out["url"].append(uri)
-                        out["warc_date"].append(date)
-                        out["html"].append(html)
-                        out["file"].append(f)
-                        out["offset"].append(off)
-                        out["length"].append(ln)
-                        out["bytes_read"].append(len(data))
-            if fh is not None:
-                fh.close()
-            yield pd.DataFrame(out)
-
-    pages = sel.mapInPandas(
-        decode, "url string, warc_date string, html binary, "
-                "file string, offset long, length long, bytes_read long")
+    pages = map_rows(
+        members, "url string, warc_date string, html binary, "
+                 "file string, offset long, length long, bytes_read long",
+        decode)
     extra = ("file", "offset", "length", "bytes_read") if with_stats else ()
     return _as_pages(pages, *extra)
 
@@ -754,8 +719,10 @@ def write_pages_warc(pages: DataFrame, out_dir: str,
     driver collect, no per-record files, memory O(largest record).
     ``out_dir`` must be task-reachable storage (shared FS / fuse mount;
     an object-store port swaps ``open`` for a multipart upload).
-    Returns the (file, records) manifest, one row per non-empty
-    segment."""
+    A null url, or one holding CR or LF (it would inject WARC headers),
+    fails the task with a ``ValueError`` naming it, and the task removes
+    its unfinished segment. Returns the (file, records) manifest, one
+    row per non-empty segment."""
     cols = pages.select(
         "url",
         F.expr("date_format(to_utc_timestamp(warc_ts, "
@@ -766,24 +733,27 @@ def write_pages_warc(pages: DataFrame, out_dir: str,
         cols = cols.repartition(num_files)
 
     def write_part(batches):
-        import gzip as _gzip
-        import os as _os
+        import gzip
 
-        import pandas as pd
+        import pyarrow as pa
         from pyspark import TaskContext
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        path = _os.path.join(out_dir, f"part-{pid:05d}.warc.gz")
+        path = os.path.join(out_dir, f"part-{pid:05d}.warc.gz")
         tmp = f"{path}.inprogress-{pid}"
         n = 0
         fh = None
         try:
-            for pdf in batches:
-                for url, date, html in zip(pdf["url"], pdf["warc_date"],
-                                           pdf["html"]):
-                    body = bytes(html) if html is not None else b""
+            for rb in batches:
+                for url, date, html in zip(*(c.to_pylist()
+                                             for c in rb.columns)):
+                    if url is None or "\r" in url or "\n" in url:
+                        raise ValueError(
+                            f"write_pages_warc: url {url!r} cannot be a "
+                            "WARC-Target-URI (null or holds CR/LF)")
                     http = (b"HTTP/1.1 200 OK\r\nContent-Type: "
-                            b"text/html; charset=utf-8\r\n\r\n" + body)
+                            b"text/html; charset=utf-8\r\n\r\n"
+                            + (html or b""))
                     head = (f"WARC/1.0\r\n"
                             f"WARC-Type: response\r\n"
                             f"WARC-Target-URI: {url}\r\n"
@@ -792,19 +762,26 @@ def write_pages_warc(pages: DataFrame, out_dir: str,
                             ).encode("utf-8")
                     if fh is None:
                         fh = open(tmp, "wb")
-                    fh.write(_gzip.compress(head + http + b"\r\n\r\n",
-                                            mtime=0))
+                    fh.write(gzip.compress(head + http + b"\r\n\r\n",
+                                           mtime=0))
                     n += 1
-        finally:
+        except BaseException:
+            # a partial segment must not stay behind: warc_index(out_dir)
+            # loads every file in the directory
             if fh is not None:
                 fh.close()
+                os.remove(tmp)
+            raise
         if fh is not None:
-            _os.replace(tmp, path)
-            yield pd.DataFrame({"file": [_os.path.basename(path)],
-                                "records": [n]})
+            fh.close()
+            os.replace(tmp, path)
+            yield pa.RecordBatch.from_pydict(
+                {"file": [os.path.basename(path)], "records": [n]},
+                schema=pa.schema([("file", pa.string()),
+                                  ("records", pa.int64())]))
 
     os.makedirs(out_dir, exist_ok=True)
-    manifest = cols.mapInPandas(write_part, "file string, records long")
+    manifest = cols.mapInArrow(write_part, "file string, records long")
     # the action lives here so the sink call IS the write (like
     # DataFrame.write); the returned manifest is tiny (one row/segment)
     rows = manifest.collect()

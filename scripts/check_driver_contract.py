@@ -3,7 +3,7 @@ query against its DuckDB oracle at the driver's scale factor (sf0.01)
 and compare rows + schema + sorted canonical values.
 
 tests/test_ops.py covers the SQL ops at sf0.001 on every pytest run;
-this script is the full-surface pre-flight (all 32 queries, kernel
+this script is the full-surface pre-flight (every declared query, kernel
 parquet oracles included, at the exact sf the driver uses).
 
 Usage: python scripts/check_driver_contract.py [sf_dir]

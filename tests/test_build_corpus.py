@@ -119,6 +119,29 @@ def test_robots_filter_gates_pages(spark):
     assert n_fx == fx.where(~F.col("url").rlike("example[.]org")).count()
 
 
+def test_robots_filter_passes_columns_through_unchanged(spark):
+    """Columns other than url must come out of the gate exactly as they
+    went in, under a session time zone that is not UTC: a timestamp
+    rebuilt from Python objects would come back shifted by the zone's
+    offset."""
+    from nreadability_spark.spark.pages import synthesize_pages
+    from nreadability_spark.spark.sources import (robots_filter,
+                                                  synthesize_robots)
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        pages = synthesize_pages(spark, SF_DIR, include_fixtures=False)
+        cols = ["url", "unix_timestamp(warc_ts) as ts", "md5(html) as h"]
+        kept = robots_filter(pages, synthesize_robots(spark))
+        got = {tuple(r) for r in kept.selectExpr(*cols).collect()}
+        want = {tuple(r) for r in pages.selectExpr(*cols).collect()}
+        assert got and got <= want
+        assert all(ts is not None for _, ts, _ in got)
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_robots_filter_survives_empty_and_tiny_partitions(spark):
     """Empty Arrow batches (empty partitions / fully-filtered batches)
     must not break the gate's row mask (regression: an empty boolean

@@ -79,3 +79,40 @@ def test_indexed_read_empty_selection(spark, warc_dir, index_dir):
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == \
         ["url", "warc_ts", "html", "text", "lang"]
+
+
+def _record(url: str, html: bytes) -> bytes:
+    from nreadability_spark.spark.pages import _warc_head
+    http = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html
+    return _warc_head("response", url, "2026-01-01T00:00:00Z",
+                      len(http)) + http + b"\r\n\r\n"
+
+
+def test_indexed_read_of_multi_record_member(spark, tmp_path):
+    """A whole-file-gzip WARC is one member holding every record: the
+    member is read once and only the selected records come back, through
+    one exchange (the member grouping reuses the file partitioning)."""
+    import contextlib
+    import gzip
+    import io
+    import re
+    warc = tmp_path / "warc"
+    warc.mkdir()
+    urls = [f"https://multi.example.org/p{i}" for i in range(3)]
+    (warc / "whole.warc.gz").write_bytes(gzip.compress(b"".join(
+        _record(u, f"<html><p>page {i}</p></html>".encode())
+        for i, u in enumerate(urls)), mtime=0))
+    idx = str(tmp_path / "cdx")
+    warc_index_write(spark, str(warc), idx, n_shards=2)
+    df = read_pages_warc_indexed(
+        spark, idx, str(warc), f"url in ('{urls[0]}', '{urls[2]}')",
+        with_stats=True)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    assert len(re.findall(r"^\(\d+\) Exchange", buf.getvalue(),
+                          re.MULTILINE)) == 1
+    got = df.collect()
+    assert sorted(r["url"] for r in got) == [urls[0], urls[2]]
+    assert len({(r["file"], r["offset"], r["length"]) for r in got}) == 1
+    assert all(r["bytes_read"] == r["length"] for r in got)

@@ -89,3 +89,25 @@ def test_output_is_indexable(spark, pages, written):
     member = blob[r["offset"]:r["offset"] + r["length"]]
     rec = gzip.decompress(member)
     assert f"WARC-Target-URI: {r['url']}".encode() in rec
+
+
+@pytest.mark.parametrize("bad_url", [
+    None,
+    "https://a.example.org/x\r\nWARC-Type: request",
+    "https://a.example.org/y\nX-Injected: 1",
+], ids=["null", "crlf", "lf"])
+def test_bad_url_raises_and_leaves_no_file(spark, tmp_path, bad_url):
+    """A null url came back as the string 'None' and a CR/LF url injected
+    a header that made the reader drop the record; both must fail the
+    write, and the failed task must not leave a partial segment that
+    warc_index(out_dir) would pick up."""
+    import datetime as dt
+    ts = dt.datetime(2026, 1, 1)
+    rows = [(f"https://a.example.org/ok{i}", ts, b"<html>ok</html>")
+            for i in range(3)] + [(bad_url, ts, b"<html>bad</html>")]
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary").coalesce(1)
+    out = tmp_path / "warc-bad"
+    with pytest.raises(Exception, match="cannot be a WARC-Target-URI"):
+        write_pages_warc(pages, str(out), num_files=1)
+    assert os.listdir(out) == []
