@@ -93,18 +93,13 @@ def _cut_lineage(df: DataFrame) -> DataFrame:
 
     Default is ``localCheckpoint`` (blocks live on executors — fastest, but
     on a real cluster an executor loss after the cut is unrecoverable and
-    restarts the job). Setting ``spark.nreadability.checkpointDir`` (or the
-    ``NREADABILITY_CHECKPOINT_DIR`` env var) switches every iterative op in
-    this module — and the multi-page stitcher — to reliable
-    ``checkpoint()`` into that directory, the fault-tolerant 100 TB path.
+    restarts the job). Setting ``spark.nreadability.checkpointDir``
+    switches every iterative op in this module — and the multi-page
+    stitcher — to reliable ``checkpoint()`` into that directory, the
+    fault-tolerant 100 TB path.
     """
     spark = df.sparkSession
-    cdir = None
-    try:
-        cdir = spark.conf.get("spark.nreadability.checkpointDir", None)
-    except Exception:
-        cdir = None
-    cdir = cdir or os.environ.get("NREADABILITY_CHECKPOINT_DIR")
+    cdir = spark.conf.get("spark.nreadability.checkpointDir", None)
     if cdir:
         sc = spark.sparkContext
         if not sc.getCheckpointDir():

@@ -11,16 +11,15 @@ already a row, so stitching becomes:
    shrinks geometrically, and each round anti-joins the accumulated
    membership so link cycles terminate;
 3. group each chain's pages and run the *same* single-document
-   WebTranscoder kernel per chain inside ``applyInPandas``, with a
-   dict-backed fetcher — output is byte-identical to the single-node
-   multi-page transcoder on the same pages.
+   WebTranscoder kernel per chain inside ``applyInArrow`` (one Arrow
+   table in, one row out), with a dict-backed fetcher — output is
+   byte-identical to the single-node multi-page transcoder on the same
+   pages.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (BooleanType, IntegerType, StringType,
                                StructField, StructType)
@@ -91,39 +90,31 @@ def chain_membership(spark: SparkSession, pages: DataFrame,
     return chains
 
 
-def _stitch_group(pdf: pd.DataFrame) -> pd.DataFrame:
+def _stitch_group(chain: pa.Table) -> pa.Table:
+    """applyInArrow group fn: one chain's (root_url, url, html) rows ->
+    one STITCH_SCHEMA row, stitched from the root by WebTranscoder over
+    a dict fetcher of the chain's own pages."""
     import sys
     sys.setrecursionlimit(40000)
-    from nreadability_spark.readability.webtranscoder import WebTranscoder
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from nreadability_spark.readability.encoding import decode_html_bytes
+    from nreadability_spark.readability.webtranscoder import WebTranscoder
 
-    root = pdf["root_url"].iloc[0]
-    page_map = {}
-    for url, html in zip(pdf["url"], pdf["html"]):
-        if html is not None:
-            page_map[url] = decode_html_bytes(bytes(html))
-
-    def fetch(url: str):
-        return page_map.get(url)
-
+    root = chain.column("root_url")[0].as_py()
+    page_map = {url: decode_html_bytes(html)
+                for url, html in zip(chain.column("url").to_pylist(),
+                                     chain.column("html").to_pylist())
+                if html is not None}
+    row = {"root_url": root, "n_pages": chain.num_rows}
     try:
-        wt = WebTranscoder(fetcher=fetch)
-        result = wt.transcode(root)
-        return pd.DataFrame([{
-            "root_url": root,
-            "extracted": bool(result.content_extracted),
-            "title": result.title,
-            "content": result.content,
-            "n_pages": int(len(pdf)),
-            "error": None,
-        }])
+        result = WebTranscoder(fetcher=page_map.get).transcode(root)
+        row.update(extracted=bool(result.content_extracted),
+                   title=result.title, content=result.content, error=None)
     except Exception as exc:
-        return pd.DataFrame([{
-            "root_url": root, "extracted": False, "title": None,
-            "content": None, "n_pages": int(len(pdf)),
-            "error": f"{type(exc).__name__}: {exc}"[:500],
-        }])
+        row.update(extracted=False, title=None, content=None,
+                   error=f"{type(exc).__name__}: {exc}"[:500])
+    return pa.Table.from_pylist([row], schema=to_arrow_schema(STITCH_SCHEMA))
 
 
 def stitch_multipage(spark: SparkSession, pages: DataFrame,
@@ -143,4 +134,4 @@ def stitch_multipage(spark: SparkSession, pages: DataFrame,
     return (members
             .repartition(F.xxhash64("root_url"))
             .groupBy("root_url")
-            .applyInPandas(_stitch_group, STITCH_SCHEMA))
+            .applyInArrow(_stitch_group, STITCH_SCHEMA))

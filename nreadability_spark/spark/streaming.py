@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .job import OUT_SCHEMA, _extract_batches_arrow, ensure_package_shipped
+from .job import run_extraction
 from .sources import warc_pages
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
@@ -44,13 +44,12 @@ def read_pages_warc_stream(spark: SparkSession, source_dir: str,
 
 
 def extract_stream(pages_stream: DataFrame) -> DataFrame:
-    """Streaming extraction: same kernel, same output schema, same serde
-    as the batch path (mapInArrow); no shuffle (stateless map), so
-    micro-batch latency is the batch's own compute."""
-    spark = pages_stream.sparkSession
-    ensure_package_shipped(spark)
-    return (pages_stream.select("url", "html")
-            .mapInArrow(_extract_batches_arrow, OUT_SCHEMA))
+    """Streaming extraction: the batch path's ``run_extraction`` — same
+    kernel, output schema and Arrow serde — without its salted exchange
+    (a stateless map), so micro-batch latency is the batch's own
+    compute."""
+    return run_extraction(pages_stream.sparkSession, pages_stream,
+                          num_partitions=0)
 
 
 def run_extract_stream(spark: SparkSession, source_dir: str, out_dir: str,
@@ -67,38 +66,16 @@ def run_extract_stream(spark: SparkSession, source_dir: str, out_dir: str,
     return writer.start()
 
 
-HOST_STATE_SCHEMA = "docs long, bytes long"
-HOST_OUT_SCHEMA = "host string, docs long, bytes long"
-
-
-def _update_host_state(key, pdfs, state):
-    """applyInPandasWithState update fn: running per-host document and
-    byte counters across micro-batches (custom stateful operator)."""
-    import pandas as pd
-    docs, nbytes = state.get if state.exists else (0, 0)
-    for pdf in pdfs:
-        docs += len(pdf)
-        nbytes += int(pdf["html_len"].sum())
-    state.update((docs, nbytes))
-    yield pd.DataFrame({"host": [key[0]], "docs": [docs],
-                        "bytes": [nbytes]})
-
-
 def host_totals_stream(pages_stream: DataFrame) -> DataFrame:
-    """Stateful per-host running totals via applyInPandasWithState — the
-    pattern for custom stateful operators (dedupe windows, quota tracking)
-    that watermarked aggregations can't express."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    """Per-host running document and byte totals: a built-in streaming
+    aggregation — in update mode each micro-batch re-emits the running
+    row of every host it touched, with the state kept in the JVM."""
     hosts = pages_stream.select(
         F.regexp_extract("url", r"https?://([^/]+)/", 1).alias("host"),
         F.length("html").alias("html_len"))
     return (hosts.groupBy("host")
-            .applyInPandasWithState(
-                _update_host_state,
-                outputStructType=HOST_OUT_SCHEMA,
-                stateStructType=HOST_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))
+            .agg(F.count("*").alias("docs"),
+                 F.sum("html_len").alias("bytes")))
 
 
 DEDUP_STATE_SCHEMA = "n_seen long, first_url string"
@@ -139,10 +116,6 @@ def _make_dedup_update(state_ttl_ms: int | None):
                                 "first_seen": [seen == 0],
                                 "n_seen": [seen + batch_n]})
     return _dedup_update
-
-
-# default (unbounded) form, kept importable for tests/compat
-_dedup_update = _make_dedup_update(None)
 
 
 def dedup_stream(pages_stream: DataFrame,

@@ -1,5 +1,6 @@
 """Dataset-level multi-page stitching == single-node WebTranscoder,
-byte-for-byte, over the reference's 11 saved page chains."""
+byte-for-byte: over the reference's 11 saved page chains, and in-process
+over synthesized chains through the Arrow group function."""
 
 import os
 
@@ -8,6 +9,7 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 from nreadability_spark.readability.webtranscoder import WebTranscoder  # noqa: E402
+from tests.test_plans import SF_DIR  # noqa: E402
 from tests.test_webtranscoder import URLS, make_fetcher  # noqa: E402
 
 WEB_DIR = "/root/reference/Carbon.Readability.Tests/SampleWebInput"
@@ -84,11 +86,14 @@ def test_stitch_releases_edge_cache(spark):
     both Python and JVM GC."""
     import gc
     import time
+    from nreadability_spark.spark.pages import synthesize_chained_pages
     from nreadability_spark.spark.stitch import stitch_multipage
-    pages = spark.createDataFrame(load_web_pages(),
-                                  "url string, html binary")
+    pages = synthesize_chained_pages(spark, SF_DIR)
     out = stitch_multipage(spark, pages)
-    out.count()
+    # every 5th of the 500 docs is a 3-page chain; all stitch cleanly
+    assert tuple(out.selectExpr("count(*)", "count(error)",
+                                "min(n_pages)", "max(n_pages)").first()) \
+        == (100, 0, 3, 3)
     del out
     pinned = None
     deadline = time.time() + 30
@@ -102,3 +107,50 @@ def test_stitch_releases_edge_cache(spark):
             break
         time.sleep(1)
     assert pinned == []
+
+
+def _chain_table(doc_id, text, n_pages=3):
+    """One synthesized chain's rows as stitch_multipage hands them to the
+    group fn: (url, root_url, page_no, html)."""
+    import pyarrow as pa
+    from nreadability_spark.spark.pages import chained_page_py
+    pages = [chained_page_py(doc_id, text, k, n_pages)
+             for k in range(1, n_pages + 1)]
+    return pa.table({
+        "url": [u for u, _h in pages],
+        "root_url": [pages[0][0]] * n_pages,
+        "page_no": pa.array(range(1, n_pages + 1), pa.int32()),
+        "html": pa.array([h.encode("utf-8") for _u, h in pages],
+                         pa.binary())})
+
+
+def test_stitch_group_matches_single_node():
+    from nreadability_spark.readability.encoding import decode_html_bytes
+    from nreadability_spark.spark.stitch import STITCH_SCHEMA, _stitch_group
+    chain = _chain_table(10, "Stitching keeps every page of an article " * 6)
+    root = chain.column("url")[0].as_py()
+
+    out = _stitch_group(chain)
+
+    pages = {u: decode_html_bytes(h)
+             for u, h in zip(chain.column("url").to_pylist(),
+                             chain.column("html").to_pylist())}
+    local = WebTranscoder(fetcher=pages.get).transcode(root)
+    assert "readability-page-3" in local.content
+    assert out.schema.names == STITCH_SCHEMA.names
+    assert out.to_pylist() == [{
+        "root_url": root, "extracted": local.content_extracted,
+        "title": local.title, "content": local.content, "n_pages": 3,
+        "error": None}]
+
+
+def test_stitch_group_null_root_html():
+    import pyarrow as pa
+    from nreadability_spark.spark.stitch import _stitch_group
+    chain = _chain_table(20, "body text")
+    html = chain.column("html").to_pylist()
+    chain = chain.set_column(3, "html", pa.array([None] + html[1:],
+                                                 pa.binary()))
+    assert _stitch_group(chain).to_pylist() == [{
+        "root_url": chain.column("url")[0].as_py(), "extracted": False,
+        "title": None, "content": None, "n_pages": 3, "error": None}]
