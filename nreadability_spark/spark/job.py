@@ -29,6 +29,7 @@ import time
 import zipfile
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (BooleanType, LongType, StringType,
                                StructField, StructType)
@@ -44,12 +45,6 @@ OUT_SCHEMA = StructType([
     StructField("html_bytes", LongType()),
     StructField("elapsed_us", LongType()),
 ])
-
-METRICS_SCHEMA = ("run_id string, partition_id int, docs long, "
-                  "extracted long, parse_failures long, "
-                  "avg_content_len double, max_doc_bytes long, "
-                  "elapsed_ms long")
-
 
 _SHIPPED: set[int] = set()
 
@@ -357,8 +352,14 @@ def run_job(spark: SparkSession, pages: DataFrame, out_dir: str,
     if resume:
         try:
             done = spark.read.parquet(extracted_path)
-        except Exception:
-            done = None
+        except AnalysisException as e:
+            # nothing committed yet: a fresh out_dir, or an extracted/
+            # holding no parquet (empty, or only _temporary). Any other
+            # read error must not silently re-extract and re-append
+            # every url.
+            if e.getCondition() not in ("PATH_NOT_FOUND",
+                                        "UNABLE_TO_INFER_SCHEMA"):
+                raise
 
     out = run_extraction(spark, pages, num_partitions, done_urls=done)
     out = (out

@@ -15,6 +15,7 @@ Engine-parity rules used throughout (so value-hashes match exactly):
 from __future__ import annotations
 
 import os
+import shutil
 import warnings
 from functools import partial as _partial
 
@@ -740,14 +741,9 @@ def _drop_bucketed_table(spark: SparkSession, table: str) -> None:
     earlier write leaves the dir behind and saveAsTable then refuses
     with LOCATION_ALREADY_EXISTS)."""
     spark.sql(f"drop table if exists {table}")
-    try:
-        import shutil
-        wh = spark.conf.get("spark.sql.warehouse.dir",
-                            "spark-warehouse").replace("file:", "")
-        shutil.rmtree(os.path.join(wh, table.split(".")[-1]),
-                      ignore_errors=True)
-    except Exception:
-        pass
+    wh = spark.conf.get("spark.sql.warehouse.dir",
+                        "spark-warehouse").replace("file:", "")
+    shutil.rmtree(os.path.join(wh, table.split(".")[-1]), ignore_errors=True)
 
 
 def _save_bands(bands: DataFrame, table: str, mode: str) -> None:
@@ -907,27 +903,6 @@ DEDUP_SIMHASH_SQL = f"""
            cast(bit_count(xor(sim1, sim2)) as bigint) as hamming
     from pairs where bit_count(xor(sim1, sim2)) <= {_HAMMING_MAX}
 """
-
-
-def simhash_bands_build(spark: SparkSession, sf_dir: str,
-                        table: str = "simhash_bands") -> None:
-    """Materialize the (capped) simhash band table BUCKETED on the join
-    key — the co-located-join storage layout: both sides of the banded
-    self-join then read pre-bucketed files and the join runs with ZERO
-    exchanges (plan-locked in tests/test_plans.py). At 100 TB this is
-    how the candidate-pair pass avoids shuffling the band table twice
-    per run."""
-    bands = _cap_buckets(_simhash_bands_of(simhash(spark, sf_dir)))
-    _drop_bucketed_table(spark, table)
-    _save_bands(bands, table, "overwrite")
-
-
-def dedup_simhash_bucketed(spark: SparkSession,
-                           table: str = "simhash_bands") -> DataFrame:
-    """The banded near-dup self-join over the bucketed band table built
-    by ``simhash_bands_build``: same rows as dedup_simhash, but the join
-    reads co-located buckets — no exchange on either side."""
-    return _hamming_pairs(_band_pairs(spark.table(table)))
 
 
 def simhash_index_build(spark: SparkSession, sf_dir: str,
@@ -1211,29 +1186,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
     # the shingle explode + 16 min-aggs per consumer (see dedup_simhash)
     bands = _cut_lineage(_minhash_bands(sig))
     return _distinct_pairs(_band_pairs(_cap_buckets(bands)))
-
-
-def minhash_bands_build(spark: SparkSession, sf_dir: str,
-                        table: str = "minhash_bands") -> None:
-    """Materialize the (capped) minhash band table BUCKETED on the join
-    key — the same co-located-join storage layout simhash_bands_build
-    proves out: both sides of the banded self-join read pre-bucketed
-    files and the join runs with ZERO exchanges (plan-locked). At 100 TB
-    the signature pass runs once per corpus snapshot and every dedup /
-    clustering consumer joins against the layout for free."""
-    bands = _cap_buckets(_minhash_bands(
-        minhash_signatures(spark, sf_dir)))
-    _drop_bucketed_table(spark, table)
-    _save_bands(bands, table, "overwrite")
-
-
-def dedup_minhash_bucketed(spark: SparkSession,
-                           table: str = "minhash_bands") -> DataFrame:
-    """The LSH candidate-pair self-join over the bucketed band table
-    built by ``minhash_bands_build``: same rows as dedup_minhash_lsh,
-    but the join reads co-located buckets — no exchange on either
-    side."""
-    return _distinct_pairs(_band_pairs(spark.table(table)))
 
 
 def minhash_index_build(spark: SparkSession, sf_dir: str,
@@ -3086,10 +3038,6 @@ HOST_PAGERANK_SQL = _host_pagerank_sql()
 
 # --- as-of / range joins (time-series ops Spark lacks natively) -----------------
 
-_EVENTS_BASE_SPARK = (
-    "select event_id, user_id, event_type,"
-    " unix_micros(cast(ts as timestamp)) as ts_us,"
-    " cast(floor(value * 100) as bigint) as value_cents")
 _EVENTS_BASE_DUCK = (
     "select event_id, user_id, event_type, epoch_us(ts) as ts_us,"
     " cast(floor(value * 100) as bigint) as value_cents from events")

@@ -1,9 +1,10 @@
-"""Input/output adapters: Iceberg tables with parquet fallback.
+"""Source adapters: page tables, WARC archives, and per-host robots.txt
+and sitemap directories.
 
 The production source per BASELINE.json input_hint is an Iceberg table of
-pages. This sandbox has no Iceberg runtime jars, so adapters probe for the
-catalog and fall back to parquet paths with identical schemas — the only
-difference on a real cluster is the session's catalog config.
+pages. ``read_pages`` reads a table ref through the Iceberg source, or
+through the session catalog when no Iceberg runtime is on the classpath;
+a parquet path is read directly, with the same schema.
 """
 
 from __future__ import annotations
@@ -12,11 +13,10 @@ import hashlib
 import os
 import re
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .job import ensure_package_shipped, map_rows
-
-PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
 
 def _is_table_ref(ref: str) -> bool:
@@ -29,21 +29,18 @@ def read_pages(spark: SparkSession, ref: str) -> DataFrame:
     if _is_table_ref(ref):
         try:
             return spark.read.format("iceberg").load(ref)
-        except Exception:
+        except Py4JJavaError as e:
+            # no Iceberg runtime on the classpath: read the session
+            # catalog. Any error from a real Iceberg catalog surfaces
+            # (its exceptions need not carry a Spark error condition).
+            j = e.java_exception
+            if (j.getClass().getName()
+                    != "org.apache.spark.SparkClassNotFoundException"
+                    or j.getCondition() != "DATA_SOURCE_NOT_FOUND"):
+                raise
             return spark.read.table(ref)
     return spark.read.parquet(ref)
 
-
-def write_append(df: DataFrame, ref: str) -> None:
-    """Idempotent append to an Iceberg table or parquet path."""
-    if _is_table_ref(ref):
-        try:
-            df.writeTo(ref).append()
-            return
-        except Exception:
-            df.write.mode("append").saveAsTable(ref)
-            return
-    df.write.mode("append").parquet(ref)
 
 # --- WARC (Common Crawl's native format) ----------------------------------------
 #

@@ -226,37 +226,6 @@ def test_training_mix_uses_semi_joins(spark):
     assert "LeftSemi" in plan
 
 
-@pytest.mark.parametrize("sketch", ["minhash", "simhash"])
-def test_bucketed_band_join_has_no_exchange(spark, sketch):
-    """The bucketed band-table layout must make the banded self-join
-    exchange-free (both sides read co-located buckets on the join key),
-    with rows identical to the shuffle-based dedup_minhash_lsh /
-    dedup_simhash."""
-    from nreadability_spark.spark import ops
-    base = (ops.dedup_minhash_lsh if sketch == "minhash"
-            else ops.dedup_simhash)
-    table = f"t_{sketch}_bands_plan"
-    getattr(ops, f"{sketch}_bands_build")(spark, SF_DIR, table=table)
-    # at test scale Spark would just broadcast the tiny table; disable
-    # that so the plan shows what a 100 TB band table would do
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = getattr(ops, f"dedup_{sketch}_bucketed")(spark, table=table)
-        plan = plan_of(df)
-        assert "SortMergeJoin" in plan
-        assert "SelectedBucketsCount" in plan  # bucketed scans feed it
-        # no shuffle feeds the join: an unbucketed self-join would need
-        # two Exchanges for its sides plus one for the distinct agg; the
-        # bucketed layout leaves ONLY the distinct's
-        assert node_count(plan, "Exchange") == 1
-        assert "BroadcastExchange" not in plan
-        got = sorted(map(tuple, df.collect()))
-        assert got == sorted(map(tuple, base(spark, SF_DIR).collect()))
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql(f"drop table if exists {table}")
-
-
 def test_vocab_build_has_mapside_partial_agg(spark):
     """The document-frequency count must partial-aggregate before its
     exchange (map-side combine on the exploded token stream), and the

@@ -8,8 +8,10 @@ import pytest
 
 pyspark = pytest.importorskip("pyspark")
 
+from py4j.protocol import Py4JJavaError  # noqa: E402
 from nreadability_spark.readability import transcode  # noqa: E402
 from nreadability_spark.spark.job import run_extraction, run_job  # noqa: E402
+from nreadability_spark.spark import pages as pages_mod  # noqa: E402
 from nreadability_spark.spark.pages import (  # noqa: E402
     synthesize_pages, template_html_py, template_url_py)
 
@@ -36,7 +38,11 @@ def test_pages_schema(pages):
     types = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
     assert types["html"] == "binary"
     assert types["warc_ts"] == "timestamp"
-    assert pages.count() > 500
+    # the corpus is every documents row plus every fixture page (none
+    # where the fixture directory is missing): nothing dropped, no dupes
+    n_docs = pages.sparkSession.read.parquet(
+        os.path.join(SF_DIR, "documents.parquet")).count()
+    assert pages.count() == n_docs + len(pages_mod.fixture_rows())
 
 
 def test_fixture_rows_warns_when_fixture_dir_is_empty(tmp_path, monkeypatch):
@@ -44,7 +50,6 @@ def test_fixture_rows_warns_when_fixture_dir_is_empty(tmp_path, monkeypatch):
     silently: fixture_rows() warns and names the directory."""
     import re
 
-    from nreadability_spark.spark import pages as pages_mod
     monkeypatch.setattr(pages_mod, "FIXTURE_DIR", str(tmp_path))
     with pytest.warns(UserWarning, match=re.escape(str(tmp_path))):
         assert pages_mod.fixture_rows() == []
@@ -158,6 +163,57 @@ def test_run_job_rejects_flat_legacy_layout(spark, pages, tmp_path_factory):
     with pytest.raises(ValueError, match="pre-run_id-partitioned"):
         run_job(spark, pages, out_dir, run_id="rX", num_partitions=2)
     shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def test_run_job_resume_read_error_surfaces(spark, pages, tmp_path):
+    """A committed sink that cannot be read must fail the resume read
+    instead of turning resume off: re-extracting would append every url
+    a second time."""
+    out_dir = str(tmp_path)
+    old = os.path.join(out_dir, "extracted", "run_id=old")
+    os.makedirs(old)
+    with open(os.path.join(old, "part-0.parquet"), "wb") as f:
+        f.write(b"PAR1 not really parquet")
+    with pytest.raises(Py4JJavaError):
+        run_job(spark, pages.limit(8), out_dir, run_id="new",
+                num_partitions=2)
+    assert not os.path.exists(
+        os.path.join(out_dir, "extracted", "run_id=new"))
+
+
+def test_run_job_resumes_from_uncommitted_sink(spark, pages, tmp_path):
+    """An extracted/ that a crashed first run left holding only
+    _temporary has nothing committed: the resume read turns resume off
+    and the run processes every page."""
+    out_dir = str(tmp_path)
+    os.makedirs(os.path.join(out_dir, "extracted", "_temporary", "0"))
+    few = pages.limit(4)
+    assert run_job(spark, few, out_dir, run_id="r1",
+                   num_partitions=2)["docs"] == 4
+
+
+def test_read_pages_table_ref_and_parquet_path(spark, pages, tmp_path):
+    """A table ref falls back from the (absent) Iceberg source to the
+    session catalog; a parquet path reads directly; a missing table ref
+    surfaces the catalog's error instead of a fallback's."""
+    from pyspark.errors import AnalysisException
+
+    from nreadability_spark.spark.sources import read_pages
+    sample = pages.select("url", "lang").orderBy("url").limit(5)
+    want = sorted(map(tuple, sample.collect()))
+    table = "t_read_pages"
+    spark.sql(f"drop table if exists {table}")
+    sample.write.saveAsTable(table)
+    try:
+        assert sorted(map(tuple, read_pages(spark, table).collect())) == want
+    finally:
+        spark.sql(f"drop table if exists {table}")
+    path = str(tmp_path / "pages.parquet")
+    sample.write.parquet(path)
+    assert sorted(map(tuple, read_pages(spark, path).collect())) == want
+    with pytest.raises(AnalysisException) as err:
+        read_pages(spark, "t_read_pages_missing")
+    assert err.value.getCondition() == "TABLE_OR_VIEW_NOT_FOUND"
 
 
 def test_failure_rows_are_counted(spark, pages):
