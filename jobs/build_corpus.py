@@ -35,61 +35,53 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 
-def build_corpus(spark, pages, out_dir: str, robots=None,
-                 sitemaps=None, index_table: str | None = None) -> dict:
-    """Run the full funnel; returns the stage-count summary dict.
+def _crawl_prelude(spark, pages, out_dir: str, robots, sitemaps,
+                   summary: dict):
+    """The crawl side of a build; returns the pages it may extract.
 
-    Staged layout under ``out_dir``:
-      raw/documents.parquet     extracted text, lang='' (pre language-ID)
-                                + page_md5 (raw-page fingerprint, the
-                                identity --incremental diffs against)
-      corpus/documents.parquet  + detected lang (the ops' working corpus)
-      final/documents.parquet   after dedup ∩ quality ∩ sample
-      packed.parquet            (stream, doc_id, n_tokens, bin, bin_offset)
+    Sitemaps parse into the frontier seed table (next cycle's fetch
+    list): a side output, not a gate on this cycle's pages. Robots gate
+    urls through per-host robots.txt BEFORE any extraction work is spent
+    on them (REP default: hosts without a robots row pass).
+    """
+    from nreadability_spark.spark import ops
+    from nreadability_spark.spark.sources import robots_filter
 
-    ``index_table``: also persist the corpus's full MinHash band index
-    under that Spark-catalog table name, so later ``--incremental`` runs
-    dedup their delta against it without re-self-joining the corpus.
+    if sitemaps is not None:
+        frontier = ops.parse_sitemaps(sitemaps)
+        frontier.write.mode("overwrite").parquet(
+            os.path.join(out_dir, "frontier.parquet"))
+        summary["frontier_urls"] = spark.read.parquet(
+            os.path.join(out_dir, "frontier.parquet")).count()
+    if robots is not None:
+        pages = robots_filter(pages, robots)
+        summary["robots_allowed"] = pages.count()
+    return pages
+
+
+def _extract_and_stage(spark, pages, raw_dir: str, doc_dir: str,
+                       summary: dict) -> None:
+    """Extract ``pages`` and stage every usable result in the ops'
+    documents shape: ``raw_dir`` with lang='' (pre language-ID), then
+    ``doc_dir`` with the detected lang.
+
+    doc_id = abs(xxhash64(url)): stable per run, which is all the
+    downstream ops need (a production pipeline would carry url as the
+    key; 64-bit collisions at 1e12 docs affect ~1e-7 of pairs and only
+    merge their dedup identity). page_md5 fingerprints the RAW page
+    bytes — the change-detection identity an incremental recrawl diffs
+    against (one url-key join to bring it alongside the extraction
+    output).
     """
     from pyspark.sql import functions as F
     from nreadability_spark.spark.job import run_extraction
     from nreadability_spark.spark import ops
 
-    summary: dict = {"pages": pages.count()}
-
-    # -1. crawl discovery: parse fetched sitemap blobs into the frontier
-    # seed table (next cycle's fetch list) — a side output, not a gate
-    # on this cycle's pages
-    if sitemaps is not None:
-        from nreadability_spark.spark.ops import parse_sitemaps
-        frontier = parse_sitemaps(sitemaps)
-        frontier.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "frontier.parquet"))
-        summary["frontier_urls"] = spark.read.parquet(
-            os.path.join(out_dir, "frontier.parquet")).count()
-
-    # 0. crawl politeness: gate urls through per-host robots.txt BEFORE
-    # any extraction work is spent on them (REP default: hosts without
-    # a robots row pass)
-    if robots is not None:
-        from nreadability_spark.spark.sources import robots_filter
-        pages = robots_filter(pages, robots)
-        summary["robots_allowed"] = pages.count()
-
-    # 1. extraction (the engine's hot path: pruned scan -> mapInArrow)
+    # the engine's hot path: pruned scan -> mapInArrow
     extracted = run_extraction(spark, pages)
     ok = extracted.where(
         F.col("extracted") & F.col("error").isNull()
         & (F.length(F.coalesce(F.col("content_text"), F.lit(""))) > 0))
-
-    # 2. stage as the ops' documents shape. doc_id = abs(xxhash64(url)):
-    # stable per run, which is all the downstream ops need (a production
-    # pipeline would carry url as the key; 64-bit collisions at 1e12 docs
-    # affect ~1e-7 of pairs and only merge their dedup identity).
-    # page_md5 fingerprints the RAW page bytes — the change-detection
-    # identity an incremental recrawl diffs against (one url-key join to
-    # bring it alongside the extraction output).
-    raw_dir = os.path.join(out_dir, "raw")
     fps = pages.select("url", F.md5("html").alias("page_md5"))
     (ok.join(fps, "url")
      .select(
@@ -104,48 +96,39 @@ def build_corpus(spark, pages, out_dir: str, robots=None,
     summary["extracted"] = spark.read.parquet(
         os.path.join(raw_dir, "documents.parquet")).count()
 
-    # 3. language ID -> the working corpus the quality/sampling ops see
     lang = ops.lang_id(spark, raw_dir).select("doc_id", "detected_lang")
-    corpus_dir = os.path.join(out_dir, "corpus")
     (spark.read.parquet(os.path.join(raw_dir, "documents.parquet"))
      .drop("lang")
      .join(lang, "doc_id")
      .withColumnRenamed("detected_lang", "lang")
      .select("doc_id", "text", "lang", "source", "n_chars", "page_md5")
      .write.mode("overwrite")
-     .parquet(os.path.join(corpus_dir, "documents.parquet")))
+     .parquet(os.path.join(doc_dir, "documents.parquet")))
 
-    # 4. the funnel: near-dup representatives ∩ quality ∩ sample.
-    # Each leg is an oracle-checked operator reading corpus_dir; the
-    # composition is three left-semi joins (the training_mix shape).
-    # demo_dups=False: dedup the extracted corpus AS-IS — the driver
-    # demos inject synthetic near/exact dups, which a production funnel
-    # must not (after_dedup would count clusters of fabricated variants,
-    # and an injected doc_id could collide with a real one at scale).
-    reps = ops.dedup_keep_representatives(spark, corpus_dir,
-                                          demo_dups=False) \
-        .select("doc_id")
-    quality = ops.gopher_quality(spark, corpus_dir) \
+
+def _gate(spark, doc_dir: str, reps):
+    """The funnel over the documents staged in ``doc_dir``: near-dup
+    representatives ``reps`` ∩ Gopher quality ∩ stratified sample, as
+    three left-semi joins (the training_mix shape). Returns the kept
+    documents and the quality and sample doc_id sets."""
+    from nreadability_spark.spark import ops
+
+    quality = ops.gopher_quality(spark, doc_dir) \
         .where("passes").select("doc_id")
-    sampled = ops.stratified_sample(spark, corpus_dir).select("doc_id")
+    sampled = ops.stratified_sample(spark, doc_dir).select("doc_id")
+    kept = (spark.read.parquet(os.path.join(doc_dir, "documents.parquet"))
+            .join(reps, "doc_id", "left_semi")
+            .join(quality, "doc_id", "left_semi")
+            .join(sampled, "doc_id", "left_semi"))
+    return kept, quality, sampled
 
-    corpus = spark.read.parquet(
-        os.path.join(corpus_dir, "documents.parquet"))
-    final = (corpus
-             .join(reps, "doc_id", "left_semi")
-             .join(quality, "doc_id", "left_semi")
-             .join(sampled, "doc_id", "left_semi"))
-    final_dir = os.path.join(out_dir, "final")
-    final.write.mode("overwrite").parquet(
-        os.path.join(final_dir, "documents.parquet"))
 
-    summary["after_dedup"] = reps.count()
-    summary["after_quality"] = quality.count()
-    summary["after_sample"] = sampled.count()
-    summary["final_docs"] = spark.read.parquet(
-        os.path.join(final_dir, "documents.parquet")).count()
+def _pack(spark, final_dir: str, out_dir: str, summary: dict) -> None:
+    """Pack the final corpus into fixed-budget training sequences
+    (``packed.parquet``) and record the packing stats."""
+    from pyspark.sql import functions as F
+    from nreadability_spark.spark import ops
 
-    # 5. pack the surviving corpus into fixed-budget training sequences
     packed = ops.pack_sequences(spark, final_dir)
     packed_path = os.path.join(out_dir, "packed.parquet")
     packed.write.mode("overwrite").parquet(packed_path)
@@ -157,7 +140,51 @@ def build_corpus(spark, pages, out_dir: str, robots=None,
     summary["packed_tokens"] = int(stats["tokens"] or 0)
     summary["packed_bins"] = stats["bins"]
 
-    # 6. (opt) persist the corpus's band index for later --incremental
+
+def build_corpus(spark, pages, out_dir: str, robots=None,
+                 sitemaps=None, index_table: str | None = None) -> dict:
+    """Run the full funnel; returns the stage-count summary dict.
+
+    Staged layout under ``out_dir``:
+      raw/documents.parquet     extracted text, lang='' (pre language-ID)
+      corpus/documents.parquet  + detected lang (the ops' working corpus),
+                                + page_md5 (raw-page fingerprint, the
+                                identity --incremental diffs against)
+      final/documents.parquet   after dedup ∩ quality ∩ sample
+      packed.parquet            (stream, doc_id, n_tokens, bin, bin_offset)
+
+    ``index_table``: also persist the corpus's full MinHash band index
+    under that Spark-catalog table name, so later ``--incremental`` runs
+    dedup their delta against it without re-self-joining the corpus.
+    """
+    from nreadability_spark.spark import ops
+
+    summary: dict = {"pages": pages.count()}
+    pages = _crawl_prelude(spark, pages, out_dir, robots, sitemaps, summary)
+    corpus_dir = os.path.join(out_dir, "corpus")
+    _extract_and_stage(spark, pages, os.path.join(out_dir, "raw"),
+                       corpus_dir, summary)
+
+    # demo_dups=False: dedup the extracted corpus AS-IS — the driver
+    # demos inject synthetic near/exact dups, which a production funnel
+    # must not (after_dedup would count clusters of fabricated variants,
+    # and an injected doc_id could collide with a real one at scale).
+    reps = ops.dedup_keep_representatives(spark, corpus_dir,
+                                          demo_dups=False) \
+        .select("doc_id")
+    final, quality, sampled = _gate(spark, corpus_dir, reps)
+    final_dir = os.path.join(out_dir, "final")
+    final.write.mode("overwrite").parquet(
+        os.path.join(final_dir, "documents.parquet"))
+
+    summary["after_dedup"] = reps.count()
+    summary["after_quality"] = quality.count()
+    summary["after_sample"] = sampled.count()
+    summary["final_docs"] = spark.read.parquet(
+        os.path.join(final_dir, "documents.parquet")).count()
+    _pack(spark, final_dir, out_dir, summary)
+
+    # persist the corpus's band index for later --incremental
     if index_table:
         ops.minhash_index_build_full(spark, corpus_dir, table=index_table)
         summary["index_table"] = index_table
@@ -177,9 +204,11 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
 
     Mechanics:
       * ``ops.snapshot_diff`` over raw-page fingerprints (page_md5 from
-        the previous run's raw staging vs the incoming pages) classifies
-        every doc_id; only added/changed urls reach ``run_extraction``.
-      * the delta is staged under ``out_dir/delta`` (the ops' directory
+        the previous snapshot's working corpus, which a full and an
+        incremental build both write, vs the incoming pages) classifies
+        every doc_id; only added/changed urls reach extraction.
+      * the delta runs the full build's stages: staged under
+        ``out_dir/delta_raw`` and ``out_dir/delta`` (the ops' directory
         contract) for language ID, quality, and sampling — all per-doc
         deterministic, so gating just the delta equals a full rerun.
       * near-dup: ``ops._incremental_pairs`` checks the delta against
@@ -199,25 +228,15 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
         extraction.
     """
     from pyspark.sql import functions as F
-    from nreadability_spark.spark.job import run_extraction
     from nreadability_spark.spark import ops
 
     summary: dict = {"pages": pages.count()}
-    if sitemaps is not None:
-        frontier = ops.parse_sitemaps(sitemaps)
-        frontier.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "frontier.parquet"))
-        summary["frontier_urls"] = spark.read.parquet(
-            os.path.join(out_dir, "frontier.parquet")).count()
-    if robots is not None:
-        from nreadability_spark.spark.sources import robots_filter
-        pages = robots_filter(pages, robots)
-        summary["robots_allowed"] = pages.count()
+    pages = _crawl_prelude(spark, pages, out_dir, robots, sitemaps, summary)
 
     # 1. classify against the previous snapshot by raw-page fingerprint
-    prev_raw = spark.read.parquet(
-        os.path.join(prev_dir, "raw", "documents.parquet"))
-    old_fp = prev_raw.select("doc_id", F.col("page_md5").alias("h_old"))
+    prev_corpus = spark.read.parquet(
+        os.path.join(prev_dir, "corpus", "documents.parquet"))
+    old_fp = prev_corpus.select("doc_id", F.col("page_md5").alias("h_old"))
     new_fp = pages.select(
         F.abs(F.xxhash64("url")).alias("doc_id"),
         F.md5("html").alias("h_new"))
@@ -228,48 +247,20 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
     for s in ("added", "changed", "unchanged", "removed"):
         summary[s] = int(by_status.get(s, 0))
 
-    # 2. extract ONLY the added/changed pages
+    # 2. extract and language-ID ONLY the added/changed pages, then
+    # merge with the carried-over rows to form the new working corpus
+    # (unchanged docs keep their staged text/lang — nothing re-extracts,
+    # nothing re-classifies)
     todo = diff.where("status in ('added','changed')").select("doc_id")
     delta_pages = (pages
                    .withColumn("doc_id", F.abs(F.xxhash64("url")))
                    .join(todo, "doc_id", "left_semi")
                    .drop("doc_id"))
-    extracted = run_extraction(spark, delta_pages)
-    ok = extracted.where(
-        F.col("extracted") & F.col("error").isNull()
-        & (F.length(F.coalesce(F.col("content_text"), F.lit(""))) > 0))
-    fps = delta_pages.select("url", F.md5("html").alias("page_md5"))
-    delta_raw_dir = os.path.join(out_dir, "delta_raw")
     delta_dir = os.path.join(out_dir, "delta")
-    (ok.join(fps, "url")
-     .select(
-        F.abs(F.xxhash64("url")).alias("doc_id"),
-        F.col("content_text").alias("text"),
-        F.lit("").alias("lang"),
-        F.lit("extracted").alias("source"),
-        F.length("content_text").cast("long").alias("n_chars"),
-        "page_md5")
-     .write.mode("overwrite")
-     .parquet(os.path.join(delta_raw_dir, "documents.parquet")))
-    summary["extracted"] = spark.read.parquet(
-        os.path.join(delta_raw_dir, "documents.parquet")).count()
-
-    # 3. language-ID the delta, then merge with the carried-over rows
-    # to form the new working corpus (unchanged docs keep their staged
-    # text/lang — nothing re-extracts, nothing re-classifies)
-    lang = ops.lang_id(spark, delta_raw_dir).select(
-        "doc_id", "detected_lang")
-    (spark.read.parquet(os.path.join(delta_raw_dir, "documents.parquet"))
-     .drop("lang")
-     .join(lang, "doc_id")
-     .withColumnRenamed("detected_lang", "lang")
-     .select("doc_id", "text", "lang", "source", "n_chars", "page_md5")
-     .write.mode("overwrite")
-     .parquet(os.path.join(delta_dir, "documents.parquet")))
+    _extract_and_stage(spark, delta_pages, os.path.join(out_dir, "delta_raw"),
+                       delta_dir, summary)
     delta_corpus = spark.read.parquet(
         os.path.join(delta_dir, "documents.parquet"))
-    prev_corpus = spark.read.parquet(
-        os.path.join(prev_dir, "corpus", "documents.parquet"))
     keep_ids = diff.where("status = 'unchanged'").select("doc_id")
     carried = prev_corpus.join(keep_ids, "doc_id", "left_semi")
     corpus_dir = os.path.join(out_dir, "corpus")
@@ -277,7 +268,7 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
      .write.mode("overwrite")
      .parquet(os.path.join(corpus_dir, "documents.parquet")))
 
-    # 4. delta-only funnel gates
+    # 3. delta-only funnel gates
     spark_catalog_has = spark.catalog.tableExists(index_table)
     if not spark_catalog_has:
         ops.minhash_index_build_full(
@@ -300,16 +291,10 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
     dropped = drop_vs_index.unionByName(drop_as_larger).distinct()
     reps = delta_ids.join(dropped, "doc_id", "left_anti")
     summary["delta_dups_dropped"] = dropped.count()
-    quality = ops.gopher_quality(spark, delta_dir) \
-        .where("passes").select("doc_id")
-    sampled = ops.stratified_sample(spark, delta_dir).select("doc_id")
-    final_delta = (delta_corpus
-                   .join(reps, "doc_id", "left_semi")
-                   .join(quality, "doc_id", "left_semi")
-                   .join(sampled, "doc_id", "left_semi"))
+    final_delta, _, _ = _gate(spark, delta_dir, reps)
     summary["delta_final"] = final_delta.count()
 
-    # 5. new final = previous final minus churn, plus the delta's
+    # 4. new final = previous final minus churn, plus the delta's
     # survivors; fold the survivors' bands into the index for the NEXT
     # increment
     prev_final = spark.read.parquet(
@@ -326,17 +311,8 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
         table=index_table)
     summary["index_table"] = index_table
 
-    # 6. repack the merged corpus
-    packed = ops.pack_sequences(spark, final_dir)
-    packed_path = os.path.join(out_dir, "packed.parquet")
-    packed.write.mode("overwrite").parquet(packed_path)
-    stats = spark.read.parquet(packed_path).agg(
-        F.count("*").alias("docs"),
-        F.sum("n_tokens").alias("tokens"),
-        F.countDistinct("stream", "bin").alias("bins")).collect()[0]
-    summary["packed_docs"] = stats["docs"]
-    summary["packed_tokens"] = int(stats["tokens"] or 0)
-    summary["packed_bins"] = stats["bins"]
+    # 5. repack the merged corpus
+    _pack(spark, final_dir, out_dir, summary)
     return summary
 
 

@@ -34,24 +34,18 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-# lowered-input host extraction: optional userinfo stripped, host
-# capture stops at port/path/query so one real host is one node
-_HOST_RE = r"^[a-z][a-z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)"
-
-
 def build_linkgraph(spark, pages, out_dir: str, iters: int = 10) -> dict:
     """Run extraction->edges->pagerank; returns the summary dict."""
     from pyspark.sql import functions as F
     from nreadability_spark.spark import ops
     from nreadability_spark.spark.job import extract_links
+    from nreadability_spark.spark.sources import host_of_url
 
     links = extract_links(spark, pages)
     edges = (links
              .select(
-                 F.regexp_extract(F.lower("url"), _HOST_RE, 1)
-                 .alias("src_host"),
-                 F.regexp_extract(F.lower("link_url"), _HOST_RE, 1)
-                 .alias("dst_host"),
+                 host_of_url("url").alias("src_host"),
+                 host_of_url("link_url").alias("dst_host"),
                  F.col("n"))
              .where("src_host != '' and dst_host != '' "
                     "and src_host != dst_host")

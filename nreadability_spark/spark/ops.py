@@ -930,26 +930,10 @@ def dedup_simhash_incremental(spark: SparkSession, sf_dir: str,
     return _hamming_pairs(_index_pairs(spark, batch, table))
 
 
-DEDUP_SIMHASH_INCREMENTAL_SQL = f"""
-    with sims as ({SIMHASH_SQL}),
-    bands as (
-      select doc_id, simhash, band_id,
-             (simhash >> (band_id * 15)) & 32767 as band_sig
-      from sims, unnest([0, 1, 2, 3]) as t(band_id)
-    ),
-    {_cap_buckets_duck('bands')},
-    pairs as (
-      select distinct a.doc_id as doc1, b.doc_id as doc2,
-             a.simhash as sim1, b.simhash as sim2
-      from bands_ok a join bands_ok b
-        on a.band_id = b.band_id and a.band_sig = b.band_sig
-       and a.doc_id < b.doc_id
-    )
-    select cast(doc1 as bigint) as doc1, cast(doc2 as bigint) as doc2,
-           cast(bit_count(xor(sim1, sim2)) as bigint) as hamming
-    from pairs where bit_count(xor(sim1, sim2)) <= {_HAMMING_MAX}
-      and (doc1 % 10 = 0 or doc2 % 10 = 0)
-"""
+# the full oracle restricted to batch-touching pairs
+DEDUP_SIMHASH_INCREMENTAL_SQL = DEDUP_SIMHASH_SQL + (
+    f"      and (doc1 % {_INC_BATCH_MOD} = 0 "
+    f"or doc2 % {_INC_BATCH_MOD} = 0)\n")
 
 
 # --- minhash LSH ---------------------------------------------------------------
@@ -1236,30 +1220,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str,
     return _incremental_pairs(spark, batch, table=table)
 
 
-def _inc_lsh_sql_duck() -> str:
-    band_rows = []
-    for band in range(4):
-        cols = " || ',' || ".join(
-            f"cast(m{band * 4 + j} as varchar)" for j in range(4))
-        band_rows.append(
-            f"select doc_id, {band} as band_id, {cols} as band_sig from sigs")
-    return f"""
-        with sigs as ({MINHASH_SIGNATURES_SQL}),
-        bands as ({' union all '.join(band_rows)}),
-        {_cap_buckets_duck('bands')}
-        select distinct cast(a.doc_id as bigint) as doc1,
-                        cast(b.doc_id as bigint) as doc2
-        from bands_ok a join bands_ok b
-          on a.band_id = b.band_id and a.band_sig = b.band_sig
-         and a.doc_id < b.doc_id
-        where a.doc_id % {_INC_BATCH_MOD} = 0
-           or b.doc_id % {_INC_BATCH_MOD} = 0
-    """
-
-
-DEDUP_MINHASH_INCREMENTAL_SQL = _inc_lsh_sql_duck()
-
-
 def _lsh_sql_duck() -> str:
     band_rows = []
     for band in range(4):
@@ -1280,6 +1240,11 @@ def _lsh_sql_duck() -> str:
 
 
 DEDUP_MINHASH_LSH_SQL = _lsh_sql_duck()
+# the full oracle restricted to batch-touching pairs
+DEDUP_MINHASH_INCREMENTAL_SQL = DEDUP_MINHASH_LSH_SQL.rstrip(" ") + f"""\
+        where a.doc_id % {_INC_BATCH_MOD} = 0
+           or b.doc_id % {_INC_BATCH_MOD} = 0
+    """
 
 
 def _jaccard_shingles(corpus: DataFrame, cand_docs: DataFrame) -> DataFrame:
@@ -1509,18 +1474,11 @@ _N_QUERIES = 8
 _TOP_K = 10
 
 
-def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force top-k by integer dot product on quantized embeddings.
-
-    The baseline scale path is the same plan over LSH buckets (ann_lsh);
-    quantization keeps both engines bit-exact.
-    """
-    emb = _read(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < _N_QUERIES) \
-        .selectExpr("vec_id as query_id", f"{_QVEC} as qv")
-    c = emb.where(F.col("vec_id") >= _N_QUERIES) \
-        .selectExpr("vec_id as cand_id", f"{_QVEC} as cv")
-    pairs = c.crossJoin(F.broadcast(q)).selectExpr(
+def _dot_topk(joined: DataFrame) -> DataFrame:
+    """The exact integer top-_TOP_K of each query over its candidate rows
+    (query_id, qv, cand_id, cv): dot = qv·cv, ties ranked toward the
+    smaller cand_id."""
+    pairs = joined.selectExpr(
         "query_id", "cand_id",
         "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0L, "
         "(acc, v) -> acc + v) as dot")
@@ -1533,6 +1491,35 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("dot").cast("long"),
                     F.col("rank").cast("long")))
 
+
+def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force top-k by integer dot product on quantized embeddings.
+
+    The baseline scale path is the same plan over LSH buckets (ann_lsh);
+    quantization keeps both engines bit-exact.
+    """
+    emb = _read(spark, sf_dir, "embeddings")
+    q = emb.where(F.col("vec_id") < _N_QUERIES) \
+        .selectExpr("vec_id as query_id", f"{_QVEC} as qv")
+    c = emb.where(F.col("vec_id") >= _N_QUERIES) \
+        .selectExpr("vec_id as cand_id", f"{_QVEC} as cv")
+    return _dot_topk(c.crossJoin(F.broadcast(q)))
+
+
+# the tail of the ANN oracles: rank each query's (query_id, cand_id, dot)
+# pairs and keep its top _TOP_K
+_ANN_RANKED_SQL = f"""\
+    ranked as (
+      select query_id, cand_id, dot,
+             row_number() over (partition by query_id
+                                order by dot desc, cand_id asc) as rank
+      from pairs
+    )
+    select cast(query_id as bigint) as query_id,
+           cast(cand_id as bigint) as cand_id,
+           cast(dot as bigint) as dot, cast(rank as bigint) as rank
+    from ranked where rank <= {_TOP_K}
+"""
 
 ANN_TOPK_SQL = f"""
     with q as (
@@ -1550,17 +1537,7 @@ ANN_TOPK_SQL = f"""
                   as bigint) as dot
       from c cross join q
     ),
-    ranked as (
-      select query_id, cand_id, dot,
-             row_number() over (partition by query_id
-                                order by dot desc, cand_id asc) as rank
-      from pairs
-    )
-    select cast(query_id as bigint) as query_id,
-           cast(cand_id as bigint) as cand_id,
-           cast(dot as bigint) as dot, cast(rank as bigint) as rank
-    from ranked where rank <= {_TOP_K}
-"""
+{_ANN_RANKED_SQL}"""
 
 _N_PLANES = 8
 # deterministic integer hyperplanes: LCG over (plane, dim)
@@ -1616,8 +1593,9 @@ def _ivf_scores(vec: str, dialect: str, n_cells: int) -> str:
     return "[" + ", ".join(entries) + "]"
 
 
-def _assign_cells_arrow(cands: DataFrame, n_cells: int) -> DataFrame:
-    """Nearest-centroid assignment for the (big) candidate side as ONE
+def _assign_cells_arrow(emb: DataFrame, n_cells: int) -> DataFrame:
+    """The IVF candidate side of ``emb``: each candidate vector (cand_id,
+    cv) with its nearest-centroid cell, assigned as ONE
     vectorized numpy pass over Arrow batches: cell = argmax(2·X·Cᵀ −
     |C|²) for the whole batch at once. The expression form builds an
     n_cells-entry struct array per row (n_cells × dim interpreted
@@ -1645,8 +1623,23 @@ def _assign_cells_arrow(cands: DataFrame, n_cells: int) -> DataFrame:
                 [ids, cv, pa.array(cell, type=pa.int32())],
                 names=["cand_id", "cv", "cell"])
 
+    cands = emb.where(F.col("vec_id") >= _N_QUERIES).selectExpr(
+        "vec_id as cand_id", f"{_QVEC} as cv")
     return cands.mapInArrow(assign, "cand_id bigint, cv array<bigint>, "
                                     "cell int")
+
+
+def _ivf_probes(emb: DataFrame, n_cells: int, n_probe: int) -> DataFrame:
+    """The IVF query side of ``emb``: one (query_id, qv, cell) row per
+    query and each of its ``n_probe`` nearest cells."""
+    q = emb.where(F.col("vec_id") < _N_QUERIES).selectExpr(
+        "vec_id as query_id", f"{_QVEC} as qv"
+    ).selectExpr(
+        "query_id", "qv",
+        f"transform(slice(reverse(array_sort("
+        f"{_ivf_scores('qv', 'spark', n_cells)})), 1, {n_probe}), "
+        "x -> -x.nj) as probed")
+    return q.selectExpr("query_id", "qv", "explode(probed) as cell")
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str,
@@ -1662,30 +1655,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str,
     scale store the candidate table partitioned by cell so probing prunes
     partitions instead of shuffling."""
     emb = _read(spark, sf_dir, "embeddings")
-    c = _assign_cells_arrow(
-        emb.where(F.col("vec_id") >= _N_QUERIES).selectExpr(
-            "vec_id as cand_id", f"{_QVEC} as cv"), n_cells)
-    q = emb.where(F.col("vec_id") < _N_QUERIES).selectExpr(
-        "vec_id as query_id", f"{_QVEC} as qv"
-    ).selectExpr(
-        "query_id", "qv",
-        f"transform(slice(reverse(array_sort("
-        f"{_ivf_scores('qv', 'spark', n_cells)})), 1, {n_probe}), "
-        "x -> -x.nj) as probed")
-    probes = q.selectExpr("query_id", "qv",
-                          "explode(probed) as cell")
-    pairs = probes.join(c, "cell").selectExpr(
-        "query_id", "cand_id",
-        "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0L, "
-        "(acc, v) -> acc + v) as dot")
-    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(),
-                                               F.col("cand_id").asc())
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= _TOP_K)
-            .select(F.col("query_id").cast("long"),
-                    F.col("cand_id").cast("long"),
-                    F.col("dot").cast("long"),
-                    F.col("rank").cast("long")))
+    return _dot_topk(_ivf_probes(emb, n_cells, n_probe)
+                     .join(_assign_cells_arrow(emb, n_cells), "cell"))
 
 
 def _ann_ivf_sql(n_cells: int, n_probe: int) -> str:
@@ -1712,17 +1683,7 @@ def _ann_ivf_sql(n_cells: int, n_probe: int) -> str:
                   as bigint) as dot
       from probes p join c on p.cell = c.cell
     ),
-    ranked as (
-      select query_id, cand_id, dot,
-             row_number() over (partition by query_id
-                                order by dot desc, cand_id asc) as rank
-      from pairs
-    )
-    select cast(query_id as bigint) as query_id,
-           cast(cand_id as bigint) as cand_id,
-           cast(dot as bigint) as dot, cast(rank as bigint) as rank
-    from ranked where rank <= {_TOP_K}
-"""
+{_ANN_RANKED_SQL}"""
 
 
 ANN_IVF_TOPK_SQL = _ann_ivf_sql(_N_CELLS, _N_PROBE)
@@ -1738,10 +1699,7 @@ def ann_ivf_build(spark: SparkSession, sf_dir: str, index_path: str,
     Arrow/numpy kernel (``_assign_cells_arrow``): the build pass is the
     one that touches EVERY corpus vector, exactly where the n_cells×dim
     interpreted expression form hurts most."""
-    emb = _read(spark, sf_dir, "embeddings")
-    c = _assign_cells_arrow(
-        emb.where(F.col("vec_id") >= _N_QUERIES).selectExpr(
-            "vec_id as cand_id", f"{_QVEC} as cv"), n_cells)
+    c = _assign_cells_arrow(_read(spark, sf_dir, "embeddings"), n_cells)
     c.write.mode("overwrite").partitionBy("cell").parquet(index_path)
 
 
@@ -1754,30 +1712,12 @@ def ann_ivf_search(spark: SparkSession, sf_dir: str, index_path: str,
     index scan to the probed cells' files — the IO-side realization of
     'each query touches ~nprobe/ncells of the corpus'. Results are
     identical to ``ann_ivf_topk`` at the same (n_cells, n_probe)."""
-    emb = _read(spark, sf_dir, "embeddings")
-    c = spark.read.parquet(index_path)
-    q = emb.where(F.col("vec_id") < _N_QUERIES).selectExpr(
-        "vec_id as query_id", f"{_QVEC} as qv"
-    ).selectExpr(
-        "query_id", "qv",
-        f"transform(slice(reverse(array_sort("
-        f"{_ivf_scores('qv', 'spark', n_cells)})), 1, {n_probe}), "
-        "x -> -x.nj) as probed")
-    probes = q.selectExpr("query_id", "qv", "explode(probed) as cell")
+    probes = _ivf_probes(_read(spark, sf_dir, "embeddings"), n_cells,
+                         n_probe)
     # broadcast the tiny probe side: the index side stays a partitioned
     # scan, and DPP turns the join key into a partition filter on it
-    pairs = c.join(F.broadcast(probes), "cell").selectExpr(
-        "query_id", "cand_id",
-        "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0L, "
-        "(acc, v) -> acc + v) as dot")
-    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(),
-                                               F.col("cand_id").asc())
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= _TOP_K)
-            .select(F.col("query_id").cast("long"),
-                    F.col("cand_id").cast("long"),
-                    F.col("dot").cast("long"),
-                    F.col("rank").cast("long")))
+    return _dot_topk(
+        spark.read.parquet(index_path).join(F.broadcast(probes), "cell"))
 
 
 def ann_ivf_topk64(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3487,6 +3427,31 @@ def _seg_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return segs.withColumn("h", F.expr(_H60.format(col="seg")))
 
 
+def _reassemble(kept: DataFrame) -> DataFrame:
+    """Per document of a segment table flagged with ``keep``: its segment
+    count, its kept count, and its text rejoined from the kept segments
+    in position order."""
+    return (kept.groupBy("doc_id")
+            .agg(F.count("*").cast("long").alias("n_segs"),
+                 F.sum(F.col("keep").cast("long")).alias("n_kept"),
+                 F.expr("array_join(transform(filter(array_sort("
+                        "collect_list(struct(pos, seg, keep))), "
+                        "x -> x.keep), x -> x.seg), ' ')")
+                 .alias("text_clean")))
+
+
+# the DuckDB twin of _seg_table: one (doc_id, pos, seg, h) row per segment
+_SEGS_CTE_DUCK = f"""segs as (
+      select doc_id, u.pos as pos, u.seg as seg,
+             {_H60_DUCK.format(col='u.seg')} as h
+      from (
+        select cast(doc_id as bigint) as doc_id,
+               unnest(list_transform(range(0, len({_SEGS_DUCK})),
+                 i -> struct_pack(pos := i,
+                                  seg := ({_SEGS_DUCK})[i + 1]))) as u
+        from documents))"""
+
+
 def dedup_lines(spark: SparkSession, sf_dir: str,
                 max_broadcast_rows: int = _SEG_BC_MAX_ROWS) -> DataFrame:
     """Cross-document segment dedup (the CCNet/RefinedWeb boilerplate-line
@@ -3526,25 +3491,11 @@ def dedup_lines(spark: SparkSession, sf_dir: str,
         freq = freq.hint("shuffle_hash")
     kept = (segs.join(freq, "h", "left")
             .withColumn("keep", F.col("df").isNull()))
-    return (kept.groupBy("doc_id")
-            .agg(F.count("*").cast("long").alias("n_segs"),
-                 F.sum(F.col("keep").cast("long")).alias("n_kept"),
-                 F.expr("array_join(transform(filter(array_sort("
-                        "collect_list(struct(pos, seg, keep))), "
-                        "x -> x.keep), x -> x.seg), ' ')")
-                 .alias("text_clean")))
+    return _reassemble(kept)
 
 
 DEDUP_LINES_SQL = f"""
-    with segs as (
-      select doc_id, u.pos as pos, u.seg as seg,
-             {_H60_DUCK.format(col='u.seg')} as h
-      from (
-        select cast(doc_id as bigint) as doc_id,
-               unnest(list_transform(range(0, len({_SEGS_DUCK})),
-                 i -> struct_pack(pos := i,
-                                  seg := ({_SEGS_DUCK})[i + 1]))) as u
-        from documents)),
+    with {_SEGS_CTE_DUCK},
     freq as (
       select h from segs group by h
       having count(distinct doc_id) >= {_SEG_MIN_DF})
@@ -3576,25 +3527,11 @@ def dedup_lines_within_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("doc_id", "h").orderBy("pos")
     kept = (segs.withColumn("rn", F.row_number().over(w))
             .withColumn("keep", F.col("rn") == 1))
-    return (kept.groupBy("doc_id")
-            .agg(F.count("*").cast("long").alias("n_segs"),
-                 F.sum(F.col("keep").cast("long")).alias("n_kept"),
-                 F.expr("array_join(transform(filter(array_sort("
-                        "collect_list(struct(pos, seg, keep))), "
-                        "x -> x.keep), x -> x.seg), ' ')")
-                 .alias("text_clean")))
+    return _reassemble(kept)
 
 
 DEDUP_LINES_WITHIN_DOC_SQL = f"""
-    with segs as (
-      select doc_id, u.pos as pos, u.seg as seg,
-             {_H60_DUCK.format(col='u.seg')} as h
-      from (
-        select cast(doc_id as bigint) as doc_id,
-               unnest(list_transform(range(0, len({_SEGS_DUCK})),
-                 i -> struct_pack(pos := i,
-                                  seg := ({_SEGS_DUCK})[i + 1]))) as u
-        from documents)),
+    with {_SEGS_CTE_DUCK},
     ranked as (
       select *, row_number() over (partition by doc_id, h
                                    order by pos) as rn

@@ -14,7 +14,7 @@ import os
 import re
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .job import ensure_package_shipped, map_rows
 
@@ -475,7 +475,7 @@ def robots_verdicts(pages: DataFrame, robots: DataFrame,
     (allowed=true, delay_ms=null) — the REP default."""
     ensure_package_shipped(pages.sparkSession)
     cols = pages.columns
-    joined = (pages.withColumn("_host", F.expr(_HOST_OF_URL))
+    joined = (pages.withColumn("_host", host_of_url("url"))
               .join(robots.withColumnRenamed("host", "_host")
                     .withColumnRenamed("robots_txt", "_robots_txt"),
                     "_host", "left"))
@@ -551,8 +551,12 @@ def robots_check(spark: SparkSession, sf_dir: str,
     return robots_verdicts(pages, synthesize_robots(spark), agent=agent)
 
 
-_HOST_OF_URL = ("lower(regexp_extract(url, "
-                "'^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)', 1))")
+def host_of_url(url: str | Column) -> Column:
+    """The host of the absolute url in column ``url``, lower-cased: any
+    userinfo is stripped and the capture stops at port, path, query or
+    fragment, so one real host is one key; '' when there is no host."""
+    return F.lower(F.regexp_extract(
+        url, r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)", 1))
 
 
 def robots_filter(pages: DataFrame, robots: DataFrame,

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .job import run_extraction
-from .sources import warc_pages
+from .sources import host_of_url, warc_pages
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
              "text string, lang string")
@@ -71,7 +71,7 @@ def host_totals_stream(pages_stream: DataFrame) -> DataFrame:
     aggregation — in update mode each micro-batch re-emits the running
     row of every host it touched, with the state kept in the JVM."""
     hosts = pages_stream.select(
-        F.regexp_extract("url", r"https?://([^/]+)/", 1).alias("host"),
+        host_of_url("url").alias("host"),
         F.length("html").alias("html_len"))
     return (hosts.groupBy("host")
             .agg(F.count("*").alias("docs"),

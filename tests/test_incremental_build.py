@@ -147,3 +147,19 @@ def test_noop_increment_is_identity(spark, snapshots, tmp_path_factory):
     assert s3["final_docs"] == s1["final_docs"]
     assert s3["packed_tokens"] == s1["packed_tokens"]
     assert s3["packed_bins"] == s1["packed_bins"]
+
+
+def test_increment_over_an_increment(spark, snapshots, tmp_path_factory):
+    """An incremental snapshot is a valid --prev: re-ingesting snapshot
+    2's pages over it (with a fresh index table, built from its corpus)
+    extracts nothing, sees no churn, and reproduces its final and packed
+    outputs."""
+    from build_corpus import build_corpus_incremental
+    _, s2, _, out2, _, pages2 = snapshots
+    out4 = str(tmp_path_factory.mktemp("inc_chain") / "snap4")
+    s4 = build_corpus_incremental(spark, pages2, out4, out2,
+                                  index_table="minhash_idx_e2e_chain")
+    assert s4["extracted"] == 0
+    assert s4["changed"] == 0 and s4["removed"] == 0
+    assert s4["final_docs"] == s2["final_docs"]
+    assert s4["packed_tokens"] == s2["packed_tokens"]

@@ -108,8 +108,10 @@ def test_streaming_extraction(spark, tmp_path_factory):
 
 
 def test_stateful_host_totals_stream(spark, tmp_path_factory):
-    """applyInPandasWithState running totals must converge to the batch
-    groupBy result after draining the source."""
+    """The streaming running totals must converge to per-host totals
+    computed independently of the operator after draining the source."""
+    from urllib.parse import urlsplit
+
     from pyspark.sql import functions as F
     from nreadability_spark.spark.pages import synthesize_pages
     from nreadability_spark.spark.streaming import (host_totals_stream,
@@ -138,16 +140,28 @@ def test_stateful_host_totals_stream(spark, tmp_path_factory):
              for r in got.groupBy("host")
              .agg(F.max("docs").alias("docs"), F.max("bytes").alias("bytes"))
              .collect()}
-    truth = {r["host"]: (r["docs"], r["bytes"])
-             for r in pages.select(
-                 F.regexp_extract("url", r"https?://([^/]+)/", 1)
-                 .alias("host"), F.length("html").alias("l"))
-             .groupBy("host")
-             .agg(F.count("*").alias("docs"), F.sum("l").alias("bytes"))
-             .collect()}
+    truth: dict = {}
+    for r in pages.select("url", F.length("html").alias("l")).collect():
+        host = urlsplit(r["url"]).hostname
+        docs, n_bytes = truth.get(host, (0, 0))
+        truth[host] = (docs + 1, n_bytes + r["l"])
     assert final == truth
     pages.unpersist()
     shutil.rmtree(base, ignore_errors=True)
+
+
+def test_host_totals_host_key(spark):
+    """host_totals_stream keys a url by its lower-cased host, whatever
+    its casing, path, userinfo or port."""
+    from nreadability_spark.spark.streaming import host_totals_stream
+    pages = spark.createDataFrame(
+        [(u, b"<p>x</p>") for u in (
+            "https://a.example", "HTTPS://A.example/x",
+            "https://u@a.example:8080/y", "http://b.example/z")],
+        "url string, html binary")
+    got = {r["host"]: r["docs"]
+           for r in host_totals_stream(pages).collect()}
+    assert got == {"a.example": 3, "b.example": 1}
 
 
 def test_streaming_dedup_across_microbatches(spark, tmp_path_factory):

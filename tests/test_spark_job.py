@@ -282,19 +282,46 @@ def test_extract_links_matches_local_kernel(spark, pages):
     assert any(links for links in got.values())
 
 
-def test_build_linkgraph_job(spark, pages, tmp_path_factory):
-    """The linkgraph job must produce a real host graph from the
-    synthesized corpus (cross-host links exist by construction) with
-    damped integer PageRank mass and a stable top list."""
+def _linkgraph_pages(spark):
+    """Four hosts with absolute cross-host anchors, one same-host link,
+    a repeated target, and one anchor whose host is upper-cased and
+    carries userinfo and a port."""
+    def page(url, *hrefs):
+        body = "".join(f"<a href='{h}'>l</a>" for h in hrefs)
+        return url, f"<html><body>{body}</body></html>".encode()
+
+    return spark.createDataFrame([
+        page("https://a.example/1", "https://b.example/x",
+             "https://b.example/y", "https://U@B.Example:8080/z",
+             "https://c.example/", "/local"),
+        page("https://b.example/x", "https://a.example/1",
+             "https://c.example/p"),
+        page("https://c.example/", "https://a.example/2"),
+        page("https://d.example/q", "https://a.example/1",
+             "https://a.example/1"),
+    ], "url string, html binary")
+
+
+def test_build_linkgraph_job(spark, tmp_path_factory):
+    """The linkgraph job builds the exact host graph of its pages (hosts
+    lower-cased, userinfo and port stripped, same-host links dropped)
+    with damped integer PageRank mass and a stable top list."""
     import sys as _sys
     _sys.path.insert(0, os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "jobs"))
     from build_linkgraph import build_linkgraph
+    pages = _linkgraph_pages(spark)
     out = str(tmp_path_factory.mktemp("linkgraph"))
     s = build_linkgraph(spark, pages, out, iters=5)
-    assert s["edges"] > 0 and s["hosts"] > 1
-    assert len(s["top_hosts"]) > 0
+    edges = spark.read.parquet(os.path.join(out, "edges.parquet"))
+    assert sorted(map(tuple, edges.select(
+        "src_host", "dst_host", "weight").collect())) == [
+        ("a.example", "b.example", 3), ("a.example", "c.example", 1),
+        ("b.example", "a.example", 1), ("b.example", "c.example", 1),
+        ("c.example", "a.example", 1), ("d.example", "a.example", 2)]
+    assert s["edges"] == 6 and s["hosts"] == 4
+    assert s["top_hosts"][0][0] == "a.example"
     ranks = spark.read.parquet(os.path.join(out, "host_ranks.parquet"))
     from pyspark.sql import functions as F
     row = ranks.agg(F.min("pr").alias("lo"),
