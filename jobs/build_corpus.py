@@ -59,20 +59,35 @@ def _crawl_prelude(spark, pages, out_dir: str, robots, sitemaps,
     return pages
 
 
+def _doc_id():
+    """doc_id = abs(xxhash64(url)): stable per run, which is all the
+    downstream ops need (a production pipeline would carry url as the
+    key; 64-bit collisions at 1e12 docs affect ~1e-7 of pairs and only
+    merge their dedup identity)."""
+    from pyspark.sql import functions as F
+    return F.abs(F.xxhash64("url"))
+
+
+def _fingerprints(spark, pages, out_dir: str):
+    """Write ``out_dir/fingerprints.parquet``: (doc_id, page_md5) of
+    every page that reaches extraction, staged or not. page_md5
+    fingerprints the RAW page bytes — the change-detection identity the
+    next ``--incremental`` run diffs against, so a page that gave no
+    usable text is not extracted again while its bytes stay the same.
+    Returns the table as written."""
+    from pyspark.sql import functions as F
+    path = os.path.join(out_dir, "fingerprints.parquet")
+    (pages.select(_doc_id().alias("doc_id"),
+                  F.md5("html").alias("page_md5"))
+     .write.mode("overwrite").parquet(path))
+    return spark.read.parquet(path)
+
+
 def _extract_and_stage(spark, pages, raw_dir: str, doc_dir: str,
                        summary: dict) -> None:
     """Extract ``pages`` and stage every usable result in the ops'
     documents shape: ``raw_dir`` with lang='' (pre language-ID), then
-    ``doc_dir`` with the detected lang.
-
-    doc_id = abs(xxhash64(url)): stable per run, which is all the
-    downstream ops need (a production pipeline would carry url as the
-    key; 64-bit collisions at 1e12 docs affect ~1e-7 of pairs and only
-    merge their dedup identity). page_md5 fingerprints the RAW page
-    bytes — the change-detection identity an incremental recrawl diffs
-    against (one url-key join to bring it alongside the extraction
-    output).
-    """
+    ``doc_dir`` with the detected lang."""
     from pyspark.sql import functions as F
     from nreadability_spark.spark.job import run_extraction
     from nreadability_spark.spark import ops
@@ -82,15 +97,12 @@ def _extract_and_stage(spark, pages, raw_dir: str, doc_dir: str,
     ok = extracted.where(
         F.col("extracted") & F.col("error").isNull()
         & (F.length(F.coalesce(F.col("content_text"), F.lit(""))) > 0))
-    fps = pages.select("url", F.md5("html").alias("page_md5"))
-    (ok.join(fps, "url")
-     .select(
-        F.abs(F.xxhash64("url")).alias("doc_id"),
+    (ok.select(
+        _doc_id().alias("doc_id"),
         F.col("content_text").alias("text"),
         F.lit("").alias("lang"),
         F.lit("extracted").alias("source"),
-        F.length("content_text").cast("long").alias("n_chars"),
-        "page_md5")
+        F.length("content_text").cast("long").alias("n_chars"))
      .write.mode("overwrite")
      .parquet(os.path.join(raw_dir, "documents.parquet")))
     summary["extracted"] = spark.read.parquet(
@@ -101,7 +113,7 @@ def _extract_and_stage(spark, pages, raw_dir: str, doc_dir: str,
      .drop("lang")
      .join(lang, "doc_id")
      .withColumnRenamed("detected_lang", "lang")
-     .select("doc_id", "text", "lang", "source", "n_chars", "page_md5")
+     .select("doc_id", "text", "lang", "source", "n_chars")
      .write.mode("overwrite")
      .parquet(os.path.join(doc_dir, "documents.parquet")))
 
@@ -146,10 +158,11 @@ def build_corpus(spark, pages, out_dir: str, robots=None,
     """Run the full funnel; returns the stage-count summary dict.
 
     Staged layout under ``out_dir``:
+      fingerprints.parquet      (doc_id, page_md5) of every page sent to
+                                extraction: what --incremental diffs
+                                against
       raw/documents.parquet     extracted text, lang='' (pre language-ID)
-      corpus/documents.parquet  + detected lang (the ops' working corpus),
-                                + page_md5 (raw-page fingerprint, the
-                                identity --incremental diffs against)
+      corpus/documents.parquet  + detected lang (the ops' working corpus)
       final/documents.parquet   after dedup ∩ quality ∩ sample
       packed.parquet            (stream, doc_id, n_tokens, bin, bin_offset)
 
@@ -161,6 +174,7 @@ def build_corpus(spark, pages, out_dir: str, robots=None,
 
     summary: dict = {"pages": pages.count()}
     pages = _crawl_prelude(spark, pages, out_dir, robots, sitemaps, summary)
+    _fingerprints(spark, pages, out_dir)
     corpus_dir = os.path.join(out_dir, "corpus")
     _extract_and_stage(spark, pages, os.path.join(out_dir, "raw"),
                        corpus_dir, summary)
@@ -203,10 +217,13 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
     full rebuild would re-pay extraction for the other ~97%.
 
     Mechanics:
-      * ``ops.snapshot_diff`` over raw-page fingerprints (page_md5 from
-        the previous snapshot's working corpus, which a full and an
-        incremental build both write, vs the incoming pages) classifies
-        every doc_id; only added/changed urls reach extraction.
+      * ``ops.snapshot_diff`` over raw-page fingerprints (the previous
+        snapshot's ``fingerprints.parquet``, which a full and an
+        incremental build both write for every page they sent to
+        extraction, vs the incoming pages) classifies every doc_id; only
+        added/changed urls reach extraction. A page whose extraction
+        gave no usable text is classed unchanged, not added, while its
+        bytes stay the same.
       * the delta runs the full build's stages: staged under
         ``out_dir/delta_raw`` and ``out_dir/delta`` (the ops' directory
         contract) for language ID, quality, and sampling — all per-doc
@@ -233,14 +250,15 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
     summary: dict = {"pages": pages.count()}
     pages = _crawl_prelude(spark, pages, out_dir, robots, sitemaps, summary)
 
-    # 1. classify against the previous snapshot by raw-page fingerprint
-    prev_corpus = spark.read.parquet(
-        os.path.join(prev_dir, "corpus", "documents.parquet"))
-    old_fp = prev_corpus.select("doc_id", F.col("page_md5").alias("h_old"))
-    new_fp = pages.select(
-        F.abs(F.xxhash64("url")).alias("doc_id"),
-        F.md5("html").alias("h_new"))
-    diff = ops.snapshot_diff(old_fp, new_fp)
+    # 1. classify against the previous snapshot by raw-page fingerprint;
+    # every page here reaches extraction or is carried as unchanged, so
+    # this snapshot's fingerprints are all of its pages'
+    old_fp = spark.read.parquet(
+        os.path.join(prev_dir, "fingerprints.parquet"))
+    new_fp = _fingerprints(spark, pages, out_dir)
+    diff = ops.snapshot_diff(
+        old_fp.withColumnRenamed("page_md5", "h_old"),
+        new_fp.withColumnRenamed("page_md5", "h_new"))
     by_status = {r["status"]: r["n"] for r in
                  diff.groupBy("status").agg(
                      F.count("*").alias("n")).collect()}
@@ -253,7 +271,7 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
     # nothing re-classifies)
     todo = diff.where("status in ('added','changed')").select("doc_id")
     delta_pages = (pages
-                   .withColumn("doc_id", F.abs(F.xxhash64("url")))
+                   .withColumn("doc_id", _doc_id())
                    .join(todo, "doc_id", "left_semi")
                    .drop("doc_id"))
     delta_dir = os.path.join(out_dir, "delta")
@@ -262,7 +280,9 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
     delta_corpus = spark.read.parquet(
         os.path.join(delta_dir, "documents.parquet"))
     keep_ids = diff.where("status = 'unchanged'").select("doc_id")
-    carried = prev_corpus.join(keep_ids, "doc_id", "left_semi")
+    carried = spark.read.parquet(
+        os.path.join(prev_dir, "corpus", "documents.parquet")) \
+        .join(keep_ids, "doc_id", "left_semi")
     corpus_dir = os.path.join(out_dir, "corpus")
     (carried.unionByName(delta_corpus)
      .write.mode("overwrite")

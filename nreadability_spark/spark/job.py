@@ -300,15 +300,12 @@ _links_batches_arrow = _make_arrow_extractor(
                                 for t, n in extract_links_row(u, h)))
 
 
-def extract_links(spark: SparkSession, pages: DataFrame,
-                  num_partitions: Optional[int] = None) -> DataFrame:
-    """pages(url, html) -> (url, link_url, n) link-graph edges, same
-    partitioning contract as run_extraction (salted exchange unless the
-    corpus is pre-salted and num_partitions=0)."""
+def extract_links(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    """pages(url, html) -> (url, link_url, n) link-graph edges, behind
+    run_extraction's default salted exchange."""
     ensure_package_shipped(spark)
-    return _salted(spark, pages.select("url", "html"),
-                   num_partitions).mapInArrow(_links_batches_arrow,
-                                              LINKS_SCHEMA)
+    return _salted(spark, pages.select("url", "html"), None) \
+        .mapInArrow(_links_batches_arrow, LINKS_SCHEMA)
 
 
 def _assert_partitioned_layout(path: str, what: str) -> None:
@@ -335,13 +332,15 @@ def run_job(spark: SparkSession, pages: DataFrame, out_dir: str,
     """Full job: extract -> parquet sink -> metrics rollup sink.
 
     Both sinks are hive-partitioned by run_id: the extracted sink so the
-    metrics rollup and summary scan ONLY the current run's files (instead
-    of every historic run's), the metrics sink so reruns dynamically
-    overwrite their own rollup. Flat-layout out_dirs from older versions
-    are rejected with a clear error.
+    metrics rollup scans ONLY the current run's files (instead of every
+    historic run's), the metrics sink so reruns dynamically overwrite
+    their own rollup. Flat-layout out_dirs from older versions are
+    rejected with a clear error.
 
-    Returns summary counters. Idempotent per url: rerunning after a partial
-    failure anti-joins the committed urls and appends only the remainder.
+    Returns summary counters, summed from this run's rollup rows (0 for
+    a run with nothing left to extract). Idempotent per url: rerunning
+    after a partial failure anti-joins the committed urls and appends
+    only the remainder.
     """
     extracted_path = os.path.join(out_dir, "extracted")
     metrics_path = os.path.join(out_dir, "metrics")
@@ -386,11 +385,11 @@ def run_job(spark: SparkSession, pages: DataFrame, out_dir: str,
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("run_id").parquet(metrics_path))
 
-    summary = written.agg(
-        F.count("*").alias("docs"),
-        F.sum(F.col("extracted").cast("long")).alias("extracted"),
-        F.sum((F.col("error").isNotNull()).cast("long")).alias("failures"),
-    ).collect()[0]
-    return {"docs": summary["docs"], "extracted": summary["extracted"],
-            "failures": summary["failures"], "run_id": run_id,
+    rollup = (spark.read.parquet(metrics_path)
+              .where(F.col("run_id") == run_id)
+              .select("docs", "extracted", "parse_failures").collect())
+    return {"docs": sum(r["docs"] for r in rollup),
+            "extracted": sum(r["extracted"] for r in rollup),
+            "failures": sum(r["parse_failures"] for r in rollup),
+            "run_id": run_id,
             "extracted_path": extracted_path, "metrics_path": metrics_path}

@@ -1689,8 +1689,8 @@ def _ann_ivf_sql(n_cells: int, n_probe: int) -> str:
 ANN_IVF_TOPK_SQL = _ann_ivf_sql(_N_CELLS, _N_PROBE)
 
 
-def ann_ivf_build(spark: SparkSession, sf_dir: str, index_path: str,
-                  n_cells: int = _N_CELLS) -> None:
+def ann_ivf_build(spark: SparkSession, sf_dir: str,
+                  index_path: str) -> None:
     """The IVF build pass: write the candidate vectors as a parquet index
     hive-partitioned by cell. At production scale this runs once per
     corpus snapshot; searches then read only the probed cells' partitions
@@ -1698,22 +1698,23 @@ def ann_ivf_build(spark: SparkSession, sf_dir: str, index_path: str,
     whole corpus per query batch. Cell assignment uses the vectorized
     Arrow/numpy kernel (``_assign_cells_arrow``): the build pass is the
     one that touches EVERY corpus vector, exactly where the n_cells×dim
-    interpreted expression form hurts most."""
-    c = _assign_cells_arrow(_read(spark, sf_dir, "embeddings"), n_cells)
+    interpreted expression form hurts most. Build and search both use
+    ``_N_CELLS`` (and the search ``_N_PROBE``), so an index is always
+    searched at the cell count it was written with."""
+    c = _assign_cells_arrow(_read(spark, sf_dir, "embeddings"), _N_CELLS)
     c.write.mode("overwrite").partitionBy("cell").parquet(index_path)
 
 
-def ann_ivf_search(spark: SparkSession, sf_dir: str, index_path: str,
-                   n_cells: int = _N_CELLS,
-                   n_probe: int = _N_PROBE) -> DataFrame:
+def ann_ivf_search(spark: SparkSession, sf_dir: str,
+                   index_path: str) -> DataFrame:
     """Search against a cell-partitioned IVF index written by
     ``ann_ivf_build``: the probe table (tiny) joins the index on its
     partition column, so Spark's dynamic partition pruning restricts the
     index scan to the probed cells' files — the IO-side realization of
     'each query touches ~nprobe/ncells of the corpus'. Results are
-    identical to ``ann_ivf_topk`` at the same (n_cells, n_probe)."""
-    probes = _ivf_probes(_read(spark, sf_dir, "embeddings"), n_cells,
-                         n_probe)
+    identical to ``ann_ivf_topk`` at its default (n_cells, n_probe)."""
+    probes = _ivf_probes(_read(spark, sf_dir, "embeddings"), _N_CELLS,
+                         _N_PROBE)
     # broadcast the tiny probe side: the index side stays a partitioned
     # scan, and DPP turns the join key into a partition filter on it
     return _dot_topk(
@@ -2280,12 +2281,10 @@ LM_BIGRAM_SCORE_SQL = f"""
 
 # --- sitemap ingestion ------------------------------------------------------------
 
-def parse_sitemaps(smaps: DataFrame,
-                   host_col: str = "host",
-                   xml_col: str = "xml") -> DataFrame:
-    """Parse fetched sitemap.xml payloads into the URL seed table a
-    crawl frontier consumes: (host, loc, lastmod, priority_milli), one
-    row per <url> block. This is the PRODUCTION entry point — the blobs
+def parse_sitemaps(smaps: DataFrame) -> DataFrame:
+    """Parse fetched sitemap.xml payloads (host, xml) into the URL seed
+    table a crawl frontier consumes: (host, loc, lastmod,
+    priority_milli), one row per <url> block. This is the PRODUCTION entry point — the blobs
     arrive from fetches (or ``jobs/build_corpus --sitemaps <dir>``), and
     the parse is a zero-shuffle per-row projection + explode. XML
     handling is the pragmatic crawler shape — split on <url> blocks,
@@ -2293,8 +2292,7 @@ def parse_sitemaps(smaps: DataFrame,
     machine-written but frequently invalid XML); a block missing a field
     yields '' / null for it rather than dropping the row."""
     blocks = smaps.selectExpr(
-        f"{host_col} as host",
-        f"explode(regexp_extract_all({xml_col}, '<url>.*?</url>', 0)) as b")
+        "host", "explode(regexp_extract_all(xml, '<url>.*?</url>', 0)) as b")
     # try_cast: a block with no <priority> yields '' -> null, which ANSI
     # cast would turn into a job-killing error on one bad sitemap
     return blocks.selectExpr(
@@ -2470,14 +2468,14 @@ def _bpe_best_pair(syms: DataFrame, w) -> DataFrame:
                     F.col("c")))
 
 
-def bpe_merges(spark: SparkSession, sf_dir: str,
-               rounds: int = _BPE_MERGE_ROUNDS) -> DataFrame:
+def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact byte-pair-encoding merge training over the corpus — the
     canonical iterative AGGREGATION dataflow beyond PageRank's
-    propagation and CC's pointer jumping: K rounds of (count all
-    adjacent symbol pairs weighted by word frequency) -> (pick the max,
-    ties broken deterministically by count desc, pair asc) -> (apply
-    the merge left-to-right non-overlapping in every word). Output is
+    propagation and CC's pointer jumping: ``_BPE_MERGE_ROUNDS`` rounds
+    of (count all adjacent symbol pairs weighted by word frequency) ->
+    (pick the max, ties broken deterministically by count desc, pair
+    asc) -> (apply the merge left-to-right non-overlapping in every
+    word). Output is
     the learned merge table (round, left_sym, right_sym, pair_count).
 
     The left-to-right non-overlap rule ("aaaa" + merge (a,a) ->
@@ -2495,18 +2493,18 @@ def bpe_merges(spark: SparkSession, sf_dir: str,
     one pair-key exchange for the count, a TakeOrdered top-1 (no global
     sort), the 1-row merge broadcast by crossJoin, and word-partitioned
     windows that reuse one exchange; lineage is cut every round."""
-    return _bpe_train(spark, sf_dir, rounds)[0]
+    return _bpe_train(spark, sf_dir)[0]
 
 
-def _bpe_train(spark: SparkSession, sf_dir: str,
-               rounds: int = _BPE_MERGE_ROUNDS
+def _bpe_train(spark: SparkSession, sf_dir: str
                ) -> tuple[DataFrame, DataFrame]:
-    """(merge table, final symbol table) after ``rounds`` of training —
-    the symbol table is the trained vocabulary ``bpe_encode`` applies."""
+    """(merge table, final symbol table) after ``_BPE_MERGE_ROUNDS`` of
+    training — the symbol table is the trained vocabulary ``bpe_encode``
+    applies."""
     syms = _cut_lineage(_bpe_initial_syms(spark, sf_dir))
     w = Window.partitionBy("word").orderBy("pos")
     out: DataFrame | None = None
-    for rnd in range(1, rounds + 1):
+    for rnd in range(1, _BPE_MERGE_ROUNDS + 1):
         best = _cut_lineage(_bpe_best_pair(syms, w))
         rec = best.select(
             F.lit(rnd).cast("long").alias("round"),
@@ -2535,8 +2533,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str,
     return out, syms
 
 
-def bpe_encode(spark: SparkSession, sf_dir: str,
-               rounds: int = _BPE_MERGE_ROUNDS) -> DataFrame:
+def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize the corpus with the vocabulary bpe_merges just trained —
     the end-to-end train->apply cycle a real tokenizer build runs.
     Encoding is a JOIN, not a re-fold: the trained symbol table already
@@ -2547,7 +2544,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str,
     doc: token count and an order-exact digest of the token stream
     (symbols joined on 0x1f inside a word, 0x1e between words — the
     same construction both engines hash)."""
-    _merges, syms = _bpe_train(spark, sf_dir, rounds)
+    _merges, syms = _bpe_train(spark, sf_dir)
     vocab = (syms.groupBy("word")
              .agg(F.count("*").cast("long").alias("n"),
                   F.expr("concat_ws(chr(31), transform(array_sort("
@@ -2570,17 +2567,17 @@ def bpe_encode(spark: SparkSession, sf_dir: str,
                  .alias("tokens_md5")))
 
 
-def _bpe_encode_sql(rounds: int = _BPE_MERGE_ROUNDS) -> str:
-    base = _bpe_merges_sql(rounds)
+def _bpe_encode_sql() -> str:
+    base = _bpe_merges_sql()
     # reuse the full training CTE chain; swap the merge-table SELECT
     # (the only 4-space-indented select in the text) for the encode
-    # query over the final symbol table s{rounds}
+    # query over the final symbol table s{_BPE_MERGE_ROUNDS}
     chain = base.rsplit("\n    select", 1)[0]
     return f"""{chain},
     vocab as (
       select word, count(*) as n,
              string_agg(sym, chr(31) order by pos) as toks
-      from s{rounds} group by 1),
+      from s{_BPE_MERGE_ROUNDS} group by 1),
     pretok as (
       select doc_id, tpos, arr[tpos] as word from (
         select doc_id, arr,
@@ -2597,7 +2594,7 @@ def _bpe_encode_sql(rounds: int = _BPE_MERGE_ROUNDS) -> str:
     """
 
 
-def _bpe_merges_sql(rounds: int = _BPE_MERGE_ROUNDS) -> str:
+def _bpe_merges_sql() -> str:
     over = "over (partition by word order by pos)"
     ctes = [f"""words as (
       select word, count(*) as cnt from (
@@ -2610,7 +2607,7 @@ def _bpe_merges_sql(rounds: int = _BPE_MERGE_ROUNDS) -> str:
       from (select word, cnt,
                    unnest(range(1, length(word) + 1)) as pos
             from words))"""]
-    for i in range(1, rounds + 1):
+    for i in range(1, _BPE_MERGE_ROUNDS + 1):
         s = f"s{i - 1}"
         ctes.append(f"""p{i} as (
       select sym as l, nxt as r, sum(cnt) as c from (
@@ -2637,7 +2634,7 @@ def _bpe_merges_sql(rounds: int = _BPE_MERGE_ROUNDS) -> str:
     rows = "\n      union all ".join(
         f"select cast({i} as bigint) as round, l as left_sym, "
         f"r as right_sym, cast(c as bigint) as pair_count from b{i}"
-        for i in range(1, rounds + 1))
+        for i in range(1, _BPE_MERGE_ROUNDS + 1))
     return "with " + ",\n    ".join(ctes) + "\n    " + rows
 
 
@@ -3226,12 +3223,12 @@ STRATIFIED_SAMPLE_SQL = f"""
 _SAMPLE_FIXED_K = 50
 
 
-def stratified_sample_fixed(spark: SparkSession, sf_dir: str,
-                            k: int = _SAMPLE_FIXED_K) -> DataFrame:
-    """Deterministic fixed-size per-stratum sample: EXACTLY ``k`` docs
-    per language (fewer only if the stratum is smaller), chosen by
-    ranking on the salted md5 die — the "give me 10k docs per language
-    for the eval set" requirement rate-based sampling can't express.
+def stratified_sample_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic fixed-size per-stratum sample: EXACTLY
+    ``_SAMPLE_FIXED_K`` docs per language (fewer only if the stratum is
+    smaller), chosen by ranking on the salted md5 die — the "give me
+    10k docs per language for the eval set" requirement rate-based
+    sampling can't express.
     Hash-ordered, so the selection is reproducible across runs, engines,
     and retries, and adding documents to OTHER strata never changes a
     stratum's picks.
@@ -3248,7 +3245,7 @@ def stratified_sample_fixed(spark: SparkSession, sf_dir: str,
     w = Window.partitionBy(F.expr("coalesce(lang, '')")) \
         .orderBy(F.expr(h).asc(), F.col("doc_id").asc())
     return (docs.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= k)
+            .where(F.col("rk") <= _SAMPLE_FIXED_K)
             .selectExpr("cast(doc_id as bigint) as doc_id",
                         "coalesce(lang, '') as lang",
                         "cast(rk as bigint) as rk"))
@@ -3452,8 +3449,7 @@ _SEGS_CTE_DUCK = f"""segs as (
         from documents))"""
 
 
-def dedup_lines(spark: SparkSession, sf_dir: str,
-                max_broadcast_rows: int = _SEG_BC_MAX_ROWS) -> DataFrame:
+def dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document segment dedup (the CCNet/RefinedWeb boilerplate-line
     pass): every document is split into segments, segments that occur in
     >= ``_SEG_MIN_DF`` distinct documents corpus-wide are removed, and each
@@ -3464,7 +3460,7 @@ def dedup_lines(spark: SparkSession, sf_dir: str,
     Scale shape: posexplode is narrow; the corpus-frequency aggregate
     shuffles the (segment-hash, doc_id) pairs once and its output — the
     boilerplate set — is materialized (checkpoint) and SIZE-GATED: at or
-    below ``max_broadcast_rows`` it broadcasts back onto the exploded
+    below ``_SEG_BC_MAX_ROWS`` it broadcasts back onto the exploded
     table (no shuffle of the big side), above it the join degrades to a
     shuffled-hash join on ``h`` — on a real web corpus the >=_SEG_MIN_DF
     segment set (cookie banners, nav text — the very thing this op
@@ -3483,7 +3479,7 @@ def dedup_lines(spark: SparkSession, sf_dir: str,
     # materialize the boilerplate set once (checkpoint), count it for
     # free off the materialized blocks, then pick the join strategy
     freq = _cut_lineage(freq)
-    if freq.count() <= max_broadcast_rows:
+    if freq.count() <= _SEG_BC_MAX_ROWS:
         freq = F.broadcast(freq)
     else:
         # too big to broadcast: shuffled-hash join on the 60-bit hash

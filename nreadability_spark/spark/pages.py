@@ -13,14 +13,15 @@ Two deterministic row sources, no RNG, no wall clock:
   table at the chosen scale factor: each document's text is wrapped in a
   seeded page skeleton that exercises every operator class (sidebar strip,
   div->p, double-br, conditional table cleanup, URL resolution, next-page
-  link). ``doc_id % 97`` picks the host, creating the host-level clustering
-  the salted repartition defuses. ``doc_id % 20 == 0`` rows get a truncated
-  ``<script`` tail to exercise the parse-retry and failure paths.
+  link). ``doc_id % N_HOSTS`` picks the host, creating the host-level
+  clustering the salted repartition defuses. ``doc_id % 20 == 0`` rows get
+  a truncated ``<script`` tail to exercise the parse-retry and failure
+  paths.
 
-The same synthesis exists in two forms: ``template_html_expr`` (Spark
-column expressions — runs distributed, scales to any SF) and
-``template_html_py`` (pure Python — the local oracle used by the
-byte-identity tests). They must render identical bytes.
+``template_html_py`` and ``template_url_py`` are the one renderer of a
+template page: ``synthesize_pages`` runs them in Spark's Python workers,
+and the local oracles (``scripts/gen_oracles.py``, the byte-identity
+tests) call them directly.
 """
 
 from __future__ import annotations
@@ -42,6 +43,11 @@ THEVERGE_URLS = {
 _FIXTURE_LANGS = {2: "pl"}
 
 _EPOCH = "2026-01-01 00:00:00"
+
+# the corpus url space: document ``doc_id`` lives on host
+# ``doc_id % N_HOSTS`` (``template_url_py``); ``sources.synthesize_robots``
+# writes the robots.txt of every host of that space
+N_HOSTS = 97
 
 
 def fixture_rows() -> list[tuple]:
@@ -73,7 +79,7 @@ def fixture_rows() -> list[tuple]:
     return rows
 
 
-# --- template page (kept in one place so Spark and Python render match) ------
+# --- template page ---------------------------------------------------------
 
 _PAGE_HEAD = (
     '<html><head><title>{title} | Site {host}</title>'
@@ -95,8 +101,8 @@ _PAGE_TAIL = (
 
 
 def template_html_py(doc_id: int, text: str) -> str:
-    """Local (oracle) renderer: must match template_html_expr byte-for-byte."""
-    host = doc_id % 97
+    """The html of document ``doc_id``'s template page."""
+    host = doc_id % N_HOSTS
     title = f"Article {doc_id}"
     t = text or ""
     p1 = t
@@ -105,7 +111,7 @@ def template_html_py(doc_id: int, text: str) -> str:
     body = f"<p>{p1}</p><p>{p2}</p><p>{p3}</p>"
     page = (_PAGE_HEAD.format(title=title, host=host) + body
             + _PAGE_TAIL.format(doc_id=doc_id))
-    if doc_id % 97 == 0:
+    if host == 0:
         # contentless page: exercises the extracted=false path
         return f"<html><head><title>{title}</title></head><body></body></html>"
     if doc_id % 20 == 0:
@@ -114,52 +120,8 @@ def template_html_py(doc_id: int, text: str) -> str:
     return page
 
 
-def template_html_expr(doc_id_col, text_col):
-    """Spark-side renderer of the same template (distributed, any SF)."""
-    host = doc_id_col % 97
-    title = F.concat(F.lit("Article "), doc_id_col.cast("string"))
-    t = F.coalesce(text_col, F.lit(""))
-    p1 = t
-    p2 = F.when(t == "", F.lit("")).otherwise(
-        F.concat(F.substring(t, 1, 220), F.lit(", "), F.substring(t, 1, 120)))
-    p3 = F.substring(t, 1, 64)
-    body = F.concat(F.lit("<p>"), p1, F.lit("</p><p>"), p2,
-                    F.lit("</p><p>"), p3, F.lit("</p>"))
-    head = F.concat(
-        F.lit('<html><head><title>'), title,
-        F.lit(' | Site '), host.cast("string"),
-        F.lit('</title><meta name="viewport" content="width=1000" />'
-              '<style>.x{color:#000}</style>'
-              '<script src="/app.js">var x=1;</script></head><body>'
-              '<div class="sidebar"><a href="/nav/1">Home</a>'
-              '<a href="/nav/2">News</a><a href="/nav/3">Sports</a>'
-              '<a href="/nav/4">Tech</a></div>'
-              '<div id="main" class="article content"><h1>'), title,
-        F.lit("</h1>"))
-    tail = F.concat(
-        F.lit('<div>bare text inside a div<a href="/x">link</a>trailing text'
-              '</div>intro line<br /><br />after the break'
-              '<table class="widget"><tr><td><a href="/w1">w</a></td></tr>'
-              '</table><p><img src="img/'), doc_id_col.cast("string"),
-        F.lit('.jpg" /></p><a href="/articles/'), doc_id_col.cast("string"),
-        F.lit('?page=2">Next Page 2</a></div>'
-              '<div class="footer comment">copyright junk links</div>'
-              "</body></html>"))
-    page = F.concat(head, body, tail)
-    return F.when(
-        doc_id_col % 97 == 0,
-        F.concat(F.lit("<html><head><title>"), title,
-                 F.lit("</title></head><body></body></html>"))
-    ).when(
-        doc_id_col % 20 == 0,
-        F.concat(F.substring(page, 1,
-                             (F.length(page) * 2 / 3).cast("int")),
-                 F.lit("<script>var broken = '"))
-    ).otherwise(page)
-
-
 def template_url_py(doc_id: int) -> str:
-    return f"https://host{doc_id % 97}.example.org/articles/{doc_id}"
+    return f"https://host{doc_id % N_HOSTS}.example.org/articles/{doc_id}"
 
 
 _LANG_CYCLE = ["en", "pl", "de", "fr"]
@@ -181,25 +143,35 @@ def chained_page_py(doc_id: int, text: str, page_no: int,
         next_link = (f'<a href="{base}?page={page_no + 1}">'
                      f"Next Page {page_no + 1}</a>")
     return url, (
-        f"<html><head><title>{title} | Site {doc_id % 97}</title></head>"
+        f"<html><head><title>{title} | Site {doc_id % N_HOSTS}</title>"
+        "</head>"
         f'<body><div id="main" class="article content">'
         f"<h1>{title}</h1>{body}{next_link}</div>"
         f'<div class="footer comment">junk</div></body></html>')
 
 
-def synthesize_chained_pages(spark: SparkSession, sf_dir: str,
-                             n_pages: int = 3,
-                             every: int = 5) -> DataFrame:
-    """Multi-page chain corpus: every ``every``-th document becomes an
-    ``n_pages`` article; all other documents stay single-page. Built in a
-    distributed pass (one input row fans out to its chain pages)."""
+_CHAIN_PAGES = 3
+_CHAIN_EVERY = 5
+
+
+def chain_py(doc_id: int, text: str) -> list[tuple[str, str]]:
+    """(url, html) of every page of document ``doc_id``'s article: a
+    ``_CHAIN_PAGES`` chain for every ``_CHAIN_EVERY``-th document, else
+    one page."""
+    total = _CHAIN_PAGES if doc_id % _CHAIN_EVERY == 0 else 1
+    return [chained_page_py(doc_id, text, k, total)
+            for k in range(1, total + 1)]
+
+
+def synthesize_chained_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-page chain corpus: the pages of every document's
+    ``chain_py``. Built in a distributed pass (one input row fans out to
+    its chain pages)."""
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")) \
         .select("doc_id", "text")
 
     def chain(doc_id, text):
-        total = n_pages if doc_id % every == 0 else 1
-        for k in range(1, total + 1):
-            url, html = chained_page_py(doc_id, text, k, total)
+        for url, html in chain_py(doc_id, text):
             yield {"url": url, "html": html.encode("utf-8")}
 
     return map_rows(docs, "url string, html binary", chain)
@@ -241,11 +213,14 @@ def _warc_head(wtype: str, uri: str, date: str, length) -> bytes:
     return head.encode("utf-8")
 
 
-def _http_chunked(payload: bytes, size: int = 500) -> bytes:
+_HTTP_CHUNK = 500
+
+
+def _http_chunked(payload: bytes) -> bytes:
     """Deterministic Transfer-Encoding: chunked framing."""
     out = []
-    for i in range(0, len(payload), size):
-        c = payload[i:i + size]
+    for i in range(0, len(payload), _HTTP_CHUNK):
+        c = payload[i:i + _HTTP_CHUNK]
         out.append(b"%x\r\n" % len(c) + c + b"\r\n")
     out.append(b"0\r\n\r\n")
     return b"".join(out)
@@ -290,9 +265,11 @@ def warc_record_py(doc_id: int, text: str) -> bytes:
             + http + b"\r\n\r\n")
 
 
-def synthesize_warc_dir(sf_dir: str, n_files: int = 8,
-                        out_dir: str | None = None) -> str:
-    """Materialize the documents table as ``n_files`` per-record-gzip
+_WARC_FILES = 8
+
+
+def synthesize_warc_dir(sf_dir: str, out_dir: str | None = None) -> str:
+    """Materialize the documents table as ``_WARC_FILES`` per-record-gzip
     WARC segments under a content-addressed tmp dir (idempotent: a
     marker file keyed on the corpus signature skips the rewrite).
     Driver-side by design — this builds the INPUT fixture the
@@ -314,7 +291,7 @@ def synthesize_warc_dir(sf_dir: str, n_files: int = 8,
         fp.update((text or "").encode("utf-8", "surrogatepass"))
         fp.update(b"\x00")
     sig = hashlib.md5(
-        f"{sf_dir}:{n_files}:{len(docs)}:{fp.hexdigest()}:v2"
+        f"{sf_dir}:{_WARC_FILES}:{len(docs)}:{fp.hexdigest()}:v2"
         .encode()).hexdigest()
     if out_dir is None:
         out_dir = os.path.join(tempfile.gettempdir(), f"nrs_warc_{sig[:12]}")
@@ -325,12 +302,12 @@ def synthesize_warc_dir(sf_dir: str, n_files: int = 8,
                 return out_dir
     os.makedirs(out_dir, exist_ok=True)
     gz = lambda rec: gzip.compress(rec, mtime=0)  # noqa: E731
-    files: list[list[bytes]] = [[] for _ in range(n_files)]
+    files: list[list[bytes]] = [[] for _ in range(_WARC_FILES)]
     info = _warc_head("warcinfo", "", warc_date_py(1), 15) + \
         b"software: nrs\r\n\r\n\r\n"
     files[0].append(gz(info))
     for doc_id, text in docs:
-        k = int(doc_id) % n_files
+        k = int(doc_id) % _WARC_FILES
         files[k].append(gz(warc_record_py(int(doc_id), text)))
         if doc_id % 50 == 0:
             req = _warc_head("request", template_url_py(int(doc_id)),
@@ -344,40 +321,35 @@ def synthesize_warc_dir(sf_dir: str, n_files: int = 8,
     return out_dir
 
 
+def _template_row(doc_id: int, text: str, rep: int):
+    url = template_url_py(doc_id) + (f"?rep={rep}" if rep else "")
+    yield {"url": url, "doc_id": doc_id,
+           "html": template_html_py(doc_id, text).encode("utf-8"),
+           "text": text, "lang": _LANG_CYCLE[doc_id % len(_LANG_CYCLE)]}
+
+
 def synthesize_pages(spark: SparkSession, sf_dir: str,
                      include_fixtures: bool = True,
                      replicate: int = 1) -> DataFrame:
     """Build the pages table: fixture rows + one template page per
     ``documents`` row at ``sf_dir``. ``replicate`` > 1 scales the corpus
     for benchmarking (urls get a ?rep=k suffix to stay unique)."""
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")) \
+        .select(F.col("doc_id").cast("long").alias("doc_id"), "text")
     if replicate > 1:
         reps = spark.range(replicate).withColumnRenamed("id", "rep")
         docs = docs.crossJoin(F.broadcast(reps))
     else:
         docs = docs.withColumn("rep", F.lit(0).cast("long"))
 
-    doc_id = F.col("doc_id").cast("long")
-    url = F.concat(
-        F.lit("https://host"), (doc_id % 97).cast("string"),
-        F.lit(".example.org/articles/"), doc_id.cast("string"),
-        F.when(F.col("rep") > 0,
-               F.concat(F.lit("?rep="), F.col("rep").cast("string")))
-        .otherwise(F.lit("")))
-    templ = docs.select(
-        url.alias("url"),
-        F.to_timestamp(F.lit(_EPOCH)).alias("base_ts"),
-        doc_id.alias("doc_id"),
-        template_html_expr(doc_id, F.col("text")).alias("html_str"),
-        F.col("text").alias("text"),
-        F.element_at(F.array(*[F.lit(x) for x in _LANG_CYCLE]),
-                     (doc_id % 4 + 1).cast("int")).alias("lang"),
+    templ = map_rows(
+        docs, "url string, doc_id long, html binary, text string, "
+        "lang string", _template_row,
     ).select(
         "url",
-        (F.col("base_ts") + F.make_interval(secs=F.col("doc_id") * 137))
-        .alias("warc_ts"),
-        F.encode(F.col("html_str"), "UTF-8").alias("html"),
-        "text", "lang",
+        (F.to_timestamp(F.lit(_EPOCH))
+         + F.make_interval(secs=F.col("doc_id") * 137)).alias("warc_ts"),
+        "html", "text", "lang",
     )
 
     if not include_fixtures:

@@ -17,6 +17,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .job import ensure_package_shipped, map_rows
+from .pages import N_HOSTS
 
 
 def _is_table_ref(ref: str) -> bool:
@@ -66,15 +67,15 @@ _WARC_CHUNK = 1 << 20  # decompressed scan-window growth per pull
 _GZIP_FEED = 1 << 18   # compressed input per decompress call
 
 
-def _gzip_members(data: bytes, chunk: int = _WARC_CHUNK):
+def _gzip_members(data: bytes):
     """Decode ``data`` one gzip member at a time. Yields
     ``(start, piece, None)`` for each decoded piece of the member whose
     compressed bytes start at ``start``, then ``(start, b"", end)`` once
     the member completes (``end`` = its last compressed byte + 1) or is
     truncated at EOF (``end`` = ``len(data)``). Data that does not start
-    with the gzip magic is one raw member cut into ``chunk`` slices.
+    with the gzip magic is one raw member cut into ``_WARC_CHUNK`` slices.
 
-    Each ``decompress`` call is capped at ``chunk`` output bytes, so
+    Each ``decompress`` call is capped at ``_WARC_CHUNK`` output bytes, so
     peak memory never depends on the compression ratio. Input is fed in
     bounded slices: zlib's unconsumed_tail/unused_data are bytes COPIES
     of whatever input the call did not consume, so feeding the whole
@@ -86,8 +87,8 @@ def _gzip_members(data: bytes, chunk: int = _WARC_CHUNK):
     Never raises."""
     n = len(data)
     if data[:2] != b"\x1f\x8b":
-        for i in range(0, n, chunk):
-            yield 0, data[i:i + chunk], None
+        for i in range(0, n, _WARC_CHUNK):
+            yield 0, data[i:i + _WARC_CHUNK], None
         yield 0, b"", n
         return
     mv = memoryview(data)
@@ -110,7 +111,7 @@ def _gzip_members(data: bytes, chunk: int = _WARC_CHUNK):
                     nxt = min(feed + _GZIP_FEED, n)
                     tail = mv[feed:nxt]
                     feed = nxt
-                out = d.decompress(tail, chunk)
+                out = d.decompress(tail, _WARC_CHUNK)
                 tail = d.unconsumed_tail
                 if out:
                     yield pos, out, None
@@ -421,11 +422,11 @@ def robots_txt_py(host: int) -> str | None:
     return txt
 
 
-def synthesize_robots(spark: SparkSession, n_hosts: int = 97) -> DataFrame:
+def synthesize_robots(spark: SparkSession) -> DataFrame:
     """(host, robots_txt) — one row per hostname that HAS a robots
     file, keyed exactly like the corpus urls' hosts."""
     rows = [(f"host{h}.example.org", robots_txt_py(h))
-            for h in range(n_hosts)]
+            for h in range(N_HOSTS)]
     return spark.createDataFrame(
         [(h, t) for h, t in rows if t is not None],
         "host string, robots_txt string")
@@ -545,7 +546,7 @@ def robots_check(spark: SparkSession, sf_dir: str,
     pages = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.concat(F.lit("https://host"),
-                 (F.col("doc_id") % 97).cast("string"),
+                 (F.col("doc_id") % N_HOSTS).cast("string"),
                  F.lit(".example.org/articles/"),
                  F.col("doc_id").cast("string")).alias("url"))
     return robots_verdicts(pages, synthesize_robots(spark), agent=agent)

@@ -39,13 +39,11 @@ STITCH_SCHEMA = StructType([
 ])
 
 
-def page_links(spark: SparkSession, pages: DataFrame,
-               extraction=None) -> DataFrame:
+def page_links(spark: SparkSession, pages: DataFrame) -> DataFrame:
     """(url, next_page_url) edges from the extraction pass."""
     from .job import run_extraction
-    ext = extraction if extraction is not None \
-        else run_extraction(spark, pages)
-    return (ext.where(F.col("next_page_url").isNotNull())
+    return (run_extraction(spark, pages)
+            .where(F.col("next_page_url").isNotNull())
             .select("url", "next_page_url"))
 
 
@@ -117,11 +115,10 @@ def _stitch_group(chain: pa.Table) -> pa.Table:
     return pa.Table.from_pylist([row], schema=to_arrow_schema(STITCH_SCHEMA))
 
 
-def stitch_multipage(spark: SparkSession, pages: DataFrame,
-                     extraction=None) -> DataFrame:
+def stitch_multipage(spark: SparkSession, pages: DataFrame) -> DataFrame:
     """pages(url, html) -> one stitched article per chain root."""
     ensure_package_shipped(spark)
-    links = page_links(spark, pages, extraction)
+    links = page_links(spark, pages)
     chains = chain_membership(spark, pages, links)
     # only multi-page chains need the stitcher; single pages are covered
     # by the plain extraction pass

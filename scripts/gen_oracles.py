@@ -5,8 +5,9 @@ The readability kernel is deterministic pure Python, so running it locally
 independent oracle for the driver's DuckDB-vs-Spark hash gate: the driver
 reads these parquet files via ``read_parquet('<abs path>')`` in
 ``oracle_sql()`` while the Spark side recomputes everything distributed.
-The byte-identity of the two page renderers (template_html_py vs
-template_html_expr) is locked by tests/test_spark_job.py.
+Both sides call the same page renderers, feature and frame helpers and
+read the same engine constants (host count, stitch depth), so no setting
+is restated here.
 
 Regenerate after ANY kernel change:
 
@@ -34,9 +35,12 @@ if _REPO not in sys.path:
 from nreadability_spark.spark.job import (_hooked_row,
                                            transcode_row)  # noqa: E402
 from nreadability_spark.spark.multimodal import (_KINDS, _decode_payload,
-                                                 _fake_payload)  # noqa: E402
-from nreadability_spark.spark.pages import (chained_page_py, template_html_py,
+                                                 _fake_payload, _feature,
+                                                 _video_frames)  # noqa: E402
+from nreadability_spark.spark.pages import (N_HOSTS, chain_py,
+                                            template_html_py,
                                             template_url_py)  # noqa: E402
+from nreadability_spark.spark.stitch import MAX_PAGES  # noqa: E402
 
 ORACLE_DIR = os.path.join(_REPO, "oracles")
 
@@ -135,18 +139,14 @@ def gen_extract_links(docs: list[tuple[int, str]]) -> pa.Table:
     })
 
 
-def gen_stitch(docs: list[tuple[int, str]], n_pages: int = 3,
-               every: int = 5, max_pages: int = 30) -> pa.Table:
+def gen_stitch(docs: list[tuple[int, str]]) -> pa.Table:
     """Local replay of stitch_multipage: kernel next-page edges, BFS from
     unpointed roots, WebTranscoder stitch per multi-page chain."""
     from nreadability_spark.readability.webtranscoder import WebTranscoder
 
     page_map: dict[str, str] = {}
     for doc_id, text in docs:
-        total = n_pages if int(doc_id) % every == 0 else 1
-        for k in range(1, total + 1):
-            u, h = chained_page_py(int(doc_id), text, k, total)
-            page_map[u] = h
+        page_map.update(chain_py(int(doc_id), text))
     links: dict[str, str] = {}
     for u, h in page_map.items():
         r = transcode_row(u, h.encode("utf-8"))
@@ -160,7 +160,7 @@ def gen_stitch(docs: list[tuple[int, str]], n_pages: int = 3,
             continue
         chain = [root]
         seen = {root}
-        while (len(chain) < max_pages and chain[-1] in links
+        while (len(chain) < MAX_PAGES and chain[-1] in links
                and links[chain[-1]] not in seen):
             nxt = links[chain[-1]]
             chain.append(nxt)
@@ -184,17 +184,14 @@ def gen_stitch(docs: list[tuple[int, str]], n_pages: int = 3,
     })
 
 
-def gen_media_features(docs: list[tuple[int, str]],
-                       dims: int = 16) -> pa.Table:
+def gen_media_features(docs: list[tuple[int, str]]) -> pa.Table:
     cols: dict[str, list] = {k: [] for k in (
         "media_id", "kind", "ok", "payload_bytes", "feature_q")}
     for doc_id, _text in docs:
         mid = int(doc_id)
         payload = _fake_payload(mid, _KINDS[mid % 3])
         kind, arr = _decode_payload(payload)
-        hist = np.bincount(arr % dims, minlength=dims).astype(np.float32)
-        norm = float(np.linalg.norm(hist))
-        feat = hist / norm if norm > 0 else hist
+        feat = _feature(arr)
         # Spark stores the feature as float32; floor(double(f32)*10000)
         # is the exact quantization both engines see
         q = [int(math.floor(float(np.float32(float(x))) * 10000))
@@ -213,8 +210,7 @@ def gen_media_features(docs: list[tuple[int, str]],
     })
 
 
-def gen_media_frames(docs: list[tuple[int, str]], every_n: int = 4,
-                     frame_bytes: int = 256) -> pa.Table:
+def gen_media_frames(docs: list[tuple[int, str]]) -> pa.Table:
     cols: dict[str, list] = {k: [] for k in ("media_id", "frame_no",
                                              "frame_md5")}
     for doc_id, _text in docs:
@@ -222,10 +218,8 @@ def gen_media_frames(docs: list[tuple[int, str]], every_n: int = 4,
         kind = _KINDS[mid % 3]
         if kind != "video":
             continue
-        body = _fake_payload(mid, kind)[16:]
-        blocks = [body[i:i + frame_bytes]
-                  for i in range(0, len(body), frame_bytes)]
-        for frame_no, block in enumerate(blocks[::every_n]):
+        for frame_no, block in enumerate(
+                _video_frames(_fake_payload(mid, kind))):
             cols["media_id"].append(mid)
             cols["frame_no"].append(frame_no)
             cols["frame_md5"].append(hashlib.md5(block).hexdigest())
@@ -275,7 +269,7 @@ def gen_robots_check(docs: list[tuple[int, str]]) -> pa.Table:
         "doc_id", "url", "allowed", "delay_ms")}
     for doc_id, _text in docs:
         did = int(doc_id)
-        host = did % 97
+        host = did % N_HOSTS
         txt = robots_txt_py(host)
         if txt is None:
             allowed, delay = True, None
@@ -286,8 +280,7 @@ def gen_robots_check(docs: list[tuple[int, str]]) -> pa.Table:
             allowed = is_allowed(r, ROBOTS_AGENT, f"/articles/{did}")
             delay = crawl_delay(r, ROBOTS_AGENT)
         cols["doc_id"].append(did)
-        cols["url"].append(
-            f"https://host{host}.example.org/articles/{did}")
+        cols["url"].append(template_url_py(did))
         cols["allowed"].append(bool(allowed))
         cols["delay_ms"].append(
             int(delay * 1000) if delay is not None else None)

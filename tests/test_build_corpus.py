@@ -48,11 +48,16 @@ def test_funnel_monotonic(summary_and_dir):
 
 
 def test_staged_layout_and_lang(summary_and_dir, spark):
-    _, out = summary_and_dir
+    s, out = summary_and_dir
     corpus = spark.read.parquet(
         os.path.join(out, "corpus", "documents.parquet"))
     assert set(corpus.columns) == {"doc_id", "text", "lang", "source",
-                                   "n_chars", "page_md5"}
+                                   "n_chars"}
+    # one raw-page fingerprint per page sent to extraction, staged or not
+    fps = spark.read.parquet(os.path.join(out, "fingerprints.parquet"))
+    assert fps.columns == ["doc_id", "page_md5"]
+    assert fps.count() == fps.select("doc_id").distinct().count() \
+        == s["pages"]
     langs = {r["lang"] for r in corpus.select("lang").distinct().collect()}
     assert langs <= {"en", "es", "de", "fr"} and langs
 

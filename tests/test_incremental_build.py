@@ -62,11 +62,14 @@ def snapshots(spark, tmp_path_factory):
     return s1, s2, out1, out2, pages1, pages2
 
 
-def test_no_reextraction_of_unchanged(snapshots):
-    s1, s2, *_ = snapshots
-    # the diff saw every previous doc exactly once
-    assert s2["unchanged"] + s2["changed"] + s2["removed"] \
-        == s1["extracted"]
+def test_no_reextraction_of_unchanged(snapshots, spark):
+    s1, s2, out1, *_ = snapshots
+    # the diff saw every page the previous build sent to extraction
+    # exactly once, whether or not it was staged
+    attempted = spark.read.parquet(
+        os.path.join(out1, "fingerprints.parquet")).count()
+    assert attempted == s1["pages"] > s1["extracted"]
+    assert s2["unchanged"] + s2["changed"] + s2["removed"] == attempted
     assert s2["removed"] > 0 and s2["changed"] > 0 and s2["added"] > 0
     # THE invariant: extraction ran only on the churn, never on the
     # carried-over majority
@@ -135,14 +138,16 @@ def test_removed_docs_leave_the_snapshot(snapshots, spark):
 
 def test_noop_increment_is_identity(spark, snapshots, tmp_path_factory):
     """Re-ingesting an identical snapshot touches nothing: zero
-    extraction, zero churn, and the final/packed outputs reproduce the
-    previous snapshot exactly."""
+    extraction, zero churn (pages that gave no text are not added
+    again), and the final/packed outputs reproduce the previous
+    snapshot exactly."""
     from build_corpus import build_corpus_incremental
     s1, _, out1, _, pages1, _ = snapshots
     out3 = str(tmp_path_factory.mktemp("inc_noop") / "snap3")
     s3 = build_corpus_incremental(spark, pages1, out3, out1,
                                   index_table="minhash_idx_e2e_noop")
     assert s3["extracted"] == 0
+    assert s3["added"] == 0
     assert s3["changed"] == 0 and s3["removed"] == 0
     assert s3["final_docs"] == s1["final_docs"]
     assert s3["packed_tokens"] == s1["packed_tokens"]
@@ -160,6 +165,7 @@ def test_increment_over_an_increment(spark, snapshots, tmp_path_factory):
     s4 = build_corpus_incremental(spark, pages2, out4, out2,
                                   index_table="minhash_idx_e2e_chain")
     assert s4["extracted"] == 0
+    assert s4["added"] == 0
     assert s4["changed"] == 0 and s4["removed"] == 0
     assert s4["final_docs"] == s2["final_docs"]
     assert s4["packed_tokens"] == s2["packed_tokens"]

@@ -21,11 +21,11 @@ import pytest
 
 from nreadability_spark.readability import transcode
 from nreadability_spark.readability import transcoder as T
+from nreadability_spark.spark.pages import FIXTURE_DIR
 
 REF_FIXTURES = sorted(
-    glob.glob("/root/reference/Carbon.Readability.Tests/SampleInput/*.html")
-    + glob.glob(
-        "/root/reference/Carbon.Readability.Tests/SampleWebInput/*.html"))
+    glob.glob(os.path.join(FIXTURE_DIR, "SampleInput", "*.html"))
+    + glob.glob(os.path.join(FIXTURE_DIR, "SampleWebInput", "*.html")))
 
 # URL-hinted cases exercise the per-URL <article> shortcut too
 SAMPLE_URLS = {

@@ -154,13 +154,13 @@ def test_dedup_demo_dups_flag(spark):
     assert agg["max_id"] < 1_000_000
 
 
-def test_dedup_lines_join_modes_agree(spark):
+def test_dedup_lines_join_modes_agree(spark, monkeypatch):
     """The broadcast/shuffle size-gate is a strategy choice only: both
     modes must produce identical reassembled corpora."""
-    from nreadability_spark.spark.ops import dedup_lines
-    bc = sorted(tuple(r) for r in dedup_lines(spark, SF_DIR).collect())
-    sh = sorted(tuple(r) for r in
-                dedup_lines(spark, SF_DIR, max_broadcast_rows=0).collect())
+    from nreadability_spark.spark import ops
+    bc = sorted(tuple(r) for r in ops.dedup_lines(spark, SF_DIR).collect())
+    monkeypatch.setattr(ops, "_SEG_BC_MAX_ROWS", 0)
+    sh = sorted(tuple(r) for r in ops.dedup_lines(spark, SF_DIR).collect())
     assert bc == sh
 
 

@@ -370,15 +370,16 @@ def test_dedup_lines_broadcasts_boilerplate_set(spark):
         assert "transform(sequence" not in cond
 
 
-def test_dedup_lines_size_gate_degrades_to_shuffle_join(spark):
+def test_dedup_lines_size_gate_degrades_to_shuffle_join(spark, monkeypatch):
     """Above the broadcast threshold the boilerplate set must join as a
     SHUFFLED hash join on the segment hash — the forced broadcast of a
     corpus-derived (potentially 1e9+-row) set would OOM the driver
-    instead of degrading. max_broadcast_rows=0 forces the big-set mode;
+    instead of degrading. A threshold of 0 forces the big-set mode;
     the result itself is strategy-independent (parity-checked by the
     default-mode oracle test)."""
-    from nreadability_spark.spark.ops import dedup_lines
-    plan = plan_of(dedup_lines(spark, SF_DIR, max_broadcast_rows=0))
+    from nreadability_spark.spark import ops
+    monkeypatch.setattr(ops, "_SEG_BC_MAX_ROWS", 0)
+    plan = plan_of(ops.dedup_lines(spark, SF_DIR))
     assert "ShuffledHashJoin" in plan
     assert "BroadcastHashJoin" not in plan
 

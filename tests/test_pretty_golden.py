@@ -25,11 +25,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 GOLDEN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "golden")
-WEB_DIR = "/root/reference/Carbon.Readability.Tests/SampleWebInput"
 
 
-@pytest.mark.skipif(not os.path.isdir(WEB_DIR),
-                    reason="reference fixtures absent")
+@pytest.mark.reference_fixtures
 @pytest.mark.parametrize("num", [1, 4, 10])
 def test_webtranscode_prettyprint_bytes(num):
     sys.setrecursionlimit(40000)
@@ -51,15 +49,20 @@ def test_webtranscode_prettyprint_bytes(num):
 
 def test_prettyprint_differs_from_compact():
     """PrettyPrint must actually engage (indent newlines present) and the
-    compact mode must stay compact."""
+    compact mode must stay compact, over a synthesized 3-page chain."""
     sys.setrecursionlimit(40000)
-    from test_webtranscoder import URLS, make_fetcher
     from nreadability_spark.readability.webtranscoder import WebTranscoder
+    from nreadability_spark.spark.pages import chained_page_py
 
-    wt = WebTranscoder(fetcher=make_fetcher(4, URLS[4]))
-    pretty = wt.transcode(URLS[4][0], pretty_print=True).content
-    wt2 = WebTranscoder(fetcher=make_fetcher(4, URLS[4]))
-    compact = wt2.transcode(URLS[4][0], pretty_print=False).content
+    chain = dict(chained_page_py(10, "Pretty printing keeps every page "
+                                 "of an article readable. " * 6, k, 3)
+                 for k in range(1, 4))
+    root = next(iter(chain))
+    pretty = WebTranscoder(fetcher=chain.get) \
+        .transcode(root, pretty_print=True).content
+    compact = WebTranscoder(fetcher=chain.get) \
+        .transcode(root, pretty_print=False).content
+    assert "readability-page-3" in compact
     assert "\n  <head>" in pretty
     assert "\n  <head>" not in compact
     assert len(pretty) > len(compact)

@@ -103,11 +103,34 @@ def test_fuzz_never_raises():
     run()
 
 
+def test_synthesized_robots_cover_the_template_hosts():
+    """synthesize_robots writes a robots.txt for exactly the hosts of the
+    template url space that robots_txt_py gives a file, with that file's
+    text. Spark-free: the session stand-in hands back the rows."""
+    from urllib.parse import urlsplit
+
+    from nreadability_spark.spark.pages import N_HOSTS, template_url_py
+    from nreadability_spark.spark.sources import (robots_txt_py,
+                                                  synthesize_robots)
+
+    class Rows:
+        def createDataFrame(self, rows, schema):
+            return rows
+
+    got = dict(synthesize_robots(Rows()))
+    want = {urlsplit(template_url_py(d)).hostname: robots_txt_py(d % N_HOSTS)
+            for d in range(3 * N_HOSTS) if robots_txt_py(d % N_HOSTS)}
+    assert got == want
+    # some hosts have no robots file, and the rest do
+    assert 0 < len(got) < N_HOSTS
+
+
 def test_robots_check_spark_matches_kernel():
     """The distributed gate must agree with the pure kernel row-for-row,
     including missing-robots hosts (allow) and malformed hosts."""
     import pytest
     pytest.importorskip("pyspark")
+    from nreadability_spark.spark.pages import N_HOSTS, template_url_py
     from nreadability_spark.spark.session import get_spark
     from nreadability_spark.spark.sources import (ROBOTS_AGENT,
                                                   robots_check,
@@ -119,7 +142,7 @@ def test_robots_check_spark_matches_kernel():
                robots_check(spark, "/root/testdata/sf0.001").collect()}
         assert len(out) == 500
         for did in (0, 1, 3, 13, 17, 33, 51, 170, 433):
-            host = did % 97
+            host = did % N_HOSTS
             txt = robots_txt_py(host)
             if txt is None:
                 want_allowed, want_delay = True, None
@@ -130,6 +153,7 @@ def test_robots_check_spark_matches_kernel():
                 d = crawl_delay(r, ROBOTS_AGENT)
                 want_delay = int(d * 1000) if d is not None else None
             row = out[did]
+            assert row["url"] == template_url_py(did)
             assert row["allowed"] == want_allowed, did
             assert row["delay_ms"] == want_delay, did
         # the gate must actually discriminate
@@ -137,7 +161,7 @@ def test_robots_check_spark_matches_kernel():
         assert vals == {True, False}
         # every missing-robots host (h % 17 == 0) is allowed
         assert all(r["allowed"] for r in out.values()
-                   if (r["doc_id"] % 97) % 17 == 0)
+                   if (r["doc_id"] % N_HOSTS) % 17 == 0)
     finally:
         spark.stop()
 

@@ -10,9 +10,7 @@ pyspark = pytest.importorskip("pyspark")
 
 from nreadability_spark.readability.webtranscoder import WebTranscoder  # noqa: E402
 from tests.test_plans import SF_DIR  # noqa: E402
-from tests.test_webtranscoder import URLS, make_fetcher  # noqa: E402
-
-WEB_DIR = "/root/reference/Carbon.Readability.Tests/SampleWebInput"
+from tests.test_webtranscoder import URLS, WEB_DIR  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -34,6 +32,7 @@ def load_web_pages():
     return rows
 
 
+@pytest.mark.reference_fixtures
 def test_stitch_matches_single_node(spark):
     from nreadability_spark.spark.stitch import stitch_multipage
     rows = load_web_pages()

@@ -362,13 +362,15 @@ def test_div_to_p_probe_matches_serialized_form_on_fixture_corpus():
     element of every fixture document and of the kernel-lock corpus —
     the A/B lock for the fast path."""
     import glob
+    import os
+
     import kernel_corpus
     from nreadability_spark.readability.transcoder import (
         RX_DIV_TO_P, _inner_html_has_div_to_p, _traverse_elements)
+    from nreadability_spark.spark.pages import FIXTURE_DIR
 
-    files = sorted(glob.glob(
-        "/root/reference/Carbon.Readability.Tests/SampleInput/"
-        "SampleInput_*.html"))
+    files = sorted(glob.glob(os.path.join(
+        FIXTURE_DIR, "SampleInput", "SampleInput_*.html")))
     pages = [(path, open(path, "rb").read().decode("utf-8", errors="replace"))
              for path in files]
     pages += [(key, html) for key, _, html in

@@ -8,8 +8,9 @@ import re
 import pytest
 
 from nreadability_spark.readability.webtranscoder import WebTranscoder
+from nreadability_spark.spark.pages import FIXTURE_DIR
 
-WEB_DIR = "/root/reference/Carbon.Readability.Tests/SampleWebInput"
+WEB_DIR = os.path.join(FIXTURE_DIR, "SampleWebInput")
 
 URLS = {
     1: ["http://www.nytimes.com/2010/11/14/world/asia/14myanmar.html?hp",
@@ -63,6 +64,7 @@ def run_case(num):
     return result.content
 
 
+@pytest.mark.reference_fixtures
 def test_case_1_nytimes():
     content = run_case(1)
     assert ("freedom of movement or expression would constitute a new and "
@@ -73,6 +75,7 @@ def test_case_1_nytimes():
         "Myanmar Junta Frees Dissident Daw Aung San Suu Kyi", content)) == 4
 
 
+@pytest.mark.reference_fixtures
 def test_case_2_vanityfair():
     content = run_case(2)
     assert ("For Louie and Phil, the conversations did more than keep "
@@ -86,6 +89,7 @@ def test_case_2_vanityfair():
     assert len(re.findall(r"Adrift but Unbroken \| Politics", content)) == 2
 
 
+@pytest.mark.reference_fixtures
 def test_case_3_theatlantic():
     content = run_case(3)
     assert ("The Chinese system as a whole has great weaknesses as well "
@@ -98,12 +102,14 @@ def test_case_3_theatlantic():
                           content)) == 3
 
 
+@pytest.mark.reference_fixtures
 def test_case_4_duplicate_page_suppressed():
     content = run_case(4)
     assert len(re.findall("his may seem paradoxical, or backward",
                           content)) == 1
 
 
+@pytest.mark.reference_fixtures
 def test_case_5_howstuffworks_five_pages():
     content = run_case(5)
     for expected in [
@@ -130,6 +136,7 @@ def test_case_5_howstuffworks_five_pages():
         assert expected in content, f"missing: {expected[:50]}"
 
 
+@pytest.mark.reference_fixtures
 def test_case_6_slate_two_pages():
     content = run_case(6)
     assert "In the aftermath of his resignation and then his death" in content
@@ -138,6 +145,7 @@ def test_case_6_slate_two_pages():
     assert "And, sadly, it may remain one forever." in content
 
 
+@pytest.mark.reference_fixtures
 def test_case_7_paging_false_positive():
     content = run_case(7)
     assert "post also betrays some misconceptions regarding our report." \
@@ -148,6 +156,7 @@ def test_case_7_paging_false_positive():
             "identity theft.") not in content
 
 
+@pytest.mark.reference_fixtures
 def test_case_8_paging_false_positive():
     content = run_case(8)
     # the page encodes the apostrophe as &#039;
@@ -158,6 +167,7 @@ def test_case_8_paging_false_positive():
     assert "signature fake news programs" not in content
 
 
+@pytest.mark.reference_fixtures
 def test_case_9_sparknotes():
     content = run_case(9)
     assert ("The story is narrated by a young girl named Jean Louise"
@@ -168,6 +178,7 @@ def test_case_9_sparknotes():
     assert "educational technique but the law." in content
 
 
+@pytest.mark.reference_fixtures
 def test_case_10_gamasutra():
     content = run_case(10)
     assert "Curious about Native Client" in content
@@ -178,6 +189,7 @@ def test_case_10_gamasutra():
     assert "Unfortunately this isn't really documented" in content
 
 
+@pytest.mark.reference_fixtures
 def test_case_11_gamasutra_case_sensitive_urls():
     content = run_case(11)
     assert "Sony press conference at Gamescom" in content
