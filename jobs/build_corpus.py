@@ -247,14 +247,23 @@ def build_corpus_incremental(spark, pages, out_dir: str, prev_dir: str,
     from pyspark.sql import functions as F
     from nreadability_spark.spark import ops
 
+    prev_fp = os.path.join(prev_dir, "fingerprints.parquet")
+    if not os.path.exists(prev_fp):
+        # snapshots from before fingerprints.parquet kept page_md5 in
+        # corpus/ and lack this file; their corpus no longer unions with
+        # a new delta either
+        raise ValueError(
+            f"previous snapshot {prev_dir} has no fingerprints.parquet: "
+            "it predates the fingerprint layout and cannot seed an "
+            "incremental build; run a full build first")
+
     summary: dict = {"pages": pages.count()}
     pages = _crawl_prelude(spark, pages, out_dir, robots, sitemaps, summary)
 
     # 1. classify against the previous snapshot by raw-page fingerprint;
     # every page here reaches extraction or is carried as unchanged, so
     # this snapshot's fingerprints are all of its pages'
-    old_fp = spark.read.parquet(
-        os.path.join(prev_dir, "fingerprints.parquet"))
+    old_fp = spark.read.parquet(prev_fp)
     new_fp = _fingerprints(spark, pages, out_dir)
     diff = ops.snapshot_diff(
         old_fp.withColumnRenamed("page_md5", "h_old"),

@@ -99,24 +99,20 @@ def _decode_payload(payload: bytes) -> tuple[str, np.ndarray]:
 _FEATURE_DIMS = 16
 
 
-def _feature(arr: np.ndarray) -> np.ndarray:
-    """Folded byte histogram of ``_FEATURE_DIMS`` bins, L2-normalized
-    float32."""
-    hist = np.bincount(arr % _FEATURE_DIMS,
-                       minlength=_FEATURE_DIMS).astype(np.float32)
-    norm = float(np.linalg.norm(hist))
-    return hist / norm if norm > 0 else hist
-
-
 def extract_features(media: DataFrame) -> DataFrame:
-    """Vectorized feature extraction over binary payloads (``_feature``)
-    — the Arrow batch shape a real embedding model UDF would use."""
+    """Vectorized feature extraction over binary payloads: folded byte
+    histogram, L2-normalized float32 — the Arrow batch shape a real
+    embedding model UDF would use."""
     def featurize(mid, payload):
         row = {"media_id": mid,
                "payload_bytes": len(payload) if payload is not None else 0}
         try:
             kind, arr = _decode_payload(payload)
-            row.update(kind=kind, ok="ok", feature=_feature(arr).tolist())
+            hist = np.bincount(arr % _FEATURE_DIMS,
+                               minlength=_FEATURE_DIMS).astype(np.float32)
+            norm = float(np.linalg.norm(hist))
+            row.update(kind=kind, ok="ok",
+                       feature=(hist / norm if norm > 0 else hist).tolist())
         except Exception as exc:
             row.update(kind=None, ok=f"decode_error: {exc}"[:100],
                        feature=None)
@@ -233,21 +229,16 @@ _FRAME_BYTES = 256
 _FRAME_EVERY = 4
 
 
-def _video_frames(payload: bytes) -> list[bytes]:
-    """The sampled frames of one video payload, in order: its body cut
-    into ``_FRAME_BYTES`` frames, every ``_FRAME_EVERY``-th kept."""
-    body = payload[16:]
-    return [body[i:i + _FRAME_BYTES]
-            for i in range(0, len(body), _FRAME_BYTES)][::_FRAME_EVERY]
-
-
 def sample_frames(media: DataFrame) -> DataFrame:
     """One-to-many frame sampling for video payloads (each input row
     yields 0..k frame rows)."""
     def sample(mid, kind, payload):
         if kind != "video" or payload is None:
             return
-        for frame_no, block in enumerate(_video_frames(payload)):
+        body = payload[16:]
+        blocks = [body[i:i + _FRAME_BYTES]
+                  for i in range(0, len(body), _FRAME_BYTES)]
+        for frame_no, block in enumerate(blocks[::_FRAME_EVERY]):
             yield {"media_id": mid, "frame_no": frame_no, "frame": block}
 
     return map_rows(media.select("media_id", "kind", "payload"),

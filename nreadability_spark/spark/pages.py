@@ -18,16 +18,17 @@ Two deterministic row sources, no RNG, no wall clock:
   a truncated ``<script`` tail to exercise the parse-retry and failure
   paths.
 
-``template_html_py`` and ``template_url_py`` are the one renderer of a
-template page: ``synthesize_pages`` runs them in Spark's Python workers,
-and the local oracles (``scripts/gen_oracles.py``, the byte-identity
-tests) call them directly.
+The template's text exists once, as format strings; two renderers fill
+them: ``template_*_expr`` (Spark columns, evaluated in the JVM) and
+``template_*_py`` (pure Python — the local oracle used by the
+byte-identity tests). They must render identical bytes.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import string
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -98,30 +99,71 @@ _PAGE_TAIL = (
     '<a href="/articles/{doc_id}?page=2">Next Page 2</a></div>'
     '<div class="footer comment">copyright junk links</div></body></html>'
 )
+_BODY = "<p>{p1}</p><p>{p2}</p><p>{p3}</p>"
+# contentless page: exercises the extracted=false path
+_EMPTY_PAGE = "<html><head><title>{title}</title></head><body></body></html>"
+# hosed page: truncated mid-script to exercise the retry path
+_BROKEN_TAIL = "<script>var broken = '"
+_URL = "https://host{host}.example.org/articles/{doc_id}"
 
 
 def template_html_py(doc_id: int, text: str) -> str:
     """The html of document ``doc_id``'s template page."""
     host = doc_id % N_HOSTS
     title = f"Article {doc_id}"
-    t = text or ""
-    p1 = t
-    p2 = (t[:220] + ", " + t[:120]) if t else ""
-    p3 = t[:64]
-    body = f"<p>{p1}</p><p>{p2}</p><p>{p3}</p>"
-    page = (_PAGE_HEAD.format(title=title, host=host) + body
-            + _PAGE_TAIL.format(doc_id=doc_id))
     if host == 0:
-        # contentless page: exercises the extracted=false path
-        return f"<html><head><title>{title}</title></head><body></body></html>"
+        return _EMPTY_PAGE.format(title=title)
+    t = text or ""
+    page = (_PAGE_HEAD.format(title=title, host=host)
+            + _BODY.format(p1=t, p2=(t[:220] + ", " + t[:120]) if t else "",
+                           p3=t[:64])
+            + _PAGE_TAIL.format(doc_id=doc_id))
     if doc_id % 20 == 0:
-        # hosed page: truncate mid-script to exercise the retry path
-        page = page[:len(page) * 2 // 3] + "<script>var broken = '"
+        page = page[:len(page) * 2 // 3] + _BROKEN_TAIL
     return page
 
 
 def template_url_py(doc_id: int) -> str:
-    return f"https://host{doc_id % N_HOSTS}.example.org/articles/{doc_id}"
+    return _URL.format(host=doc_id % N_HOSTS, doc_id=doc_id)
+
+
+def _format_col(template: str, **cols):
+    """The Spark column of ``template.format(**cols)``: the template's
+    text between fields as one literal each, the column of each field."""
+    parts, lit = [], ""
+    for text, field, _spec, _conv in string.Formatter().parse(template):
+        lit += text  # parse splits a run at each escaped brace
+        if field is not None:
+            parts += [F.lit(lit), cols[field]]
+            lit = ""
+    return F.concat(*parts, *([F.lit(lit)] if lit else []))
+
+
+def template_html_expr(doc_id, text):
+    """``template_html_py`` as a Spark column over long ``doc_id`` and
+    string ``text`` columns."""
+    title = F.concat(F.lit("Article "), doc_id.cast("string"))
+    t = F.coalesce(text, F.lit(""))
+    p2 = F.when(t == "", "").otherwise(
+        F.concat(F.substring(t, 1, 220), F.lit(", "), F.substring(t, 1, 120)))
+    page = F.concat(
+        _format_col(_PAGE_HEAD, title=title,
+                    host=(doc_id % N_HOSTS).cast("string")),
+        _format_col(_BODY, p1=t, p2=p2, p3=F.substring(t, 1, 64)),
+        _format_col(_PAGE_TAIL, doc_id=doc_id.cast("string")))
+    return F.when(doc_id % N_HOSTS == 0,
+                  _format_col(_EMPTY_PAGE, title=title)) \
+        .when(doc_id % 20 == 0,
+              F.concat(F.substring(page, 1,
+                                   (F.length(page) * 2 / 3).cast("int")),
+                       F.lit(_BROKEN_TAIL))) \
+        .otherwise(page)
+
+
+def template_url_expr(doc_id):
+    """``template_url_py`` as a Spark column over a long ``doc_id``."""
+    return _format_col(_URL, host=(doc_id % N_HOSTS).cast("string"),
+                       doc_id=doc_id.cast("string"))
 
 
 _LANG_CYCLE = ["en", "pl", "de", "fr"]
@@ -321,35 +363,33 @@ def synthesize_warc_dir(sf_dir: str, out_dir: str | None = None) -> str:
     return out_dir
 
 
-def _template_row(doc_id: int, text: str, rep: int):
-    url = template_url_py(doc_id) + (f"?rep={rep}" if rep else "")
-    yield {"url": url, "doc_id": doc_id,
-           "html": template_html_py(doc_id, text).encode("utf-8"),
-           "text": text, "lang": _LANG_CYCLE[doc_id % len(_LANG_CYCLE)]}
-
-
 def synthesize_pages(spark: SparkSession, sf_dir: str,
                      include_fixtures: bool = True,
                      replicate: int = 1) -> DataFrame:
     """Build the pages table: fixture rows + one template page per
     ``documents`` row at ``sf_dir``. ``replicate`` > 1 scales the corpus
     for benchmarking (urls get a ?rep=k suffix to stay unique)."""
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")) \
-        .select(F.col("doc_id").cast("long").alias("doc_id"), "text")
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     if replicate > 1:
         reps = spark.range(replicate).withColumnRenamed("id", "rep")
         docs = docs.crossJoin(F.broadcast(reps))
     else:
         docs = docs.withColumn("rep", F.lit(0).cast("long"))
 
-    templ = map_rows(
-        docs, "url string, doc_id long, html binary, text string, "
-        "lang string", _template_row,
-    ).select(
-        "url",
+    doc_id = F.col("doc_id").cast("long")
+    templ = docs.select(
+        F.concat(template_url_expr(doc_id),
+                 F.when(F.col("rep") > 0, F.concat(
+                     F.lit("?rep="), F.col("rep").cast("string")))
+                 .otherwise(F.lit(""))).alias("url"),
         (F.to_timestamp(F.lit(_EPOCH))
-         + F.make_interval(secs=F.col("doc_id") * 137)).alias("warc_ts"),
-        "html", "text", "lang",
+         + F.make_interval(secs=doc_id * 137)).alias("warc_ts"),
+        F.encode(template_html_expr(doc_id, F.col("text")), "UTF-8")
+        .alias("html"),
+        "text",
+        F.element_at(F.array(*[F.lit(x) for x in _LANG_CYCLE]),
+                     (doc_id % len(_LANG_CYCLE) + 1).cast("int"))
+        .alias("lang"),
     )
 
     if not include_fixtures:

@@ -17,7 +17,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .job import ensure_package_shipped, map_rows
-from .pages import N_HOSTS
+from .pages import N_HOSTS, template_url_expr
 
 
 def _is_table_ref(ref: str) -> bool:
@@ -543,12 +543,9 @@ def robots_check(spark: SparkSession, sf_dir: str,
     # cores (the robots join broadcasts, so nothing else re-splits)
     docs = _spread(spark.read.parquet(
         _os.path.join(sf_dir, "documents.parquet")).select("doc_id"))
-    pages = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.concat(F.lit("https://host"),
-                 (F.col("doc_id") % N_HOSTS).cast("string"),
-                 F.lit(".example.org/articles/"),
-                 F.col("doc_id").cast("string")).alias("url"))
+    doc_id = F.col("doc_id").cast("long")
+    pages = docs.select(doc_id.alias("doc_id"),
+                        template_url_expr(doc_id).alias("url"))
     return robots_verdicts(pages, synthesize_robots(spark), agent=agent)
 
 

@@ -5,9 +5,10 @@ The readability kernel is deterministic pure Python, so running it locally
 independent oracle for the driver's DuckDB-vs-Spark hash gate: the driver
 reads these parquet files via ``read_parquet('<abs path>')`` in
 ``oracle_sql()`` while the Spark side recomputes everything distributed.
-Both sides call the same page renderers, feature and frame helpers and
-read the same engine constants (host count, stitch depth), so no setting
-is restated here.
+Settings are read from the engine's constants, not restated; the stitch
+replay, histogram and frame cut below are this script's own reference
+copies. The byte-identity of the two page renderers (template_html_py
+vs template_html_expr) is locked by tests/test_spark_job.py.
 
 Regenerate after ANY kernel change:
 
@@ -34,9 +35,10 @@ if _REPO not in sys.path:
 
 from nreadability_spark.spark.job import (_hooked_row,
                                            transcode_row)  # noqa: E402
-from nreadability_spark.spark.multimodal import (_KINDS, _decode_payload,
-                                                 _fake_payload, _feature,
-                                                 _video_frames)  # noqa: E402
+from nreadability_spark.spark.multimodal import (_FEATURE_DIMS, _FRAME_BYTES,
+                                                 _FRAME_EVERY, _KINDS,
+                                                 _decode_payload,
+                                                 _fake_payload)  # noqa: E402
 from nreadability_spark.spark.pages import (N_HOSTS, chain_py,
                                             template_html_py,
                                             template_url_py)  # noqa: E402
@@ -191,7 +193,10 @@ def gen_media_features(docs: list[tuple[int, str]]) -> pa.Table:
         mid = int(doc_id)
         payload = _fake_payload(mid, _KINDS[mid % 3])
         kind, arr = _decode_payload(payload)
-        feat = _feature(arr)
+        hist = np.bincount(arr % _FEATURE_DIMS,
+                           minlength=_FEATURE_DIMS).astype(np.float32)
+        norm = float(np.linalg.norm(hist))
+        feat = hist / norm if norm > 0 else hist
         # Spark stores the feature as float32; floor(double(f32)*10000)
         # is the exact quantization both engines see
         q = [int(math.floor(float(np.float32(float(x))) * 10000))
@@ -218,8 +223,10 @@ def gen_media_frames(docs: list[tuple[int, str]]) -> pa.Table:
         kind = _KINDS[mid % 3]
         if kind != "video":
             continue
-        for frame_no, block in enumerate(
-                _video_frames(_fake_payload(mid, kind))):
+        body = _fake_payload(mid, kind)[16:]
+        blocks = [body[i:i + _FRAME_BYTES]
+                  for i in range(0, len(body), _FRAME_BYTES)]
+        for frame_no, block in enumerate(blocks[::_FRAME_EVERY]):
             cols["media_id"].append(mid)
             cols["frame_no"].append(frame_no)
             cols["frame_md5"].append(hashlib.md5(block).hexdigest())

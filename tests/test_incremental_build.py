@@ -169,3 +169,15 @@ def test_increment_over_an_increment(spark, snapshots, tmp_path_factory):
     assert s4["changed"] == 0 and s4["removed"] == 0
     assert s4["final_docs"] == s2["final_docs"]
     assert s4["packed_tokens"] == s2["packed_tokens"]
+
+
+def test_prev_without_fingerprints_is_rejected(tmp_path):
+    """A snapshot written before fingerprints.parquet existed cannot be
+    the --prev of an increment: the build stops before any work with an
+    error that names the file, instead of a bare path-not-found."""
+    from build_corpus import build_corpus_incremental
+    prev = tmp_path / "old_snap"
+    (prev / "corpus" / "documents.parquet").mkdir(parents=True)
+    with pytest.raises(ValueError, match="fingerprints.parquet"):
+        build_corpus_incremental(None, None, str(tmp_path / "new"),
+                                 str(prev))

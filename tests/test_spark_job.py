@@ -56,10 +56,8 @@ def test_fixture_rows_warns_when_fixture_dir_is_empty(tmp_path, monkeypatch):
 
 
 def test_template_renderers_match(spark, pages):
-    """synthesize_pages carries every template page's url and html from
-    template_url_py/template_html_py through its Python stage unchanged,
-    byte for byte (prerequisite for the extraction byte-identity
-    check)."""
+    """Spark-side template rendering == Python oracle rendering, byte for
+    byte (prerequisite for the extraction byte-identity check)."""
     import duckdb
     docs = duckdb.sql(
         f"select doc_id, text from '{SF_DIR}/documents.parquet' "
